@@ -60,10 +60,12 @@ final class Nessus(spark: SparkSession, warehouseDir: String) {
 
 object Nessus {
 
-  /** Normalize formatted scan-run docs + folder/scan snapshots into the
-    * warehouse tables at `warehouseDir`. Docs are deduplicated on
-    * (scan_id, history_id) first — W4's by-design cross-day duplicates end
-    * here (keep the newest ingest_date when present).
+  /** Normalize formatted scan-run docs + folder/scan snapshots into the 7
+    * warehouse tables at `warehouseDir`, one overwrite per table and no
+    * read-back, so re-running a load over the same input leaves every table
+    * as it was. Docs are deduplicated on (scan_id, history_id) first — W4's
+    * by-design cross-day duplicates end here (keep the newest ingest_date
+    * when present).
     */
   def load(
       spark: SparkSession,
@@ -83,43 +85,14 @@ object Nessus {
     def write(df: DataFrame, name: String): Unit =
       df.write.mode(SaveMode.Overwrite).parquet(s"$warehouseDir/$name")
 
-    write(
-      folderSnapshot
-        .select(explode(col("folders")).as("f"))
-        .select(
-          col("f.id").as("folder_id"),
-          col("f.type").as("type"),
-          col("f.name").as("name"))
-        .dropDuplicates("folder_id"),
-      "folder")
-    write(
-      scanSnapshot
-        .select(explode(col("scans")).as("s"))
-        .select(
-          col("s.id").as("scan_id"),
-          col("s.folder_id").as("folder_id"),
-          col("s.type").as("type"),
-          col("s.name").as("name"))
-        .dropDuplicates("scan_id"),
-      "scan")
+    write(Normalize.folder(folderSnapshot), "folder")
+    write(Normalize.scan(scanSnapshot), "scan")
     write(Normalize.scanRun(docs), "scan_run")
     write(Normalize.host(docs), "host")
     write(Normalize.hostVuln(docs), "host_vuln")
     write(Normalize.plugin(docs), "plugin")
-    write(Normalize.vulnOutput(docs).select(
-      col("vuln_output_id"),
-      // re-key outputs to their host_vuln surrogate: same partitioned rank
-      // spec, so the (run, host, plugin) triple resolves the id
-      col("scan_run_id"), col("nessus_host_id"), col("plugin_id"),
-      col("port"), col("output")), "vuln_output_wide")
-
-    // vuln_output proper carries host_vuln_id (schema.sql:164-172): join the
-    // natural key back to the host_vuln surrogate
-    val hv = spark.read.parquet(s"$warehouseDir/host_vuln")
-    val vo = spark.read.parquet(s"$warehouseDir/vuln_output_wide")
     write(
-      vo.join(hv, Seq("scan_run_id", "nessus_host_id", "plugin_id"))
-        .select("vuln_output_id", "host_vuln_id", "port", "output"),
+      Normalize.vulnOutput(docs).select("vuln_output_id", "host_vuln_id", "port", "output"),
       "vuln_output")
   }
 

@@ -65,6 +65,14 @@ object NessusSynth {
     */
   val IdStride = 1000000L
 
+  /** The partitioned surrogate id of a row within its scan run:
+    * `scan_run_id * IdStride + row_number() over (partition by scan_run_id
+    * order by orderBy)`. The one id rule every run-derived table uses.
+    */
+  def runScopedId(orderBy: String*): Column =
+    col("scan_run_id") * IdStride + row_number().over(
+      Window.partitionBy("scan_run_id").orderBy(orderBy.map(col): _*))
+
   /** lineitem → (scan_run_id, nessus_host_id, plugin_id, line_no, rid).
     * rid ordering covers every column whose values flow downstream, so rows
     * identical on the full key are interchangeable and the output set is
@@ -78,12 +86,7 @@ object NessusSynth {
         col("l_suppkey").cast("long").as("nessus_host_id"),
         col("l_partkey").cast("long").as("plugin_id"),
         col("l_linenumber").cast("long").as("line_no"))
-      .withColumn(
-        "rid",
-        col("scan_run_id") * IdStride + row_number().over(
-          Window
-            .partitionBy("scan_run_id")
-            .orderBy("line_no", "plugin_id", "nessus_host_id")))
+      .withColumn("rid", runScopedId("line_no", "plugin_id", "nessus_host_id"))
 
   /** Warehouses are memoized per source dir and MATERIALIZED AS PARQUET in a
     * per-JVM temp dir — the same layout a 100 TB deployment uses (normalize
@@ -226,10 +229,7 @@ object NessusSynth {
     val host = lineitems
       .select("scan_run_id", "nessus_host_id")
       .distinct()
-      .withColumn(
-        "host_id",
-        col("scan_run_id") * IdStride + row_number().over(
-          Window.partitionBy("scan_run_id").orderBy("nessus_host_id")))
+      .withColumn("host_id", runScopedId("nessus_host_id"))
       .join(runKeys.select("scan_run_id", "scan_id"), Seq("scan_run_id"))
       .join(hostSev, Seq("scan_run_id", "nessus_host_id"))
       .select(

@@ -1,14 +1,15 @@
 package graft.etl
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The missing S3→warehouse middle of the reference (SURVEY §0): normalize
   * nested scan-run documents (reference `export.py:196-215` shape, FIXTURES
-  * §B) into the 5 run-derived warehouse tables. All flattening is built-in
-  * generators (`explode`, `map_keys`) — narrow where possible, no custom
-  * Generator (SURVEY §2.11).
+  * §B) into the 5 run-derived warehouse tables, and the folder/scan
+  * snapshots into the other 2. All flattening is built-in generators
+  * (`explode`, `map_keys`) — narrow where possible, no custom Generator
+  * (SURVEY §2.11). Surrogate ids all follow one rule,
+  * [[NessusSynth.runScopedId]].
   *
   * Expected document schema (field provenance in FIXTURES.md §B):
   * {{{
@@ -34,6 +35,24 @@ object Normalize {
   private val sevCols =
     Seq("critical_count", "high_count", "medium_count", "low_count", "info_count")
 
+  /** folder rows from a GET /folders snapshot, one per folder_id. */
+  def folder(folderSnapshot: DataFrame): DataFrame =
+    folderSnapshot
+      .select(explode(col("folders")).as("f"))
+      .select(col("f.id").as("folder_id"), col("f.type").as("type"), col("f.name").as("name"))
+      .dropDuplicates("folder_id")
+
+  /** scan rows from a GET /scans snapshot, one per scan_id. */
+  def scan(scanSnapshot: DataFrame): DataFrame =
+    scanSnapshot
+      .select(explode(col("scans")).as("s"))
+      .select(
+        col("s.id").as("scan_id"),
+        col("s.folder_id").as("folder_id"),
+        col("s.type").as("type"),
+        col("s.name").as("name"))
+      .dropDuplicates("scan_id")
+
   /** scan_run rows (reference `export.py:196-208` projection P5, reversed).
     * `targets` is the serialized host tree (C9/Q2: the doc's targets alias
     * the fully formatted hosts). Docs read from the landing zone carry the
@@ -55,9 +74,8 @@ object Normalize {
     docs.select(withDep: _*)
   }
 
-  /** host rows (P4 enrichment, reversed). Surrogate host_id follows the
-    * partitioned-id spec: scan_run_id * IdStride + rank of nessus_host_id
-    * within the run (SURVEY §7.5#4).
+  /** host rows (P4 enrichment, reversed). Surrogate host_id = partitioned
+    * rank of nessus_host_id within the run (SURVEY §7.5#4).
     */
   def host(docs: DataFrame): DataFrame =
     docs
@@ -72,33 +90,31 @@ object Normalize {
           col("t.info.host_start").as("host_start"),
           col("t.info.host_end").as("host_end"),
           col("t.info.os").as("os")) ++ sevCols.map(c => col(s"t.$c").as(c)): _*)
-      .withColumn(
-        "host_id",
-        col("scan_run_id") * NessusSynth.IdStride + row_number().over(
-          Window.partitionBy("scan_run_id").orderBy("nessus_host_id")))
+      .withColumn("host_id", NessusSynth.runScopedId("nessus_host_id"))
 
   private def vulns(docs: DataFrame): DataFrame =
     docs
       .select(explode(col("targets")).as("t"))
       .select(explode(col("t.vulnerabilities")).as("v"))
 
-  /** host_vuln rows (P3, reversed): the host_vuln triple is carried verbatim
-    * in the doc (`export.py:156-159`). Surrogate id = partitioned rank over
-    * (nessus_host_id, plugin_id) within the run.
+  /** The vulnerabilities, each with its host_vuln triple (carried verbatim
+    * in the doc, `export.py:156-159`), its outputs, and its surrogate
+    * host_vuln_id = partitioned rank over (nessus_host_id, plugin_id)
+    * within the run. The docs hold one vulnerability per (run, host,
+    * plugin), so the id is unique.
     */
-  def hostVuln(docs: DataFrame): DataFrame =
+  private def keyedVulns(docs: DataFrame): DataFrame =
     vulns(docs)
       .select(
         col("v.host_vuln.nessus_host_id").as("nessus_host_id"),
         col("v.host_vuln.scan_run_id").as("scan_run_id"),
-        col("v.host_vuln.plugin_id").as("plugin_id"))
-      .withColumn(
-        "host_vuln_id",
-        col("scan_run_id") * NessusSynth.IdStride + row_number().over(
-          Window
-            .partitionBy("scan_run_id")
-            .orderBy("nessus_host_id", "plugin_id")))
-      .select("host_vuln_id", "nessus_host_id", "scan_run_id", "plugin_id")
+        col("v.host_vuln.plugin_id").as("plugin_id"),
+        col("v.outputs").as("outputs"))
+      .withColumn("host_vuln_id", NessusSynth.runScopedId("nessus_host_id", "plugin_id"))
+
+  /** host_vuln rows (P3, reversed). */
+  def hostVuln(docs: DataFrame): DataFrame =
+    keyedVulns(docs).select("host_vuln_id", "nessus_host_id", "scan_run_id", "plugin_id")
 
   /** plugin rows (P1: `ref` = newline-join of pluginattributes.see_also,
     * null when absent — `export.py:136-142`), deduplicated by plugin_id.
@@ -127,26 +143,15 @@ object Normalize {
 
   /** vuln_output rows: the doc's outputs are already unnested {port,
     * output} pairs (P2 ran at formatting time, `export.py:144-149` — see
-    * [[FormatDocs.unnestPorts]]). Surrogate id = partitioned rank within the
-    * run over the natural key.
+    * [[FormatDocs.unnestPorts]]). Each row keeps its vulnerability's
+    * host_vuln_id and its natural key; surrogate vuln_output_id =
+    * partitioned rank within the run over the natural key.
     */
   def vulnOutput(docs: DataFrame): DataFrame =
-    vulns(docs)
-      .select(
-        col("v.host_vuln.scan_run_id").as("scan_run_id"),
-        col("v.host_vuln.nessus_host_id").as("nessus_host_id"),
-        col("v.host_vuln.plugin_id").as("plugin_id"),
-        explode(col("v.outputs")).as("o"))
-      .select(
-        col("scan_run_id"),
-        col("nessus_host_id"),
-        col("plugin_id"),
-        col("o.port").as("port"),
-        col("o.output").as("output"))
+    keyedVulns(docs)
+      .select(col("*"), explode(col("outputs")).as("o"))
+      .select("scan_run_id", "nessus_host_id", "plugin_id", "host_vuln_id", "o.port", "o.output")
       .withColumn(
         "vuln_output_id",
-        col("scan_run_id") * NessusSynth.IdStride + row_number().over(
-          Window
-            .partitionBy("scan_run_id")
-            .orderBy("nessus_host_id", "plugin_id", "port", "output")))
+        NessusSynth.runScopedId("nessus_host_id", "plugin_id", "port", "output"))
 }

@@ -2300,7 +2300,7 @@ object Dedup {
     * index there is no corpus-dependent ordering to freeze — signatures
     * are a pure per-doc function — so appends and probes compose with no
     * drift caveat at all. Store: `docs` (id, token arrays — the verify
-    * side), `sigs` (id, n, digest), `params` (the d=1 scheme marker).
+    * side), `sigs` (id, n, digest), `params` (the d=1 bound and the digest scheme).
     */
   def writeTokenEditIndex(
       corpus: DataFrame,
@@ -2308,18 +2308,40 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id"): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     Similarity.clearTombstones(spark, path)
     val toks = editTokens(corpus, textCol, idCol).localCheckpoint() // two writes
     toks.select("id", "tks", "n").write.mode("overwrite").parquet(s"$path/docs")
     editSignatures(toks).write.mode("overwrite").parquet(s"$path/sigs")
-    Seq(1).toDF("max_edit").coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    writeTokenEditParams(spark, path)
+  }
+
+  /** Digest scheme of [[editSignatures]]. Signatures of another scheme
+    * (earlier engines stored md5 hex strings) never equi-join this one's,
+    * so a probe over such a store would silently find no history pairs.
+    */
+  private val TokenEditSigScheme = "xxhash64"
+
+  /** The token-edit params pin: the edit bound (d=1) and the signature
+    * digest scheme, both checked by [[requireTokenEditParams]].
+    */
+  private def writeTokenEditParams(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+    import spark.implicits._
+    Seq((1, TokenEditSigScheme)).toDF("max_edit", "sig_scheme")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
   }
 
   private def requireTokenEditParams(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val d = spark.read.parquet(s"$path/params").select("max_edit").head().getInt(0)
+    val p = spark.read.parquet(s"$path/params").head()
+    val d = p.getAs[Int]("max_edit")
     require(d == 1, s"token-edit index at $path was built for d=$d, this engine probes d=1")
+    val scheme =
+      if (p.schema.fieldNames.contains("sig_scheme")) p.getAs[String]("sig_scheme")
+      else "unrecorded (md5 era)"
+    require(
+      scheme == TokenEditSigScheme,
+      s"token-edit index at $path has $scheme signatures, this engine probes " +
+        s"$TokenEditSigScheme; rebuild it with writeTokenEditIndex")
   }
 
   /** Grow the signature index with a new batch (append-only). */
@@ -2407,9 +2429,8 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id"): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
     // Claim BEFORE the empty check (StoreLifecycle's rule — the params pin
-    // (max_edit=1) is content-independent, so even an empty batch 0 wipes
+    // (max_edit=1, sig_scheme) is content-independent, so even an empty batch 0 wipes
     // a previous run's store; otherwise batch 1 would validate against
     // stale params and silently merge two streams' corpora).
     StoreLifecycle.claim(
@@ -2417,7 +2438,7 @@ object Dedup {
       path,
       Seq("docs", "sigs", "pairs", "tombstones"),
       batchId,
-      () => Seq(1).toDF("max_edit").coalesce(1).write.mode("overwrite").parquet(s"$path/params"),
+      () => writeTokenEditParams(spark, path),
       () => requireTokenEditParams(spark, path))
     if (batch.isEmpty) return // nothing to probe or land
     val btoks = editTokens(batch, textCol, idCol).localCheckpoint()

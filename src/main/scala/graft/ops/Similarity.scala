@@ -3458,7 +3458,9 @@ object Similarity {
     * code on ties). Output is the relational code table — one row per
     * (vec_id, subspace) with the chosen `code` and its quantization
     * distance `qdist` — i.e. a 64-dim float vector compressed to m small
-    * ints, the memory move that makes billion-vector ANN feasible.
+    * ints, the memory move that makes billion-vector ANN feasible. A
+    * vector whose embedding is null, shorter than `dim` or holds a null
+    * gets no codes.
     *
     * Scale shape: the codebook is m·ksub rows and broadcast; assignment is
     * a map-side cross join (ksub distance evaluations per subvector)
@@ -3515,6 +3517,10 @@ object Similarity {
     }: _*)
     vecs
       .select(col(idCol).as("vec_id"), milliVec(col(vecCol)).as("vm"))
+      // a null, short or null-holding embedding has no code: its subvector
+      // distances come out null (a null dist sorts first in array_min) or
+      // truncated, and it would encode as a valid-looking code — drop it
+      .filter(size(col("vm")) >= m * subDim && !exists(col("vm"), _.isNull))
       .select(
         col("vec_id"),
         posexplode(

@@ -1,6 +1,9 @@
 package graft
 
+import graft.api.Nessus
 import graft.etl.{Docs, Incremental, Normalize, NessusSynth}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 case class PluginAttrs(see_also: Seq[String])
@@ -79,6 +82,54 @@ class NormalizeSpec extends SparkSpec {
     assert(ids.toSeq == Seq(100L * NessusSynth.IdStride + 1, 100L * NessusSynth.IdStride + 2))
     val h = Normalize.host(docs).collect()
     assert(h.head.getAs[Long]("host_id") == 100L * NessusSynth.IdStride + 1)
+    // each output keeps its own vulnerability's host_vuln_id
+    val vo = Normalize.vulnOutput(docs).collect()
+      .map(r => (r.getAs[Long]("plugin_id"), r.getAs[String]("port"),
+        r.getAs[Long]("host_vuln_id") % NessusSynth.IdStride,
+        r.getAs[Long]("vuln_output_id") % NessusSynth.IdStride))
+      .toSet
+    assert(vo == Set((41L, "443 / tcp", 1L, 1L), (41L, "8443 / tcp", 1L, 2L), (42L, "22 / tcp", 2L, 3L)))
+  }
+
+  test("Nessus.load: exactly the 7 tables, ids by the partitioned rule, a re-load changes nothing") {
+    val w = NessusSynth(spark, sf)
+    val d = Docs.cached(spark, sf) // run subset: scan_run_id % 10 = 3
+    val folders = w.folder.select(
+      collect_list(struct(col("folder_id").as("id"), col("type"), col("name"))).as("folders"))
+    val scans = w.scan.select(
+      collect_list(struct(col("scan_id").as("id"), col("folder_id"), col("type"), col("name"))).as("scans"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_wh_load_").toString
+    val tables = Seq("folder", "scan", "scan_run", "host", "host_vuln", "plugin", "vuln_output")
+    def read(t: String) = spark.read.parquet(s"$dir/$t")
+    def contents() = tables.map(t => t -> read(t).collect().map(_.toString).sorted.toSeq).toMap
+
+    Nessus.load(spark, d, folders, scans, dir)
+    assert(new java.io.File(dir).list().toSet == tables.toSet)
+    val first = contents()
+    assert(first.values.forall(_.nonEmpty))
+
+    def sameMultiset(a: DataFrame, b: DataFrame): Boolean =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    def rule(order: String*) =
+      col("scan_run_id") * NessusSynth.IdStride + row_number().over(
+        Window.partitionBy("scan_run_id").orderBy(order.map(col): _*))
+    val hv = read("host_vuln")
+    val hvCols = Seq("host_vuln_id", "scan_run_id", "nessus_host_id", "plugin_id")
+    assert(sameMultiset(
+      hv.select(hvCols.map(col): _*),
+      hv.withColumn("host_vuln_id", rule("nessus_host_id", "plugin_id")).select(hvCols.map(col): _*)))
+    val vo = read("vuln_output").join(hv, Seq("host_vuln_id"))
+    assert(vo.count() == read("vuln_output").count()) // every output has its host_vuln
+    val natural = Seq("scan_run_id", "nessus_host_id", "plugin_id", "port", "output")
+    val voCols = ("vuln_output_id" +: natural).map(col)
+    assert(sameMultiset(
+      vo.select(voCols: _*),
+      vo.withColumn("vuln_output_id", rule(natural.drop(1): _*)).select(voCols: _*)))
+    assert(sameMultiset(vo.select(natural.map(col): _*), Normalize.vulnOutput(d).select(natural.map(col): _*)))
+
+    Nessus.load(spark, d, folders, scans, dir)
+    assert(new java.io.File(dir).list().toSet == tables.toSet)
+    assert(contents() == first)
   }
 
   test("scanRun carries doc fields and serializes targets (C9)") {

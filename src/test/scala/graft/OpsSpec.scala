@@ -1074,6 +1074,21 @@ class OpsSpec extends SparkSpec {
     assert(err.getMessage.contains("was built with"))
   }
 
+  test("PQ encode: null, short and null-holding embeddings get no codes") {
+    val e = spark.read.parquet(s"$sf/embeddings.parquet").select("vec_id", "embedding")
+    val t = e.schema("embedding").dataType
+    val bad = e.filter(col("vec_id") < 3).select(
+      (col("vec_id") + 1000000L).as("vec_id"),
+      when(col("vec_id") === 0L, lit(null).cast(t))
+        .when(col("vec_id") === 1L, slice(col("embedding"), 1, 10))
+        .otherwise(transform(col("embedding"), (x, i) => when(i =!= 5, x))).as("embedding"))
+    def codes(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("subspace"), r.getAs[Long]("code"))).toSet
+    // the codebook seeds are the lowest ids, so the high-id bad rows leave
+    // it unchanged: the good vectors' codes are exactly the clean corpus's
+    assert(codes(Similarity.pqCodes(e.unionByName(bad))) == codes(Similarity.pqCodes(e)))
+  }
+
   test("persisted cluster map round-trips clusterPairs; keep faces probed from it agree") {
     val dir = java.nio.file.Files.createTempDirectory("clmap").toString
     val d = spark.read.parquet(s"$sf/documents.parquet")

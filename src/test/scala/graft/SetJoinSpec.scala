@@ -254,6 +254,35 @@ class SetJoinSpec extends SparkSpec {
     assert(got2.contains((1L, 12L, 1L)) && got2.contains((11L, 12L, 1L)), got2.toString)
   }
 
+  test("token-edit index: params without sig_scheme, or naming md5, are refused on probe, append and ingest") {
+    val s = spark
+    import s.implicits._
+    val hist = df(Seq(1L -> "alpha beta gamma delta", 2L -> "totally unrelated words here"))
+    val batch = df(Seq(11L -> "alpha beta gamma delta epsilon"))
+    def pin(dir: String, params: DataFrame): Unit =
+      params.coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+    val stale = Seq(Seq(1).toDF("max_edit"), Seq((1, "md5")).toDF("max_edit", "sig_scheme"))
+
+    val dir = java.nio.file.Files.createTempDirectory("tokeditpin").toString
+    Dedup.writeTokenEditIndex(hist, dir)
+    assert(spark.read.parquet(s"$dir/params").select("sig_scheme").head().getString(0) == "xxhash64")
+    assert(Dedup.probeTokenEditIndex(spark, dir, batch).count() == 1) // (1, 11) at ed 1
+    for (params <- stale) {
+      pin(dir, params)
+      val err = intercept[IllegalArgumentException](Dedup.probeTokenEditIndex(spark, dir, batch))
+      assert(err.getMessage.contains("signatures"), err.getMessage)
+      intercept[IllegalArgumentException](Dedup.appendTokenEditIndex(batch, dir))
+    }
+
+    val ingestDir = java.nio.file.Files.createTempDirectory("tokeditpiningest").toString
+    Dedup.ingestTokenEditBatch(hist, ingestDir, 0L)
+    for (params <- stale) {
+      pin(ingestDir, params)
+      intercept[IllegalArgumentException](Dedup.ingestTokenEditBatch(batch, ingestDir, 1L))
+    }
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$ingestDir/pairs/batch_id=1")))
+  }
+
   test("setJoinDriftAudit: identical traffic scores 1.0; an unseen shared phrase inflates") {
     val dir = java.nio.file.Files.createTempDirectory("sjdrift").toString
     val corpus = df((1L to 12L).map(i =>
