@@ -909,17 +909,38 @@ object Graph {
     * Total state is |reachable pairs| ≤ |V|·|sources| — the caller
     * bounds |sources| (landmark selection), never the engine. A hub's
     * million-edge frontier expansion pre-reduces in the partial min.
+    *
+    * Small graphs (at most `spark.graft.graph.localEdgeCutoff` normalized
+    * edges, the [[localEdgeSupport]] gate) skip the per-hop jobs: one
+    * task runs every source's wave ([[localBfs]]) over an in-memory
+    * adjacency, emitting one wave at a time — O(|E| + |V|) task state
+    * plus one wave's rows. Hop distances are canonical, so the rows
+    * equal the frontier loop's. The result is checkpointed and its
+    * deepest hop read on the driver, so the `maxRounds` refusal is the
+    * same call-time IllegalArgumentException on both branches.
     */
   def bfsDistances(edges: DataFrame, sources: DataFrame, maxRounds: Int = 16): DataFrame = {
     require(maxRounds >= 1 && maxRounds <= 64, s"maxRounds must be in [1, 64], got $maxRounds")
     val und = undirectedEdges(edges).localCheckpoint()
+    val srcIds = sources.select(col(sources.columns.head).cast("long").as("node"))
+    def requireWithin(hops: Long): Unit = require(
+      hops <= maxRounds,
+      s"bfsDistances did not converge within maxRounds=$maxRounds (frontier still " +
+        "live) — raise maxRounds toward the component diameter")
+    // both reads below run as ONE RDD job each over checkpointed blocks
+    // (a DataFrame count/max pays an extra AQE job for its exchange)
+    val nEdges = und.rdd.count()
+    if (nEdges > 0L && nEdges <= graphLocalCutoff(und.sparkSession)) {
+      val dist = localBfs(und, srcIds, maxRounds).localCheckpoint()
+      requireWithin(dist.rdd.map(_.getLong(2)).fold(0L)(math.max))
+      return dist
+    }
     val adj = und
       .select(col("u").as("node"), col("v").as("nbr"))
       .unionAll(und.select(col("v").as("node"), col("u").as("nbr")))
       .localCheckpoint()
     val nodes = adj.select("node").distinct()
-    val seed = sources
-      .select(col(sources.columns.head).cast("long").as("node"))
+    val seed = srcIds
       .distinct()
       .join(nodes, Seq("node"), "left_semi") // a source outside the graph reaches nothing
       .select(col("node"), col("node").as("src"), lit(0L).as("dist"))
@@ -942,15 +963,81 @@ object Graph {
         // eccentricity suffices exactly (the trailing empty-frontier
         // check is free of the budget)
         rounds += 1
-        require(
-          rounds <= maxRounds,
-          s"bfsDistances did not converge within maxRounds=$maxRounds (frontier still " +
-            "live) — raise maxRounds toward the component diameter")
+        requireWithin(rounds)
         dist = dist.unionAll(next).localCheckpoint()
         frontier = next
       }
     }
     dist
+  }
+
+  /** Single-task multi-source BFS for [[bfsDistances]]' small-graph
+    * branch: the (u < v) edges and the source ids arrive in one task,
+    * the adjacency is built once as int-indexed CSR arrays, and each
+    * distinct in-graph source runs a queue BFS whose wave is emitted
+    * before the next source starts. Waves stop expanding at depth
+    * `maxRounds` + 1, so a graph too deep for the budget still costs a
+    * bounded walk and leaves a `maxRounds + 1` row for the caller's
+    * refusal.
+    */
+  private def localBfs(und: DataFrame, sources: DataFrame, maxRounds: Int): DataFrame = {
+    val spark = und.sparkSession
+    import spark.implicits._
+    und.select(col("u"), col("v"), lit(false).as("is_src"))
+      .unionAll(sources.filter(col("node").isNotNull)
+        .select(col("node").as("u"), col("node").as("v"), lit(true).as("is_src")))
+      .as[(Long, Long, Boolean)]
+      .coalesce(1)
+      .mapPartitions { it =>
+        import scala.collection.mutable.ArrayBuilder
+        val idx = new java.util.HashMap[java.lang.Long, Integer]()
+        val ids = new ArrayBuilder.ofLong
+        def id(x: Long): Int = {
+          val i = idx.get(x)
+          if (i != null) i.intValue
+          else { val j = idx.size; idx.put(x, j); ids += x; j }
+        }
+        val (eu, ev, srcs) = (new ArrayBuilder.ofInt, new ArrayBuilder.ofInt, new ArrayBuilder.ofLong)
+        it.foreach { case (u, v, isSrc) =>
+          if (isSrc) srcs += u else { eu += id(u); ev += id(v) }
+        }
+        val (a, b, node) = (eu.result(), ev.result(), ids.result())
+        val nV = node.length
+        val off = new Array[Int](nV + 1)
+        a.foreach(i => off(i + 1) += 1)
+        b.foreach(i => off(i + 1) += 1)
+        (1 to nV).foreach(i => off(i) += off(i - 1))
+        val nbr = new Array[Int](off(nV))
+        val fill = off.clone()
+        a.indices.foreach { e =>
+          nbr(fill(a(e))) = b(e); fill(a(e)) += 1
+          nbr(fill(b(e))) = a(e); fill(b(e)) += 1
+        }
+        val dist = Array.fill(nV)(-1)
+        val queue = new Array[Int](nV)
+        srcs.result().distinct.iterator.filter(s => idx.containsKey(s)).flatMap { s =>
+          val root = idx.get(s).intValue
+          dist(root) = 0
+          queue(0) = root
+          var (head, tail) = (0, 1)
+          while (head < tail) {
+            val x = queue(head)
+            head += 1
+            if (dist(x) <= maxRounds) {
+              var j = off(x)
+              while (j < off(x + 1)) {
+                val y = nbr(j)
+                if (dist(y) < 0) { dist(y) = dist(x) + 1; queue(tail) = y; tail += 1 }
+                j += 1
+              }
+            }
+          }
+          val wave = Array.tabulate(tail)(i => (node(queue(i)), s, dist(queue(i)).toLong))
+          (0 until tail).foreach(i => dist(queue(i)) = -1)
+          wave.iterator
+        }
+      }
+      .toDF("node", "src", "dist")
   }
 
   /** Landmark closeness from [[bfsDistances]]: per node, how many of the

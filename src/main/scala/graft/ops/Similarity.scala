@@ -453,7 +453,12 @@ object Similarity {
     * plan-construction time — eagerly, by design: the bad call dies at
     * its own stack frame, not inside a later action.
     */
-  private def centArrayLit(cents: DataFrame): Column = {
+  private def centArrayLit(cents: DataFrame): Column = centArray(cents)._1
+
+  /** [[centArrayLit]] plus the centroid count its collect already read —
+    * the tuners need both and must not pay a second job for the count.
+    */
+  private def centArray(cents: DataFrame): (Column, Int) = {
     val rows = cents
       .select(col("centroid_id").cast("long"), col("centroid"))
       .collect()
@@ -464,9 +469,9 @@ object Similarity {
       "centroid table is empty — IVF builds/probes over an empty corpus or train set " +
         "are refused (an empty index would silently answer every query with zero rows); " +
         "build the index over a non-empty corpus first")
-    array(rows.map { case (id, v) =>
+    (array(rows.map { case (id, v) =>
       struct(lit(id).as("centroid_id"), typedLit(v).as("centroid"))
-    }: _*)
+    }: _*), rows.length)
   }
 
   /** (csim desc NULLS LAST, centroid_id asc) over scored centroid structs —
@@ -527,9 +532,9 @@ object Similarity {
       carry: Seq[(String, String)] = Nil): DataFrame =
     flatProbesArr(queries, centArrayLit(cents), nProbe, idCol, vecCol, carry)
 
-  /** [[flatProbes]] over a PRE-BUILT centroid array literal — the rung
-    * loops ([[nProbeSearch]] callers) probe the same store many times and
-    * must not pay the bounded centroid collect per rung.
+  /** [[flatProbes]] over a PRE-BUILT centroid array literal — the tuners
+    * probe the same store several times and must not pay the bounded
+    * centroid collect per probe.
     */
   private def flatProbesArr(
       queries: DataFrame,
@@ -2687,8 +2692,9 @@ object Similarity {
     * candidates_scored, n_rungs)` — `candidates_scored` is the
     * (query, candidate) pairs the probe exact-scores at the chosen
     * nProbe, so the SLO loop reports what the recall COSTS, not just
-    * that it passed; `n_rungs` the probe evaluations the search itself
-    * paid. `nProbeHint` >= 1 warm-starts the search (seed a drifted
+    * that it passed; `n_rungs` the distinct rungs the search read off
+    * the curve (the ladder's probe count, had each rung been probed).
+    * `nProbeHint` >= 1 warm-starts the search (seed a drifted
     * store's tuner from its fresh sibling's `n_probe` — a perfect hint
     * closes in two rungs instead of re-climbing the ladder).
     * `exactTopK` shares a caller-materialized [[bruteForceTopK]] ground
@@ -2699,10 +2705,13 @@ object Similarity {
     * derives its own.
     *
     * Scale shape: the exact baseline (one |sample|×|live| scan — the
-    * ground-truth price, bounded by a small deterministic sample) is
-    * materialized ONCE per corpus; the search then costs
-    * O(log nCentroids) partition-pruned probes, each folded to a 1-row
-    * decision read, plus one candidate count at the winning rung.
+    * ground-truth price, bounded by a small deterministic sample) feeds
+    * ONE aggregation that reads the whole recall curve
+    * ([[flatRecallCurve]]: each true neighbour's cell rank in its
+    * query's centroid order, grouped by rank — at most nCentroids + 1
+    * rows to the driver); the ladder then replays on the driver over
+    * that curve, and one candidate count at the winning nProbe prices
+    * it. No probe runs per rung.
     */
   def autoTuneNProbe(
       spark: org.apache.spark.sql.SparkSession,
@@ -2714,27 +2723,106 @@ object Similarity {
       exactTopK: Option[DataFrame] = None,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
     require(
       targetRecallMilli >= 1 && targetRecallMilli <= 1000,
       s"targetRecallMilli must be in [1, 1000], got $targetRecallMilli")
+    val (q, cells, centsArr, nCent, exact) =
+      flatTuneInputs(spark, path, queries, k, exactTopK, idCol, vecCol)
+    val (nQueries, curve) = flatRecallCurve(q, exact, cells, centsArr, nCent, k, idCol, vecCol)
+    nProbeSearch(
+      spark, nCent, targetRecallMilli, nQueries, curve,
+      ivfCandidateCount(q, centsArr, cells, idCol, vecCol),
+      nProbeHint)
+  }
+
+  /** The recall curve of a persisted flat IVF store at EVERY nProbe in
+    * 0..nCentroids (`curve(p)` = micro recall_milli of
+    * [[probeIvfIndex]] at p against exact brute force over the live
+    * set) — the one aggregation [[autoTuneNProbe]] searches over,
+    * exposed so specs can hold it to the per-p audit.
+    */
+  private[graft] def ivfRecallCurve(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      queries: DataFrame,
+      k: Int,
+      idCol: String = "vec_id",
+      vecCol: String = "embedding"): IndexedSeq[Long] = {
+    val (q, cells, centsArr, nCent, exact) =
+      flatTuneInputs(spark, path, queries, k, None, idCol, vecCol)
+    flatRecallCurve(q, exact, cells, centsArr, nCent, k, idCol, vecCol)._2
+  }
+
+  /** Validation and the store reads a flat tune needs, each paid once:
+    * the checkpointed query sample (read by the ground truth, the curve
+    * and the candidate count), the live cells, the centroid literal with
+    * its count, and the exact top-k (the caller's shared one, or derived
+    * over the live set).
+    */
+  private def flatTuneInputs(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      queries: DataFrame,
+      k: Int,
+      exactTopK: Option[DataFrame],
+      idCol: String,
+      vecCol: String): (DataFrame, DataFrame, Column, Int, DataFrame) = {
     requireNotInflight(spark, path)
     requireIvfDim(queries, path, vecCol)
-    val cents = spark.read.parquet(s"$path/centroids")
-    val nCent = cents.count().toInt
     val cells = minusTombstones(spark, path, spark.read.parquet(s"$path/cells"), "neighbor_id")
-    val live = cells.select(col("neighbor_id").as(idCol), col("cv").as(vecCol))
-    val q = queries.localCheckpoint() // probed once per search rung
-    // the rung loop re-probes the SAME store: validation and the store
-    // reads (params head, dim profile, centroid collect) happen once
-    // here, not once per rung — the closure is the bare probe kernel
-    val centsArr = centArrayLit(cents)
-    nProbeSearch(
-      spark, q, live, k, targetRecallMilli, nCent, idCol, vecCol,
-      p => rerank(flatProbesArr(q, centsArr, p, idCol, vecCol), cells, k),
-      ivfCandidateCount(q, cents, cells, idCol, vecCol),
-      nProbeHint,
-      exactTopK)
+    val q = queries.localCheckpoint()
+    val (centsArr, nCent) = centArray(spark.read.parquet(s"$path/centroids"))
+    // read once by the curve aggregation: no checkpoint
+    val exact = exactTopK.getOrElse(bruteForceTopK(
+      q, cells.select(col("neighbor_id").as(idCol), col("cv").as(vecCol)), k, idCol, vecCol))
+    (q, cells, centsArr, nCent, exact)
+  }
+
+  /** Micro recall@k of the flat IVF probe at EVERY nProbe from ONE
+    * aggregation: `(n_queries, curve)` with `curve(p)` for p in
+    * 0..nCent. Closed form: the probe reranks its candidates by exact
+    * rounded cosine under [[bruteForceTopK]]'s total order (`cos_r`
+    * desc, `neighbor_id` asc), so every candidate that outranks a true
+    * top-k neighbour t is itself a true top-k neighbour — fewer than k
+    * of them — and t is in the probe's top-k at p EXACTLY when t's cell
+    * ranks <= p in the query's centroid order. So each exact row gets
+    * its cell's rank (exact ⋈ cells on the id, ⋈ the query's full
+    * centroid ranking), the rows group by rank, and the driver takes
+    * the cumulative sum. A neighbour with no live cell (a caller's
+    * ground truth over another live set) has no rank and never counts
+    * as a hit — as no probe could return it. `n_queries` rides in the
+    * same aggregation: every query of a [[rank]]ed top-k has exactly
+    * one rank-1 row. Not valid for ADC-scored probes (see
+    * [[autoTuneNProbeIvfPq]]).
+    */
+  private def flatRecallCurve(
+      q: DataFrame,
+      exact: DataFrame,
+      cells: DataFrame,
+      centsArr: Column,
+      nCent: Int,
+      k: Int,
+      idCol: String,
+      vecCol: String): (Long, IndexedSeq[Long]) = {
+    val cellRank = q.select(
+      col(idCol).as("query_id"),
+      posexplode_outer(topCentroids(col(vecCol), centsArr, nCent)).as(Seq("cell_pos", "centroid_id")))
+    val byRank = exact
+      .filter(col("rank") <= k)
+      .select("query_id", "neighbor_id", "rank")
+      .join(cells.select("neighbor_id", "centroid_id"), Seq("neighbor_id"), "left")
+      .join(cellRank, Seq("query_id", "centroid_id"), "left")
+      .groupBy("cell_pos")
+      .agg(
+        count(lit(1)).cast("long").as("n"),
+        count(when(col("rank") === 1, true)).cast("long").as("nq"))
+      .collect()
+    val nExact = byRank.map(_.getLong(1)).sum
+    val hits = new Array[Long](nCent + 1) // hits(p): neighbours whose cell ranks exactly p
+    byRank.filterNot(_.isNullAt(0)).foreach(r => hits(r.getInt(0) + 1) += r.getLong(1))
+    (1 to nCent).foreach(p => hits(p) += hits(p - 1))
+    (byRank.map(_.getLong(2)).sum,
+      hits.toIndexedSeq.map(h => if (nExact == 0L) 1000L else (1000L * h) / nExact))
   }
 
   /** [[autoTuneNProbe]] for the COMPOSED IVF-PQ store — the same SLO-driven
@@ -2746,9 +2834,14 @@ object Similarity {
     * exhaustive probing does not undo it), so the exhaustive row reports
     * the honest ceiling instead of looping. PQ codes are lossy: ground
     * truth needs the caller's full-precision `corpus` restricted to the
-    * live id set (the [[ivfPqRecallAudit]] contract). Search kernel,
-    * output shape, and decision-read discipline shared with the flat
-    * tuner (one oracle-checked kernel, two probe faces).
+    * live id set (the [[ivfPqRecallAudit]] contract). Search kernel
+    * and output shape shared with the flat tuner (one oracle-checked
+    * kernel, two probe faces), but this face keeps the per-rung ladder
+    * ([[auditedNProbeSearch]]: one probe, audit and 1-row decision read
+    * per rung): the flat tuner's closed-form curve needs the probe to
+    * rank candidates in the exact top-k's own order, and ADC distances
+    * misrank within a cell, so a true neighbour whose cell is probed
+    * can still be pushed out of the top-k.
     */
   def autoTuneNProbeIvfPq(
       spark: org.apache.spark.sql.SparkSession,
@@ -2783,7 +2876,7 @@ object Similarity {
     val centsArr = centArrayLit(cents)
     val dtab = pqDistTable(q, spark.read.parquet(s"$path/codebook"), m, dim / m, idCol, vecCol)
       .localCheckpoint()
-    nProbeSearch(
+    auditedNProbeSearch(
       spark, q, live, k, targetRecallMilli, nCent, idCol, vecCol,
       p =>
         adcTail(
@@ -2822,7 +2915,8 @@ object Similarity {
     * candidates_scored, chosen)`.
     *
     * Scale shape: |ladder| index builds + ONE exact ground truth +
-    * |ladder| warm-started nProbe searches of 1-row decision reads each.
+    * |ladder| warm-started nProbe searches, each one recall-curve
+    * aggregation plus one candidate count ([[autoTuneNProbe]]).
     * Each rung builds via the [[writeIvfIndexTrained]] split: its Lloyd
     * chain runs over `trainSet` (a caller-bounded sample — at 100 TB a
     * ladder must NOT pay |ladder| full-corpus Lloyd runs when the
@@ -2864,17 +2958,15 @@ object Similarity {
     val rungs = ladder.map { nc =>
       val p = s"$workDir/nc_$nc"
       writeIvfIndexTrained(corpusN, train, p, nc, iters, idCol, vecCol)
-      val cents = spark.read.parquet(s"$p/centroids")
       val cells = spark.read.parquet(s"$p/cells") // fresh build: no tombstones
-      val centsArr = centArrayLit(cents) // once per rung store, not per probe
+      val centsArr = centArrayLit(spark.read.parquet(s"$p/centroids"))
+      val (nQueries, curve) = flatRecallCurve(q, exact, cells, centsArr, nc, k, idCol, vecCol)
       // the tuner's output is a 1-row local relation (the search already
       // ran), so this read is a bounded decision read
       val row = nProbeSearch(
-        spark, q, corpusN, k, targetRecallMilli, nc, idCol, vecCol,
-        pp => rerank(flatProbesArr(q, centsArr, pp, idCol, vecCol), cells, k),
-        ivfCandidateCount(q, cents, cells, idCol, vecCol),
-        hint,
-        Some(exact)).head()
+        spark, nc, targetRecallMilli, nQueries, curve,
+        ivfCandidateCount(q, centsArr, cells, idCol, vecCol),
+        hint).head()
       hint = row.getAs[Long]("n_probe").toInt // seed the next rung's search
       (nc.toLong, row.getAs[Long]("n_probe"), row.getAs[Long]("recall_milli"),
         row.getAs[Long]("candidates_scored"))
@@ -2903,7 +2995,9 @@ object Similarity {
     * PQ codebook seeds) train on `trainSet` when given — the composed
     * ladder otherwise pays 2·|ladder| corpus-scale training passes at
     * 100 TB. Oracle posture mirrors
-    * [[autoTuneNProbeIvfPq]]: the search kernel and the flat ladder are
+    * [[autoTuneNProbeIvfPq]], and so does its per-rung audited ladder
+    * (ADC misranking breaks the flat face's closed-form recall curve):
+    * the search kernel and the flat ladder are
     * oracle-pinned (`ann_autotune_nprobe`, `ann_autotune_build`); the
     * composed ladder is spec-verified against the oracle-checked
     * [[ivfPqRecallAudit]] — an every-p ADC unroll across three Lloyd
@@ -2953,7 +3047,7 @@ object Similarity {
       val centsArr = centArrayLit(cents)
       val dtab = pqDistTable(q, spark.read.parquet(s"$p/codebook"), m, dim / m, idCol, vecCol)
         .localCheckpoint()
-      val row = nProbeSearch(
+      val row = auditedNProbeSearch(
         spark, q, corpusN, k, targetRecallMilli, nc, idCol, vecCol,
         pp =>
           adcTail(
@@ -2985,12 +3079,13 @@ object Similarity {
 
   /** (query, candidate) pairs a flat-IVF probe at `p` exact-scores —
     * the `candidates_scored` cost echo, one definition for every tuner
-    * face (the oracle pins it through `ann_autotune_nprobe`).
+    * face (the oracle pins it through `ann_autotune_nprobe`). Takes the
+    * tuner's centroid literal, so the count collects no centroids.
     */
   private def ivfCandidateCount(
-      q: DataFrame, cents: DataFrame, cells: DataFrame,
+      q: DataFrame, centsArr: Column, cells: DataFrame,
       idCol: String, vecCol: String)(p: Int): Long =
-    flatProbes(q, cents, p, idCol, vecCol)
+    flatProbesArr(q, centsArr, p, idCol, vecCol)
       .join(cells.select("neighbor_id", "centroid_id"), Seq("centroid_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .count()
@@ -3009,21 +3104,15 @@ object Similarity {
       .filter(col("query_id") =!= col("vec_id"))
       .count()
 
-  /** The shared minimal-nProbe search: exponential ladder + binary search
-    * over a monotone recall curve, exact baseline materialized once, one
-    * 1-row decision read per rung. `hint` >= 1 WARM-STARTS the search
-    * (seed it from a sibling store's tuned nProbe, or an operator's
-    * previous run): a failing hint ladders up from where it stands; a
-    * passing hint verifies minimality downward, trying `hint - 1` first
-    * so a PERFECT hint closes in two rungs instead of re-climbing the
-    * whole ladder. `hint` = 0 is the cold search, rung-for-rung identical
-    * to before. The returned row also reports what the chosen rung
-    * COSTS — `candidates_scored`, the (query, candidate) pairs the probe
-    * actually scored at the chosen nProbe via `candidatesAt` — and
-    * `n_rungs`, the distinct recall evaluations the search paid (the
-    * spec's warm-start assertion; driver rows leave it unselected).
+  /** [[nProbeSearch]] with a MEASURED recall per rung — the IVF-PQ
+    * faces' source: one probe, one [[annRecallAudit]] and one 1-row
+    * decision read per distinct rung, against an exact baseline
+    * materialized once (or the caller's shared `exactOpt`). ADC scoring
+    * misranks within probed cells, so the flat tuner's closed-form
+    * curve ([[flatRecallCurve]]) does not hold there and each rung is
+    * audited for real.
     */
-  private def nProbeSearch(
+  private def auditedNProbeSearch(
       spark: org.apache.spark.sql.SparkSession,
       q: DataFrame,
       live: DataFrame,
@@ -3036,25 +3125,56 @@ object Similarity {
       candidatesAt: Int => Long,
       hint: Int = 0,
       exactOpt: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
     // the exact baseline depends only on (queries, live corpus, k) — a
     // caller tuning SEVERAL stores over the same corpus (the build-knob
     // ladder) materializes it once and shares it across rungs
     val exact = exactOpt.getOrElse(bruteForceTopK(q, live, k, idCol, vecCol).localCheckpoint())
     val nQueries = exact.select("query_id").distinct().count()
+    nProbeSearch(
+      spark, nCent, targetRecallMilli, nQueries,
+      p => {
+        // 1-row decision read per rung (the ivfCentroids collect discipline)
+        val r = annRecallAudit(probe(p), exact, k)
+          .agg(
+            sum("n_hit").cast("long").as("h"),
+            sum("n_exact").cast("long").as("e"))
+          .head()
+        if (r.getLong(1) == 0L) 1000L else (1000L * r.getLong(0)) / r.getLong(1)
+      },
+      candidatesAt,
+      hint)
+  }
+
+  /** The shared minimal-nProbe search: exponential ladder + binary search
+    * over a monotone recall curve `recallAt`, run on the driver. The
+    * flat tuners read `recallAt` off a precomputed curve; the IVF-PQ
+    * faces measure it per rung ([[auditedNProbeSearch]]). `hint` >= 1
+    * WARM-STARTS the search (seed it from a sibling store's tuned
+    * nProbe, or an operator's previous run): a failing hint ladders up
+    * from where it stands; a passing hint verifies minimality downward,
+    * trying `hint - 1` first so a PERFECT hint closes in two rungs
+    * instead of re-climbing the whole ladder. `hint` = 0 is the cold
+    * search. The returned row also reports what the chosen rung COSTS —
+    * `candidates_scored`, the (query, candidate) pairs the probe
+    * actually scored at the chosen nProbe via `candidatesAt` — and
+    * `n_rungs`, the distinct recall evaluations the search asked for
+    * (the spec's warm-start assertion; driver rows leave it
+    * unselected).
+    */
+  private def nProbeSearch(
+      spark: org.apache.spark.sql.SparkSession,
+      nCent: Int,
+      targetRecallMilli: Long,
+      nQueries: Long,
+      recall: Int => Long,
+      candidatesAt: Int => Long,
+      hint: Int): DataFrame = {
+    import spark.implicits._
     // memoized: the search re-asks about its final rung (ladder exit /
-    // last binary-search hi), and a probe + audit job is the expensive
-    // unit here — never pay for the same p twice
+    // last binary-search hi), and a measured rung is a probe + audit job
+    // — never pay for the same p twice
     val seen = scala.collection.mutable.Map.empty[Int, Long]
-    def recallAt(p: Int): Long = seen.getOrElseUpdate(p, {
-      // 1-row decision read per rung (the ivfCentroids collect discipline)
-      val r = annRecallAudit(probe(p), exact, k)
-        .agg(
-          sum("n_hit").cast("long").as("h"),
-          sum("n_exact").cast("long").as("e"))
-        .head()
-      if (r.getLong(1) == 0L) 1000L else (1000L * r.getLong(0)) / r.getLong(1)
-    })
+    def recallAt(p: Int): Long = seen.getOrElseUpdate(p, recall(p))
     var lo = 0 // largest known-failing nProbe
     var hi = math.min(math.max(hint, 1), nCent)
     var rHi = recallAt(hi)

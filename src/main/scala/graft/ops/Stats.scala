@@ -1241,7 +1241,20 @@ object Stats {
     * value; then the [[corrMatrixMilli]] one-scan kernel. k value-keyed
     * shuffles of 1× data buy exact global ranks with no hot sort.
     */
-  def spearmanMatrixMilli(df: DataFrame, cols: Seq[String]): DataFrame = {
+  def spearmanMatrixMilli(df: DataFrame, cols: Seq[String]): DataFrame =
+    spearmanMatrixMilli(df, cols, spearmanWindowMaxRows)
+
+  /** Largest listwise-complete row count whose tie blocks take the
+    * single-partition window cumsum in [[spearmanMatrixMilli]]; above it
+    * the distributed [[graft.ops.Relational.globalCumSum]] runs.
+    */
+  private[graft] val spearmanWindowMaxRows: Long = 1L << 21
+
+  /** [[spearmanMatrixMilli]] with the window cutoff as an argument, so
+    * specs can drive small inputs down the distributed branch.
+    */
+  private[graft] def spearmanMatrixMilli(
+      df: DataFrame, cols: Seq[String], windowMaxRows: Long): DataFrame = {
     require(cols.size >= 2, s"correlation needs at least two columns, got ${cols.size}")
     val missing = cols.filterNot(df.columns.contains)
     require(missing.isEmpty, s"spearmanMatrixMilli: columns not in schema: ${missing.mkString(", ")}")
@@ -1270,7 +1283,7 @@ object Stats {
     // keep the distributed prefix scan — the single-partition sort is
     // exactly what it exists to avoid. Same integers either way; the
     // kernel-choice spec pins it.
-    val smallBlocks = n <= (1L << 21)
+    val smallBlocks = n <= windowMaxRows
     val ranked = cols.foldLeft(milli) { (acc, c) =>
       val blocks = milli.groupBy(col(c)).agg(count(lit(1)).cast("long").as("__c"))
       val dr = (if (smallBlocks) {

@@ -757,6 +757,52 @@ class GraphSpec extends SparkSpec {
     assert(ex.getMessage.contains("did not converge"), ex.getMessage)
   }
 
+  test("bfsDistances: one-task kernel ≡ frontier loop, refusal on both branches") {
+    // the hand graph above, and a seeded random multigraph (self-loops,
+    // both orientations, duplicates) over three disjoint id ranges; the
+    // sources include a null, an id outside the graph and a repeat
+    val rnd = new scala.util.Random(7)
+    val randomEdges = Seq(0L, 100L, 200L).flatMap(base =>
+      Seq.fill(60)((base + rnd.nextInt(40), base + rnd.nextInt(40))))
+    val graphs = Seq(
+      (Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L)), Seq(Some(1L), Some(4L), Some(99L))),
+      (randomEdges,
+        Seq(Some(0L), Some(3L), Some(105L), Some(105L), Some(231L), Some(999L), None)))
+    def bfs(sess: org.apache.spark.sql.SparkSession, edges: Seq[(Long, Long)],
+        srcs: Seq[Option[Long]], maxRounds: Int = 16): Seq[(Long, Long, Long)] = {
+      import sess.implicits._
+      Graph.bfsDistances(edges.toDF("src", "dst"), srcs.toDF("node"), maxRounds)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    }
+    val comps = {
+      val s = spark
+      import s.implicits._
+      graft.ops.Dedup.clusterPairs(randomEdges.filter(p => p._1 != p._2).toDF("doc_a", "doc_b"))
+        .select("cluster_id").distinct().count()
+    }
+    assert(comps >= 3L, s"random graph has $comps components")
+    graphs.foreach { case (edges, srcs) =>
+      val local = bfs(spark, edges, srcs)
+      val frontier = SparkSpec.withIsolatedConf("spark.graft.graph.localEdgeCutoff" -> "0")(
+        bfs(_, edges, srcs))
+      assert(local.nonEmpty && local === frontier, "one-task and frontier rows differ")
+    }
+    // a 20-chain from one end needs exactly 19 rounds: 19 passes, 18 is
+    // refused at call time, on either branch
+    val chain = (1L until 20L).map(i => (i, i + 1))
+    def refusal(sess: org.apache.spark.sql.SparkSession): Unit = {
+      import sess.implicits._
+      val (e, one) = (chain.toDF("src", "dst"), Seq(1L).toDF("node"))
+      assert(Graph.bfsDistances(e, one, maxRounds = 19)
+        .agg(org.apache.spark.sql.functions.max("dist")).head().getLong(0) === 19L)
+      // no action on the result: the refusal must come from the call
+      val ex = intercept[IllegalArgumentException](Graph.bfsDistances(e, one, maxRounds = 18))
+      assert(ex.getMessage.contains("did not converge"), ex.getMessage)
+    }
+    refusal(spark)
+    SparkSpec.withIsolatedConf("spark.graft.graph.localEdgeCutoff" -> "0")(refusal)
+  }
+
   test("cc store streaming ingest: idempotent resends, crash retry, re-point, pin retirement") {
     val spark = SparkSpec.spark
     val dir = java.nio.file.Files.createTempDirectory("ccingest").toString

@@ -295,6 +295,74 @@ class OpsSpec extends SparkSpec {
     assert(trivial.getAs[Long]("n_probe") === 1L, trivial.toString)
   }
 
+  test("ivfRecallCurve ≡ per-p recall audit on fresh, stale, tombstoned and tied stores") {
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val q = e.filter(col("vec_id") < 8)
+    def tmp(n: String) = java.nio.file.Files.createTempDirectory(n).toString
+    val fresh = tmp("curvefresh")
+    Similarity.writeIvfIndex(e, fresh)
+    // stale: the quantizer trained on coordinate-rotated vectors
+    val stale = tmp("curvestale")
+    Similarity.writeIvfIndexTrained(e, e.select(
+      (col("vec_id") + 1000000L).as("vec_id"),
+      expr("concat(slice(embedding, 2, 63), slice(embedding, 1, 1))").as("embedding")), stale)
+    // tombstoned: every id = 1 mod 5 deleted, two of the queries included
+    val tomb = tmp("curvetomb")
+    Similarity.writeIvfIndex(e, tomb)
+    Similarity.deleteFromIndex(e.filter(col("vec_id") % 5 === 1).select("vec_id"), tomb)
+    // tied: each odd id below 16 carries its even predecessor's vector,
+    // so the unrefined (iters = 0) seed centroids tie pairwise on csim,
+    // and every 4th vector has a copy under a second id, so cos_r ties
+    val twin = e.as("a")
+      .join(e.as("b"), col("b.vec_id") === col("a.vec_id") - col("a.vec_id") % 2)
+      .filter(col("a.vec_id") < 16)
+      .select(col("a.vec_id"), col("b.embedding"))
+    val tiedCorpus = e.filter(col("vec_id") >= 16).unionAll(twin).unionAll(
+      e.filter(col("vec_id") % 4 === 0)
+        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
+    val tied = tmp("curvetied")
+    Similarity.writeIvfIndex(tiedCorpus, tied, iters = 0)
+    // the per-rung ladder's answers before the closed form replaced it:
+    // store -> (target, hint -> (n_probe, recall_milli, candidates_scored,
+    // n_rungs)); the tied store clears 950 at p = 1, so it is pinned at 1000
+    val ladder = Map(
+      "fresh" -> ((950L, Map(0 -> ((6L, 975L, 1450L, 6L)), 1 -> ((6L, 975L, 1450L, 6L)),
+        6 -> ((6L, 975L, 1450L, 2L))))),
+      "stale" -> ((950L, Map(0 -> ((12L, 975L, 3017L, 8L)), 1 -> ((12L, 975L, 3017L, 8L)),
+        12 -> ((12L, 975L, 3017L, 2L))))),
+      "tomb" -> ((950L, Map(0 -> ((6L, 975L, 1175L, 6L)), 1 -> ((6L, 975L, 1175L, 6L)),
+        6 -> ((6L, 975L, 1175L, 2L))))),
+      "tied" -> ((1000L, Map(0 -> ((3L, 1000L, 1170L, 4L)), 1 -> ((3L, 1000L, 1170L, 4L)),
+        3 -> ((3L, 1000L, 1170L, 2L))))))
+    for ((name, dir, qq) <- Seq(
+        ("fresh", fresh, q), ("stale", stale, q), ("tomb", tomb, q),
+        ("tied", tied, tiedCorpus.filter(col("vec_id") < 8)))) {
+      val curve = Similarity.ivfRecallCurve(spark, dir, qq, k = 5)
+      val nCent = spark.read.parquet(s"$dir/centroids").count().toInt
+      assert(curve.length === nCent + 1, s"$name: one curve point per p in 0..$nCent")
+      val audited = (1 to nCent)
+        .map(p => Similarity.ivfRecallAudit(spark, dir, qq, k = 5, nProbe = p)
+          .agg(sum("n_hit").cast("long").as("h"), sum("n_exact").cast("long").as("e"))
+          .withColumn("p", lit(p)))
+        .reduce(_ unionAll _)
+        .collect()
+        .map(r => r.getInt(2) -> (1000L * r.getLong(0)) / r.getLong(1))
+        .toMap
+      (1 to nCent).foreach(p =>
+        assert(curve(p) === audited(p), s"$name: curve($p) vs the audited probe"))
+      val (target, pins) = ladder(name)
+      pins.foreach { case (hint, want) =>
+        val r = Similarity.autoTuneNProbe(spark, dir, qq, k = 5, targetRecallMilli = target,
+          nProbeHint = hint).head()
+        val got = (r.getAs[Long]("n_probe"), r.getAs[Long]("recall_milli"),
+          r.getAs[Long]("candidates_scored"), r.getAs[Long]("n_rungs"))
+        assert(got === want, s"$name hint $hint")
+        assert(r.getAs[Long]("n_queries") === 8L && r.getAs[Long]("n_centroids") === nCent.toLong)
+      }
+    }
+  }
+
   test("writeIvfIndexTrained: the train/add split equals build + append + tombstone") {
     val a = java.nio.file.Files.createTempDirectory("ivftrainA").toString
     val b = java.nio.file.Files.createTempDirectory("ivftrainB").toString
@@ -336,6 +404,10 @@ class OpsSpec extends SparkSpec {
     // the chosen rung is the (candidates, nc)-minimum, and unique
     val want = rows.minBy { case (nc, _, _, cand, _) => (cand, nc) }._1
     assert(rows.filter(_._5).map(_._1).toSeq == Seq(want), rows.mkString(","))
+    // the closed-form curve reproduces the per-rung ladder's table
+    assert(rows.toSeq == Seq(
+      (4L, 3L, 950L, 2992L, false), (8L, 6L, 975L, 3023L, false),
+      (16L, 10L, 950L, 2506L, true)), rows.mkString(","))
     // each rung's tuned nProbe agrees with tuning that store directly
     // (the per-store search is the oracle-pinned kernel)
     val direct = Similarity.autoTuneNProbe(spark, s"$work/nc_8", q, k = 5).head()

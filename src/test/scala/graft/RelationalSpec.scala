@@ -1956,6 +1956,30 @@ class RelationalSpec extends SparkSpec {
     assert(got.values.forall(_._1 === 4L), "listwise deletion: every pair sees 4 rows")
   }
 
+  test("Stats.spearmanMatrixMilli: window cumsum ≡ globalCumSum ranks on tied random data") {
+    val s = spark
+    import s.implicits._
+    // few distinct values per column, so every column has large tie
+    // blocks; a null drops rows listwise before ranking on both branches
+    for (seed <- Seq(5, 23)) {
+      val rnd = new scala.util.Random(seed)
+      val rows = Seq.fill(400)((
+        rnd.nextInt(7).toDouble,
+        rnd.nextInt(3) * 0.5 - 1.0,
+        if (rnd.nextInt(50) == 0) Option.empty[Double] else Some(rnd.nextInt(12).toDouble),
+        rnd.nextGaussian())).toDF("a", "b", "c", "d")
+      val cols = Seq("a", "b", "c", "d")
+      def run(windowMaxRows: Long) = graft.ops.Stats.spearmanMatrixMilli(rows, cols, windowMaxRows)
+        .collect().map(_.toSeq).sortBy(_.take(2).mkString("|")).toSeq
+      val window = run(graft.ops.Stats.spearmanWindowMaxRows)
+      val distributed = run(0L)
+      assert(window.size === 6, window.mkString(","))
+      assert(window === distributed, s"seed $seed: window and globalCumSum ranks disagree")
+      assert(window === graft.ops.Stats.spearmanMatrixMilli(rows, cols).collect().map(_.toSeq)
+        .sortBy(_.take(2).mkString("|")).toSeq, "the public face keeps the window default")
+    }
+  }
+
   test("Stats.benfordAudit: digit extraction across magnitudes, ppm shares, sup deviation") {
     // digits: 0.012 -> 1, -2.5 -> 2, 30.0 -> 3, 4567.0 -> 4, 0.0 excluded
     val rows = Seq(
