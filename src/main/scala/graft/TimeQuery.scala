@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev utility: time one named query warm, N times in one JVM, then print its
-  * formatted plan. Separates plan problems (slow every run) from machine
-  * noise (slow once): `runMain graft.TimeQuery <name> [sfDir] [reps]`.
+/** Dev utility: time named queries warm, N times each in one JVM, with the
+  * [[Census]] of every rep (jobs, stages, tasks, task time, shuffle bytes),
+  * then print each query's formatted plan. Separates plan problems (slow
+  * every run, same counts) from machine noise (slow once):
+  * `runMain graft.TimeQuery <name[,name...]> [sfDir] [reps]`.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -21,12 +23,17 @@ object TimeQuery {
     graft.etl.NessusSynth(spark, sfDir)
     graft.etl.Docs.cached(spark, sfDir)
     for (name <- names) {
-      for (i <- 1 to reps) {
+      val df = (1 to reps).map { i =>
         val t0 = System.nanoTime()
-        val n = SparkEntry.queries(name)(spark, sfDir).count()
-        println(f"[timequery] $name run $i rows=$n ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      if (names.size == 1) SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+        val ((q, n), counts) = Census.measure(spark) {
+          val q = SparkEntry.queries(name)(spark, sfDir)
+          (q, q.count())
+        }
+        println(f"[timequery] $name run $i rows=$n ${(System.nanoTime() - t0) / 1e9}%.2f s $counts")
+        q
+      }.last
+      println(s"=== $name ===")
+      df.explain("formatted")
     }
     spark.stop()
   }

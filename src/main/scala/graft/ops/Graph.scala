@@ -502,7 +502,9 @@ object Graph {
 
   private def edgeSupport(und: DataFrame): DataFrame = {
     if (isLongPair(und)) {
-      val n = und.count() // cheap: callers pass checkpointed sets by contract
+      // one RDD job over the checkpointed set (a DataFrame count of a
+      // multi-partition set pays an extra AQE job for its exchange)
+      val n = und.rdd.count()
       if (n > 0L && n <= graphLocalCutoff(und.sparkSession)) return localEdgeSupport(und)
     }
     val deg = und
@@ -624,7 +626,9 @@ object Graph {
 
   private def triangleCountsOn(und: DataFrame): DataFrame = {
     if (isLongPair(und)) {
-      val n = und.count() // cheap: callers pass checkpointed sets by contract
+      // one RDD job over the checkpointed set (a DataFrame count of a
+      // multi-partition set pays an extra AQE job for its exchange)
+      val n = und.rdd.count()
       if (n > 0L && n <= graphLocalCutoff(und.sparkSession)) return localTriangleCounts(und)
     }
     val deg = und
@@ -1106,22 +1110,13 @@ object Graph {
       n: Int = supportBuckets) =
     pmod(hash(u, v), lit(n))
 
-  private def writeTextFile(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path,
-      text: String): Unit = Similarity.writeSmallFile(fs, p, text)
-
-  private def readTextFile(
-      fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path): String =
-    Similarity.readSmallFile(fs, p)
-
   /** Persist the store's bucket layout pin: hash-function version + count
     * (a plain FS file — the [[graft.ops.Similarity.markInflight]] lesson:
     * a 1-row parquet would cost a whole Spark job per lifecycle call).
     */
   private def writeBucketing(
       spark: org.apache.spark.sql.SparkSession, path: String, n: Int): Unit =
-    writeTextFile(
+    Similarity.writeSmallFile(
       hfs(spark, path),
       new org.apache.hadoop.fs.Path(s"$path/bucketing"),
       s"$bucketingVersion\n$n")
@@ -1139,7 +1134,7 @@ object Graph {
     val p = new org.apache.hadoop.fs.Path(s"$path/bucketing")
     if (!fs.exists(p)) supportBuckets
     else {
-      val lines = readTextFile(fs, p).trim.split("\n").map(_.trim)
+      val lines = Similarity.readSmallFile(fs, p).trim.split("\n").map(_.trim)
       require(
         lines.length >= 2 && lines(0) == bucketingVersion,
         s"store at $path is bucketed with hash-function version '${lines.headOption.getOrElse("")}' " +
@@ -1323,7 +1318,7 @@ object Graph {
       // staged apply as the support buckets (below, for every later
       // batch): reading it costs an open, never the full-support
       // max(as_of_batch) scan the round-16 layout paid per ingest
-      writeTextFile(
+      Similarity.writeSmallFile(
         hfs(spark, path),
         new org.apache.hadoop.fs.Path(s"$path/support_stamp"),
         batchId.toString)
@@ -1351,7 +1346,7 @@ object Graph {
         s"stream edge store at $path predates the plain-file exactly-once stamp " +
           "(its stamp was an as_of_batch column) — restart the stream from batch 0 " +
           "with a fresh checkpoint (the claim rebuilds the store under this layout)")
-    val asOf = readTextFile(hfs(spark, path), stampP).trim.toLong
+    val asOf = Similarity.readSmallFile(hfs(spark, path), stampP).trim.toLong
     if (asOf >= batchId) return // support already post-N: nothing recounts
     val liveOld = spark.read.parquet(s"$path/edges")
       .filter(col("batch_id") =!= batchId) // a half-landed retry must not hide its own delta
@@ -2121,7 +2116,7 @@ object Graph {
     val fs = hfs(spark, path)
     val foldPin = new org.apache.hadoop.fs.Path(s"$path/cclog_folded")
     if (fs.exists(foldPin)) {
-      val folded = readTextFile(fs, foldPin).trim.toLong
+      val folded = Similarity.readSmallFile(fs, foldPin).trim.toLong
       require(
         batchId >= folded,
         s"readCcLabelsAsOf: generations <= $folded of $path were folded by compactCcLog " +
@@ -2185,7 +2180,7 @@ object Graph {
     val fs = hfs(spark, path)
     val foldPin = new org.apache.hadoop.fs.Path(s"$path/cclog_folded")
     if (fs.exists(foldPin)) {
-      val prior = readTextFile(fs, foldPin).trim.toLong
+      val prior = Similarity.readSmallFile(fs, foldPin).trim.toLong
       require(
         upTo >= prior,
         s"compactCcLog: $path is already folded through generation $prior — a fold can " +
@@ -2201,7 +2196,7 @@ object Graph {
     val rest = log.filter(col("batch_id") > upTo)
       .select(col("kind"), col("a"), col("b"), col("batch_id"))
       .localCheckpoint()
-    writeTextFile(fs, foldPin, upTo.toString)
+    Similarity.writeSmallFile(fs, foldPin, upTo.toString)
     Similarity.rewriteDir(spark, folded.unionAll(rest), s"$path/cclog", Seq("batch_id"))
     Similarity.clearInflight(spark, path)
   }
@@ -2450,8 +2445,8 @@ object Graph {
       }
     }
     stamp.foreach(n =>
-      writeTextFile(fs, new org.apache.hadoop.fs.Path(s"$tmp/stamp"), n.toString))
-    writeTextFile(
+      Similarity.writeSmallFile(fs, new org.apache.hadoop.fs.Path(s"$tmp/stamp"), n.toString))
+    Similarity.writeSmallFile(
       fs,
       new org.apache.hadoop.fs.Path(s"$tmp/op"),
       s"$op\n$deltaTarget\n${if (replaceTarget) "replace" else "append"}\n" +
@@ -2476,7 +2471,7 @@ object Graph {
   private def applyStaged(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     val fs = hfs(spark, path)
     val staged = s"$path/staged"
-    val manifest = readTextFile(fs, new org.apache.hadoop.fs.Path(s"$staged/op"))
+    val manifest = Similarity.readSmallFile(fs, new org.apache.hadoop.fs.Path(s"$staged/op"))
     val lines = manifest.split("\n", 5)
     val (deltaTarget, mode) = (lines(1), lines(2))
     // line 4: comma-joined bucketed subs — absent (a legacy 3-line

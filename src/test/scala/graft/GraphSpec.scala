@@ -1012,18 +1012,9 @@ class GraphSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("jobbudget").toString
     val base = (1L to 200L).map(i => (i, i + 1)).toDF("src", "dst")
     Graph.writeEdgeStore(base, dir)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Graph.appendEdgeStore(Seq((1L, 3L)).toDF("src", "dst"), dir)
-      org.apache.spark.graft.TestShim.drainListenerBus(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    info(s"jobs for one appendEdgeStore: ${jobs.get()}")
+    val (_, counts) =
+      Census.measure(spark)(Graph.appendEdgeStore(Seq((1L, 3L)).toDF("src", "dst"), dir))
+    info(s"jobs for one appendEdgeStore: ${counts.jobs}")
     // the round-16 protocol paid 25 driver-scheduled jobs per append (AQE
     // materialized every shuffle stage as its own job, plus two separate
     // decision probes and a full liveNew materialization); the two-phase
@@ -1033,7 +1024,7 @@ class GraphSpec extends SparkSpec {
     // broadcast-exchange builds, which schedule off-thread and are the
     // cheap kind. The bound fails if AQE creeps back into the tail or a
     // per-step probe returns
-    assert(jobs.get() <= 20, s"append exceeded the fused job budget: ${jobs.get()}")
+    assert(counts.jobs <= 20, s"append exceeded the fused job budget: ${counts.jobs}")
     assert(supMap(Graph.readEdgeSupport(spark, dir)) ===
       supMap(Graph.triangleSupport(base.unionAll(Seq((1L, 3L)).toDF("src", "dst")))))
   }

@@ -1451,19 +1451,8 @@ class OpsSpec extends SparkSpec {
       "ij" -> 5, "kl" -> 4, "mn" -> 3, "op" -> 2)
     val text = words.flatMap { case (w, n) => Seq.fill(n)(w) }.mkString(" ")
     val docs = Seq((1L, text)).toDF("doc_id", "text")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val m =
-      try {
-        val r = TextAnalysis.bpeMergesBatched(docs, nMerges = 8, batch = 4).collect()
-        org.apache.spark.graft.TestShim.drainListenerBus(spark.sparkContext)
-        r
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val (m, counts) =
+      Census.measure(spark)(TextAnalysis.bpeMergesBatched(docs, nMerges = 8, batch = 4).collect())
     assert(m.map(r => (r.getString(1), r.getString(2))).toSeq == Seq(
       ("a", "b"), ("c", "d"), ("e", "f"), ("g", "h"),
       ("ab", "</w>"), ("i", "j"), ("k", "l"), ("m", "n")), m.mkString(","))
@@ -1474,8 +1463,8 @@ class OpsSpec extends SparkSpec {
     // picker paid `batch` sequential collect jobs per round (16 total
     // here, 64 per round at tokenizer batch sizes) — the bound fails if
     // any per-pick probing creeps back in
-    info(s"jobs for 2 batched rounds: ${jobs.get()}")
-    assert(jobs.get() <= 10, s"driver-side greedy must not re-probe per pick: ${jobs.get()} jobs")
+    info(s"jobs for 2 batched rounds: ${counts.jobs}")
+    assert(counts.jobs <= 10, s"driver-side greedy must not re-probe per pick: ${counts.jobs} jobs")
   }
 
   test("bpeMerges: a fully-merged one-char word survives later rounds (no pairs, no crash)") {

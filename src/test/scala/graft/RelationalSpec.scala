@@ -2490,31 +2490,22 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("cached strata: supplied grids trigger no job at composition, a coarser grid stays exact") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     val probe = (0L until 100L).map(i => (i, i * 3)).toDF("event_id", "ts_us")
     val iv = Seq((1L, 10L, 14L), (2L, 40L, 300L), (3L, 100L, 101L)).toDF("iv_id", "start_us", "end_us")
     val lefts = Seq((10L, 5L, 9L), (11L, 50L, 260L)).toDF("l_id", "ls", "le")
-    spark.sparkContext.addSparkListener(listener)
-    val (iDf, oDf, bDf) =
-      try {
-        // grid deliberately COARSER/superset of the occupied classes, with
-        // a duplicate entry (the natural strataA ++ strataB composition)
-        // that must not double class-3 matches
-        val g = Some(Seq(0, 3, 3, 9, 20))
-        val i = Relational.rangeJoinIntervals(probe, iv, "ts_us", "start_us", "end_us", strata = g)
-        val o = Relational.rangeJoinOverlap(lefts, iv, "ls", "le", "start_us", "end_us",
-          lStrata = g, rStrata = g)
-        val b = Relational.rangeJoinOverlapBig(lefts, iv, "ls", "le", "start_us", "end_us",
-          lStrata = g, rStrata = g)
-        org.apache.spark.graft.TestShim.drainListenerBus(spark.sparkContext)
-        (i, o, b)
-      } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 0, s"plan composition with supplied strata ran ${jobs.get()} eager jobs")
+    val ((iDf, oDf, bDf), counts) = Census.measure(spark) {
+      // grid deliberately COARSER/superset of the occupied classes, with
+      // a duplicate entry (the natural strataA ++ strataB composition)
+      // that must not double class-3 matches
+      val g = Some(Seq(0, 3, 3, 9, 20))
+      val i = Relational.rangeJoinIntervals(probe, iv, "ts_us", "start_us", "end_us", strata = g)
+      val o = Relational.rangeJoinOverlap(lefts, iv, "ls", "le", "start_us", "end_us",
+        lStrata = g, rStrata = g)
+      val b = Relational.rangeJoinOverlapBig(lefts, iv, "ls", "le", "start_us", "end_us",
+        lStrata = g, rStrata = g)
+      (i, o, b)
+    }
+    assert(counts.jobs == 0, s"plan composition with supplied strata ran ${counts.jobs} eager jobs")
     // and the coarser grid loses nothing vs the self-computed strata —
     // compared as MULTISETS, so the duplicate grid entry cannot hide a
     // doubled match behind a set-dedup
