@@ -1794,15 +1794,21 @@ object Dedup {
     Similarity.clearInflight(spark, path)
   }
 
+  /** The build-time `(threshold_milli, n)` of the set-join index at `path`. */
+  private def setJoinParams(spark: org.apache.spark.sql.SparkSession, path: String): (Int, Int) = {
+    val p = spark.read.parquet(s"$path/params").select("threshold_milli", "n").head()
+    (p.getInt(0), p.getInt(1))
+  }
+
   private def requireSetJoinParams(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       thresholdMilli: Int,
       n: Int): Unit = {
-    val p = spark.read.parquet(s"$path/params").select("threshold_milli", "n").head()
+    val (t, m) = setJoinParams(spark, path)
     require(
-      p.getInt(0) == thresholdMilli && p.getInt(1) == n,
-      s"set-join index at $path was built with threshold=${p.getInt(0)}, n=${p.getInt(1)}; " +
+      t == thresholdMilli && m == n,
+      s"set-join index at $path was built with threshold=$t, n=$m; " +
         s"caller passed threshold=$thresholdMilli, n=$n")
   }
 
@@ -2025,6 +2031,20 @@ object Dedup {
       idCol: String = "doc_id"): DataFrame = {
     Similarity.requireNotInflight(spark, path)
     requireSetJoinParams(spark, path, thresholdMilli, n)
+    setJoinDriftAuditCore(spark, path, batch, thresholdMilli, n, textCol, idCol)
+  }
+
+  /** [[setJoinDriftAudit]] for a caller that has already checked the
+    * store's inflight marker and params.
+    */
+  private def setJoinDriftAuditCore(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      batch: DataFrame,
+      thresholdMilli: Int,
+      n: Int,
+      textCol: String,
+      idCol: String): DataFrame = {
     val tm = lit(thresholdMilli.toLong)
     // shingled once; consumed by the fresh df count and both orderings
     val tok = setJoinShingles(batch, n, textCol, idCol).localCheckpoint()
@@ -2098,13 +2118,14 @@ object Dedup {
       s"rebuildSetJoinIfDrifted: inflation parity is 10^6 ppm; a threshold below it " +
         s"($thresholdPpm) would rebuild on noise")
     import spark.implicits._
-    val p0 = spark.read.parquet(s"$path/params").select("threshold_milli", "n").head()
-    val (tMilli, nGram) = (p0.getInt(0), p0.getInt(1))
+    Similarity.requireNotInflight(spark, path)
+    // the store's own params, read once for the audit and the rebuild
+    val (tMilli, nGram) = setJoinParams(spark, path)
     // 1-row bounded collect (the decision itself), never data-volume
-    val a = setJoinDriftAudit(spark, path, batch, tMilli, nGram, textCol, idCol).head()
+    val a = setJoinDriftAuditCore(spark, path, batch, tMilli, nGram, textCol, idCol).head()
     val inflation = a.getAs[Long]("inflation_ppm")
     val rebuilt = inflation > thresholdPpm
-    if (rebuilt) rebuildSetJoinIndex(spark, path)
+    if (rebuilt) rebuildSetJoinIndexCore(spark, path, tMilli)
     Seq((
       a.getAs[Long]("n_docs"),
       a.getAs[Long]("cand_frozen"),
@@ -2132,8 +2153,13 @@ object Dedup {
     * mis-scoring; every directory stays READABLE at every instant, and
     * re-running this face to completion converges and clears the marker.
     */
-  def rebuildSetJoinIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val tMilli = spark.read.parquet(s"$path/params").select("threshold_milli").head().getInt(0)
+  def rebuildSetJoinIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    rebuildSetJoinIndexCore(spark, path, setJoinParams(spark, path)._1)
+
+  private def rebuildSetJoinIndexCore(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      tMilli: Int): Unit = {
     val docsRaw = spark.read.parquet(s"$path/docs")
     val hasBatchDirs = docsRaw.columns.contains("batch_id")
     // live snapshot materialized up front: the swaps below must not

@@ -125,6 +125,51 @@ class ExtractSpec extends SparkSpec {
     assert(LandingZone.writeSnapshots(docs, empty, root + "/snap", snapshotAlways = true))
   }
 
+  test("landing zone: read lists the partition dirs, with no metadata probe of a glob path") {
+    val root = java.nio.file.Files.createTempDirectory("graft_lz_read_").toString
+    val raw = {
+      val s = spark
+      import s.implicits._
+      Extract.fetchRawRunDocs(Seq((1L, 10L)).toDS(), factory)
+    }
+    val parts = for (dep <- Seq("dep-a", "007"); day <- Seq("20240101", "20240102")) yield (dep, day)
+    for ((dep, day) <- parts)
+      LandingZone.write(
+        FormatDocs(raw).withColumn("deployment_id", lit(dep)).withColumn("ingest_date", lit(day)),
+        root)
+
+    // every WARN Spark logs while the read plans and runs
+    val warnings = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "landing-read-warnings", null, null, true, Array.empty) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val rootLogger = org.apache.logging.log4j.LogManager.getRootLogger
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    rootLogger.addAppender(appender)
+    val back =
+      try {
+        val df = LandingZone.readScanRunDocs(spark, root)
+        df.collect()
+        df
+      } finally rootLogger.removeAppender(appender)
+    import scala.jdk.CollectionConverters._
+    assert(!warnings.asScala.exists(_.contains("metadata directory")), warnings.asScala.mkString("\n"))
+
+    // one row per landed partition, partition columns as landed strings
+    val got = back.select("deployment_id", "ingest_date").collect().map(r => (r.getString(0), r.getString(1)))
+    assert(got.sorted.toSeq == parts.sorted)
+    assert(back.schema("deployment_id").dataType == org.apache.spark.sql.types.StringType)
+    assert(back.schema("ingest_date").dataType == org.apache.spark.sql.types.StringType)
+    assert(back.select("scan_id", "history_id").distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((1L, 10L)))
+
+    // a missing root is still an error, not an empty read
+    intercept[org.apache.spark.sql.AnalysisException](LandingZone.readScanRunDocs(spark, s"$root/missing"))
+  }
+
   test("compact: fragmented parquet dir rewrites to ceil(bytes/target) files, data intact") {
     val s = spark
     import s.implicits._

@@ -17,11 +17,30 @@ class JobBudgetSpec extends SparkSpec {
     // the benchmark's ops rows
     "ann_autotune_nprobe" -> 62L,
     "graph_bfs_distances" -> 10L,
-    "dedup_setjoin_rebuild" -> 55L,
+    "dedup_setjoin_rebuild" -> 51L,
     "gen_spearman" -> 18L,
     // the one-task triangle kernels behind their edge-count gates
     "graph_ktruss" -> 11L,
     "graph_triangles" -> 7L)
+
+  // Spark recompiles a generated class whenever its source is not in the
+  // generated-class cache. The engine's JVM options size that cache to hold
+  // the working set and keep stage ids out of class names. These four rows
+  // together compile more classes than Spark's default cache (100 entries)
+  // holds, so at the default every pass recompiles; with the engine's
+  // options a warm pass compiles nothing.
+  test("compile once: a warm pass over the four benchmark ops rows compiles no class") {
+    val rows = Seq("ann_autotune_nprobe", "graph_bfs_distances", "dedup_setjoin_rebuild", "gen_spearman")
+    def pass(): Counts = Census.measure(spark)(rows.foreach(q => SparkEntry.queries(q)(spark, sf).count()))._2
+    // warm: pass until one compiles nothing (a row's first run can plan
+    // differently from its later ones), then measure one more pass
+    val warmUp = scala.collection.mutable.ArrayBuffer(pass())
+    while (warmUp.last.compiles > 0 && warmUp.size < 4) warmUp += pass()
+    val measured = pass()
+    info(s"warm-up passes: ${warmUp.map(_.compiles).mkString(", ")} compiles; measured pass: $measured")
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    assert(measured.compiles == 0L, s"a warm pass recompiled ${measured.compiles} classes: $measured")
+  }
 
   for ((name, ceiling) <- ceilings)
     test(s"job budget: $name runs at most $ceiling jobs") {

@@ -2,9 +2,12 @@ package graft
 
 import graft.api.Nessus
 import graft.etl.{Docs, Incremental, Normalize, NessusSynth}
+import graft.io.LandingZone
+import graft.schema.Schemas
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 case class PluginAttrs(see_also: Seq[String])
 case class PluginDoc(
@@ -130,6 +133,59 @@ class NormalizeSpec extends SparkSpec {
     Nessus.load(spark, d, folders, scans, dir)
     assert(new java.io.File(dir).list().toSet == tables.toSet)
     assert(contents() == first)
+  }
+
+  test("Nessus.load over landed docs scans the landed JSON once") {
+    val w = NessusSynth(spark, sf)
+    val d = Docs.cached(spark, sf)
+    val folders = w.folder.select(
+      collect_list(struct(col("folder_id").as("id"), col("type"), col("name"))).as("folders"))
+    val scans = w.scan.select(
+      collect_list(struct(col("scan_id").as("id"), col("folder_id"), col("type"), col("name"))).as("scans"))
+    val root = java.nio.file.Files.createTempDirectory("graft_lz_load_").toString
+    // two deployments, each landing its runs on two days (the cross-day
+    // duplicates the load deduplicates), and one snapshot of each kind
+    def stamp(df: DataFrame, dep: String, day: String) =
+      df.withColumn("deployment_id", lit(dep)).withColumn("ingest_date", lit(day))
+    val landed = (for ((dep, parity) <- Seq("dep-a" -> 0, "dep-b" -> 1); day <- Seq("20240101", "20240102"))
+      yield stamp(d.filter(col("scan_id") % 2 === parity), dep, day)).reduce(_ unionByName _)
+    LandingZone.write(landed, s"$root/scan_runs")
+    LandingZone.write(stamp(folders, "dep-a", "20240102"), s"$root/folders")
+    LandingZone.write(stamp(scans, "dep-a", "20240102"), s"$root/scan")
+    // every file landed: the JSON parts and their checksum files
+    val landedBytes = java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_)).map(java.nio.file.Files.size(_)).sum
+    // bytes read through Hadoop's file systems. The census's task input
+    // also counts the persisted docs each later write reads from Spark's
+    // block store; this is the storage side alone.
+    def fsBytesRead(): Long =
+      org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics.iterator().asScala
+        .map(st => Option(st.getLong("bytesRead")).fold(0L)(_.longValue)).sum
+
+    val fromLanding = s"$root/wh"
+    val read0 = fsBytesRead()
+    val (_, c) = Census.measure(spark)(Nessus.load(
+      spark,
+      LandingZone.readScanRunDocs(spark, s"$root/scan_runs"),
+      LandingZone.read(spark, s"$root/folders", Schemas.folderDoc),
+      LandingZone.read(spark, s"$root/scan", Schemas.scanDoc),
+      fromLanding))
+    val scanned = fsBytesRead() - read0
+    info(s"landed $landedBytes B; read from storage $scanned B; load: $c")
+    // once: every landed byte, plus a few bytes of file-system overhead
+    assert(
+      scanned >= landedBytes && scanned <= landedBytes + landedBytes / 100,
+      s"the load read $scanned B of $landedBytes B landed: $c")
+
+    // the same tables as a load of the same docs straight from memory; the
+    // in-memory docs do not have the landing schema's nested fields, so
+    // scan_run's serialized `targets` is compared by the other tables
+    val fromMemory = s"$root/wh_mem"
+    Nessus.load(spark, landed, stamp(folders, "dep-a", "20240102"), stamp(scans, "dep-a", "20240102"), fromMemory)
+    for (t <- Seq("folder", "scan", "scan_run", "host", "host_vuln", "plugin", "vuln_output")) {
+      val Seq(a, b) = Seq(fromLanding, fromMemory).map(wh => spark.read.parquet(s"$wh/$t").drop("targets"))
+      assert(a.count() > 0 && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, t)
+    }
   }
 
   test("scanRun carries doc fields and serializes targets (C9)") {
