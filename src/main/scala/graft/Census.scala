@@ -6,10 +6,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Work counters of one measured body: the Spark jobs, stages and tasks it
   * caused, what those tasks did, and how many classes Spark's code
-  * generator compiled meanwhile. `inputBytes` is the tasks' input as Spark
-  * reports it: file scans plus blocks read back from Spark's cache. The
-  * job, stage, task and compile counts and the input bytes do not drift
-  * with the box's load; the task times do.
+  * generator compiled meanwhile. The job, stage, task and compile counts
+  * do not drift with the box's load; the task times do.
   */
 final case class Counts(
     jobs: Long = 0,
@@ -17,14 +15,13 @@ final case class Counts(
     tasks: Long = 0,
     taskRunS: Double = 0,
     taskCpuS: Double = 0,
-    inputBytes: Long = 0,
     shuffleReadBytes: Long = 0,
     shuffleWriteBytes: Long = 0,
     compiles: Long = 0) {
 
   override def toString: String =
     f"jobs=$jobs stages=$stages tasks=$tasks task_run=$taskRunS%.2f s " +
-      f"task_cpu=$taskCpuS%.2f s input=$inputBytes B shuffle_read=$shuffleReadBytes B " +
+      f"task_cpu=$taskCpuS%.2f s shuffle_read=$shuffleReadBytes B " +
       f"shuffle_write=$shuffleWriteBytes B compiles=$compiles"
 }
 
@@ -50,7 +47,6 @@ final class Census extends SparkListener {
         tasks = c.tasks + 1,
         taskRunS = c.taskRunS + m.executorRunTime / 1e3,
         taskCpuS = c.taskCpuS + m.executorCpuTime / 1e9,
-        inputBytes = c.inputBytes + m.inputMetrics.bytesRead,
         shuffleReadBytes = c.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
         shuffleWriteBytes = c.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten)
   }

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev utility: time named queries warm, N times each in one JVM, with the
-  * [[Census]] of every rep (jobs, stages, tasks, task time, input and
-  * shuffle bytes, generated classes compiled), then print each query's
-  * formatted plan. Separates plan problems (slow
-  * every run, same counts) from machine noise (slow once):
+  * [[Census]] of every rep (jobs, stages, tasks, task time, shuffle bytes,
+  * generated classes compiled), then print each query's formatted plan.
+  * Separates plan problems (slow every run, same counts) from machine
+  * noise (slow once):
   * `runMain graft.TimeQuery <name[,name...]> [sfDir] [reps]`.
   */
 object TimeQuery {

@@ -68,7 +68,11 @@ object Nessus {
     * by-design cross-day duplicates end here (keep the newest ingest_date
     * when present). The deduplicated docs are persisted for the five
     * run-derived writes, so the landed JSON is parsed and deduplicated
-    * once per load, not once per table.
+    * once per load, not once per table. The persisted plan keeps AQE's
+    * coalescing of its last shuffle, as the same plan uncached would:
+    * Spark's default pins a cached plan's output at
+    * `spark.sql.shuffle.partitions`, which would land `scan_run` (no
+    * shuffle of its own) in more, smaller files, each read by every CALL.
     */
   def load(
       spark: SparkSession,
@@ -90,7 +94,7 @@ object Nessus {
 
     write(Normalize.folder(folderSnapshot), "folder")
     write(Normalize.scan(scanSnapshot), "scan")
-    docs.persist(StorageLevel.MEMORY_AND_DISK)
+    persistCoalesced(spark, docs)
     try {
       write(Normalize.scanRun(docs), "scan_run")
       write(Normalize.host(docs), "host")
@@ -100,6 +104,18 @@ object Nessus {
         Normalize.vulnOutput(docs).select("vuln_output_id", "host_vuln_id", "port", "output"),
         "vuln_output")
     } finally docs.unpersist(blocking = false)
+  }
+
+  /** `df.persist(MEMORY_AND_DISK)`, planned with AQE free to coalesce the
+    * cached plan's output partitions. The flag is read when the cached plan
+    * is built (at `persist`), so it is set for that call only.
+    */
+  private def persistCoalesced(spark: SparkSession, df: DataFrame): Unit = {
+    val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try df.persist(StorageLevel.MEMORY_AND_DISK)
+    finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** Load the operator-maintained `scaner_deployments` table (reference

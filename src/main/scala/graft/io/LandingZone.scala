@@ -43,26 +43,20 @@ object LandingZone {
   }
 
   /** Read one landed document type across all deployments/days. The
-    * partition columns materialize from the directory layout. The
-    * partition dirs are listed here and passed to the reader as concrete
-    * paths: a glob path sends Spark's streaming-sink metadata probe to the
-    * pattern as a literal path, which logs a FileNotFoundException on every
-    * read. A root with no partition dirs (or no root) falls through to the
-    * pattern, so the read fails with Spark's path-not-found error.
+    * partition columns materialize from the directory layout under `root`,
+    * typed as strings. The root itself is the path read, not a glob over
+    * the partition dirs: Spark's file-sink metadata probe takes a glob as a
+    * literal path and logs a FileNotFoundException on every read. A missing
+    * root fails the read.
     */
-  def read(spark: SparkSession, root: String, schema: StructType): DataFrame = {
-    val pattern = s"$root/deployment_id=*/ingest_date=*"
-    val glob = new org.apache.hadoop.fs.Path(pattern)
-    val fs = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = Option(fs.globStatus(glob)).toSeq.flatten.filter(_.isDirectory).map(_.getPath.toString)
+  def read(spark: SparkSession, root: String, schema: StructType): DataFrame =
     spark.read
       .schema(
         schema
           .add("deployment_id", "string")
           .add("ingest_date", "string"))
       .option("basePath", root)
-      .json((if (dirs.isEmpty) Seq(pattern) else dirs): _*)
-  }
+      .json(root)
 
   def readScanRunDocs(spark: SparkSession, root: String): DataFrame =
     read(spark, root, Schemas.scanRunDoc)

@@ -125,7 +125,7 @@ class ExtractSpec extends SparkSpec {
     assert(LandingZone.writeSnapshots(docs, empty, root + "/snap", snapshotAlways = true))
   }
 
-  test("landing zone: read lists the partition dirs, with no metadata probe of a glob path") {
+  test("landing zone: read finds every deployment and day, with no metadata probe of a glob path") {
     val root = java.nio.file.Files.createTempDirectory("graft_lz_read_").toString
     val raw = {
       val s = spark

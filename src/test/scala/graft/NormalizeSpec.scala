@@ -177,6 +177,16 @@ class NormalizeSpec extends SparkSpec {
       scanned >= landedBytes && scanned <= landedBytes + landedBytes / 100,
       s"the load read $scanned B of $landedBytes B landed: $c")
 
+    // persisting the docs keeps the uncached layout: scan_run lands in as
+    // many files as a write of the same deduplicated docs with no cache
+    val uncached = s"$root/scan_run_uncached"
+    Normalize.scanRun(Incremental.dedupLatest(
+      LandingZone.readScanRunDocs(spark, s"$root/scan_runs"),
+      Seq("scan_id", "history_id"),
+      Seq(col("ingest_date").desc))).write.parquet(uncached)
+    def parts(dir: String) = new java.io.File(dir).list().count(_.startsWith("part-"))
+    assert(parts(s"$fromLanding/scan_run") == parts(uncached), "scan_run part files, persisted vs uncached docs")
+
     // the same tables as a load of the same docs straight from memory; the
     // in-memory docs do not have the landing schema's nested fields, so
     // scan_run's serialized `targets` is compared by the other tables
