@@ -155,21 +155,16 @@ object Checks {
       predCol: String): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    StoreLifecycle.claim(
-      spark,
-      path,
-      "cells",
-      batchId,
-      () =>
-        Seq((truthCol, predCol)).toDF("truth_col", "pred_col")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/params"),
-      () => {
-        val p0 = spark.read.parquet(s"$path/params").head
-        require(
-          p0.getString(0) == truthCol && p0.getString(1) == predCol,
-          s"confusion store at $path pins (${p0.getString(0)}, ${p0.getString(1)}), " +
-            s"got ($truthCol, $predCol)")
-      })
+    if (StoreLifecycle.claim(spark, path, batchId, Seq("cells")))
+      Seq((truthCol, predCol)).toDF("truth_col", "pred_col")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    else {
+      val p0 = spark.read.parquet(s"$path/params").head
+      require(
+        p0.getString(0) == truthCol && p0.getString(1) == predCol,
+        s"confusion store at $path pins (${p0.getString(0)}, ${p0.getString(1)}), " +
+          s"got ($truthCol, $predCol)")
+    }
     confusionCells(batch, truthCol, predCol)
       .write
       .mode(org.apache.spark.sql.SaveMode.Overwrite)

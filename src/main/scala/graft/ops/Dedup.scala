@@ -363,7 +363,7 @@ object Dedup {
     val spark = corpus.sparkSession
     import spark.implicits._
     // full rebuild replaces the index: stale tombstones must not subtract
-    Similarity.clearTombstones(spark, path)
+    StoreLifecycle.clearTombstones(spark, path)
     val shC = shingleArrays(corpus, shingle, textCol, idCol)
     bandTable(shC, numHashes, rowsPerBand).write.mode("overwrite").parquet(s"$path/bands")
     shC.write.mode("overwrite").parquet(s"$path/shingles")
@@ -437,7 +437,7 @@ object Dedup {
     crossProbe(
       probe,
       Skew.capHotKeys(
-        Similarity.minusTombstones(spark, path, spark.read.parquet(s"$path/bands"), "id"),
+        StoreLifecycle.minusTombstones(spark, path, spark.read.parquet(s"$path/bands"), "id"),
         Seq("band", "bkey"),
         maxBucket),
       spark.read.parquet(s"$path/shingles"),
@@ -451,9 +451,9 @@ object Dedup {
     * tmp-and-swap recipe as [[graft.ops.Similarity.compactIvfIndex]].
     */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    Similarity.compactIndexDir(spark, path, "bands", "id")
-    Similarity.compactIndexDir(spark, path, "shingles", "id")
-    Similarity.clearTombstones(spark, path)
+    StoreLifecycle.compactIndexDir(spark, path, "bands", "id")
+    StoreLifecycle.compactIndexDir(spark, path, "shingles", "id")
+    StoreLifecycle.clearTombstones(spark, path)
   }
 
   /** The near-dup survivor stage shared by [[ingestLshBatch]] and the
@@ -485,7 +485,7 @@ object Dedup {
         minHashLsh(batch, numHashes, rowsPerBand, threshold, shingle, maxBucket, textCol, idCol)),
       idCol).withColumnRenamed("doc_id", "__rep_id")
     val inBatch = batch.join(reps, col(idCol).cast("long") === col("__rep_id")).drop("__rep_id")
-    if (!Similarity.storeExists(spark, s"$path/bands")) return inBatch
+    if (!StoreLifecycle.storeExists(spark, s"$path/bands")) return inBatch
     def gen(df: DataFrame): DataFrame = beforeBatch match {
       case Some(n) => df.filter(col("batch_id") < n)
       case None => df
@@ -495,7 +495,7 @@ object Dedup {
     val hits = crossProbe(
       inBatch,
       Skew.capHotKeys(
-        Similarity.minusTombstones(spark, path, hist, "id"),
+        StoreLifecycle.minusTombstones(spark, path, hist, "id"),
         Seq("band", "bkey"),
         maxBucket),
       histSh,
@@ -535,7 +535,7 @@ object Dedup {
       idCol: String = "doc_id"): DataFrame = {
     val spark = batch.sparkSession
     val pairs =
-      if (Similarity.storeExists(spark, s"$path/params"))
+      if (StoreLifecycle.storeExists(spark, s"$path/params"))
         probeSetJoinIndex(spark, path, batch, thresholdMilli, n, textCol, idCol)
       else setSimilarityJoin(batch, thresholdMilli, n, textCol, idCol)
     survivorsFromPairs(batch, pairs, idCol)
@@ -583,7 +583,7 @@ object Dedup {
       idCol: String = "doc_id"): DataFrame = {
     val spark = batch.sparkSession
     val pairs =
-      if (Similarity.storeExists(spark, s"$path/params"))
+      if (StoreLifecycle.storeExists(spark, s"$path/params"))
         probeTokenEditIndex(spark, path, batch, textCol, idCol)
       else tokenEditJoin(batch, textCol, idCol)
     survivorsFromPairs(batch, pairs, idCol)
@@ -633,17 +633,12 @@ object Dedup {
     // params, so even an empty batch 0 wipes a previous run's store;
     // otherwise batch 1 would probe the dead run's corpus and silently
     // drop batch docs as near-dups of another stream).
-    StoreLifecycle.claim(
-      spark,
-      path,
-      Seq("bands", "shingles", "docs", "tombstones"),
-      batchId,
-      () =>
-        Seq((numHashes, rowsPerBand, shingle))
-          .toDF("num_hashes", "rows_per_band", "shingle")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$path/params"),
-      () => requireLshParams(spark, path, numHashes, rowsPerBand, shingle))
+    if (StoreLifecycle.claim(spark, path, batchId, Seq("bands", "shingles", "docs")))
+      Seq((numHashes, rowsPerBand, shingle))
+        .toDF("num_hashes", "rows_per_band", "shingle")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/params")
+    else requireLshParams(spark, path, numHashes, rowsPerBand, shingle)
     if (batch.isEmpty) return // nothing to probe or land
     val kept = nearDupSurvivors(
       batch, path, Some(batchId),
@@ -1778,8 +1773,8 @@ object Dedup {
     // mid-way (new df under old postings) is REFUSED by probes instead
     // of silently scoring against mixed directories; completing the
     // build (re-run) resolves a stale marker either way
-    Similarity.markInflight(spark, path, "writeSetJoinIndex")
-    Similarity.clearTombstones(spark, path) // full rebuild: stale deletes die
+    StoreLifecycle.markInflight(spark, path, "writeSetJoinIndex")
+    StoreLifecycle.clearTombstones(spark, path) // full rebuild: stale deletes die
     val tok = setJoinShingles(corpus, n, textCol, idCol)
     val dfs = tok.groupBy("tok").agg(count(lit(1)).cast("long").as("df"))
     dfs.write.mode("overwrite").parquet(s"$path/df")
@@ -1791,7 +1786,7 @@ object Dedup {
       .toDF("threshold_milli", "n")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$path/params")
-    Similarity.clearInflight(spark, path)
+    StoreLifecycle.clearInflight(spark, path)
   }
 
   /** The build-time `(threshold_milli, n)` of the set-join index at `path`. */
@@ -1823,7 +1818,7 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id"): Unit = {
     val spark = batch.sparkSession
-    Similarity.requireNotInflight(spark, path) // crashed rebuild: refuse, never land
+    StoreLifecycle.requireNotInflight(spark, path) // crashed rebuild: refuse, never land
     requireSetJoinParams(spark, path, thresholdMilli, n)
     val ordered = setJoinOrdered(
       setJoinShingles(batch, n, textCol, idCol),
@@ -1854,7 +1849,7 @@ object Dedup {
       n: Int = 3,
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    Similarity.requireNotInflight(spark, path)
+    StoreLifecycle.requireNotInflight(spark, path)
     requireSetJoinParams(spark, path, thresholdMilli, n)
     val bord = setJoinOrdered(
       setJoinShingles(batch, n, textCol, idCol),
@@ -1887,10 +1882,10 @@ object Dedup {
       prefRaw: DataFrame,
       thresholdMilli: Int): DataFrame = {
     val tm = lit(thresholdMilli.toLong)
-    val histDocs = Similarity
+    val histDocs = StoreLifecycle
       .minusTombstones(spark, path, docsRaw.select("id", "otks", "n"), "id")
       .join(batchIds, Seq("id"), "left_anti")
-    val histPref = Similarity
+    val histPref = StoreLifecycle
       .minusTombstones(spark, path, prefRaw.select("id", "n", "tok"), "id")
       .join(batchIds, Seq("id"), "left_anti")
     val bpref = setJoinPrefix(bord)
@@ -1933,20 +1928,12 @@ object Dedup {
     requireSetJoinArgs(thresholdMilli, n)
     val spark = batch.sparkSession
     import spark.implicits._
-    if (batchId == 0L || !Similarity.storeExists(spark, s"$path/params")) {
-      // The WIPE runs before the empty check (the StoreLifecycle rule): an
-      // empty batch 0 must still retire a previous run's store, or batch 1
-      // would validate against stale params and silently merge two streams'
-      // corpora. Only the df FREEZE — which needs content — defers to the
-      // first non-empty batch: params come down too, so that batch re-enters
-      // this branch and claims then.
-      Similarity.deleteDir(spark, s"$path/docs")
-      Similarity.deleteDir(spark, s"$path/prefix")
-      Similarity.deleteDir(spark, s"$path/pairs")
-      Similarity.deleteDir(spark, s"$path/df")
-      Similarity.deleteDir(spark, s"$path/params")
-      Similarity.clearTombstones(spark, path)
-      Similarity.clearInflight(spark, path) // fresh stream resolves a crashed rebuild
+    // The claim's WIPE runs before the empty check (the StoreLifecycle
+    // rule): an empty batch 0 must still retire a previous run's store, or
+    // batch 1 would validate against stale params and silently merge two
+    // streams' corpora. Only the df FREEZE — which needs content — defers
+    // to the first non-empty batch, which claims again (params are gone).
+    if (StoreLifecycle.claim(spark, path, batchId, Seq("docs", "prefix", "pairs", "df"))) {
       if (batch.isEmpty) return
       setJoinShingles(batch, n, textCol, idCol)
         .groupBy("tok")
@@ -1960,7 +1947,7 @@ object Dedup {
       // a crashed rebuild's mixed docs/prefix/df must not be probed
       // against and LANDED (pairs written here are permanent) — the same
       // refusal probeSetJoinIndex applies
-      Similarity.requireNotInflight(spark, path)
+      StoreLifecycle.requireNotInflight(spark, path)
       requireSetJoinParams(spark, path, thresholdMilli, n)
       if (batch.isEmpty) return // nothing to probe or land
     }
@@ -1970,7 +1957,7 @@ object Dedup {
       thresholdMilli)
       .localCheckpoint() // probe consumers + two index writes
     def earlier(sub: String, cols: Seq[String], empty: => DataFrame): DataFrame =
-      if (Similarity.storeExists(spark, s"$path/$sub")) {
+      if (StoreLifecycle.storeExists(spark, s"$path/$sub")) {
         val raw = spark.read.parquet(s"$path/$sub")
         val e = if (raw.columns.contains("batch_id")) raw.filter(col("batch_id") < batchId) else raw
         e.select(cols.map(col): _*)
@@ -2029,7 +2016,7 @@ object Dedup {
       n: Int = 3,
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    Similarity.requireNotInflight(spark, path)
+    StoreLifecycle.requireNotInflight(spark, path)
     requireSetJoinParams(spark, path, thresholdMilli, n)
     setJoinDriftAuditCore(spark, path, batch, thresholdMilli, n, textCol, idCol)
   }
@@ -2118,7 +2105,7 @@ object Dedup {
       s"rebuildSetJoinIfDrifted: inflation parity is 10^6 ppm; a threshold below it " +
         s"($thresholdPpm) would rebuild on noise")
     import spark.implicits._
-    Similarity.requireNotInflight(spark, path)
+    StoreLifecycle.requireNotInflight(spark, path)
     // the store's own params, read once for the audit and the rebuild
     val (tMilli, nGram) = setJoinParams(spark, path)
     // 1-row bounded collect (the decision itself), never data-volume
@@ -2146,7 +2133,7 @@ object Dedup {
     * build (docs re-ordered under the fresh df, prefixes re-cut, df
     * replaced, tombstones cleared), and the original text is never
     * needed, which at 100 TB it may no longer be. Crash contract: the
-    * inflight marker ([[graft.ops.Similarity.markInflight]]) is written
+    * inflight marker ([[graft.ops.StoreLifecycle.markInflight]]) is written
     * before the first swap and cleared after the last, so probes and
     * audits REFUSE a store crashed mid-swap (new postings under the old
     * batch order — false negatives otherwise silent) instead of
@@ -2164,7 +2151,7 @@ object Dedup {
     val hasBatchDirs = docsRaw.columns.contains("batch_id")
     // live snapshot materialized up front: the swaps below must not
     // pull the rug from under their own input (retrainIvfIndex's move)
-    val live = Similarity.minusTombstones(spark, path, docsRaw, "id")
+    val live = StoreLifecycle.minusTombstones(spark, path, docsRaw, "id")
       .select("id", "otks")
       .localCheckpoint()
     val dfs = live
@@ -2182,26 +2169,26 @@ object Dedup {
       .localCheckpoint() // two subtree writes below
     def swap(df: DataFrame, sub: String): Unit =
       if (hasBatchDirs)
-        Similarity.rewriteDir(
+        StoreLifecycle.rewriteDir(
           spark, df.withColumn("batch_id", lit(-1L)), s"$path/$sub", Seq("batch_id"))
-      else Similarity.rewriteDir(spark, df, s"$path/$sub", Nil)
-    Similarity.markInflight(spark, path, "rebuildSetJoinIndex") // docs ↔ prefix ↔ df window
+      else StoreLifecycle.rewriteDir(spark, df, s"$path/$sub", Nil)
+    StoreLifecycle.markInflight(spark, path, "rebuildSetJoinIndex") // docs ↔ prefix ↔ df window
     swap(ordered.select("id", "otks", "n"), "docs")
     swap(setJoinPrefix(ordered), "prefix")
-    Similarity.rewriteDir(spark, dfs, s"$path/df", Nil)
+    StoreLifecycle.rewriteDir(spark, dfs, s"$path/df", Nil)
     // the rebuild physically dropped the tombstoned docs: spent
     // tombstones must die, or they would suppress a future re-insert
-    Similarity.clearTombstones(spark, path)
-    Similarity.clearInflight(spark, path)
+    StoreLifecycle.clearTombstones(spark, path)
+    StoreLifecycle.clearInflight(spark, path)
   }
 
   /** Physically drop tombstoned docs from both subtrees and clear the
     * tombstones — probe results unchanged by contract.
     */
   def compactSetJoinIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    Similarity.compactIndexDir(spark, path, "docs", "id")
-    Similarity.compactIndexDir(spark, path, "prefix", "id")
-    Similarity.clearTombstones(spark, path)
+    StoreLifecycle.compactIndexDir(spark, path, "docs", "id")
+    StoreLifecycle.compactIndexDir(spark, path, "prefix", "id")
+    StoreLifecycle.clearTombstones(spark, path)
   }
 
   /** EXACT single-token-edit join via the deletion neighborhood (the
@@ -2334,7 +2321,7 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id"): Unit = {
     val spark = corpus.sparkSession
-    Similarity.clearTombstones(spark, path)
+    StoreLifecycle.clearTombstones(spark, path)
     val toks = editTokens(corpus, textCol, idCol).localCheckpoint() // two writes
     toks.select("id", "tks", "n").write.mode("overwrite").parquet(s"$path/docs")
     editSignatures(toks).write.mode("overwrite").parquet(s"$path/sigs")
@@ -2395,7 +2382,7 @@ object Dedup {
       batch: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    Similarity.requireNotInflight(spark, path)
+    StoreLifecycle.requireNotInflight(spark, path)
     requireTokenEditParams(spark, path)
     val btoks = editTokens(batch, textCol, idCol).localCheckpoint() // sig + verify consumers
     tokenEditProbeCore(
@@ -2422,10 +2409,10 @@ object Dedup {
       batchIds: DataFrame,
       docsRaw: DataFrame,
       sigsRaw: DataFrame): DataFrame = {
-    val histDocs = Similarity
+    val histDocs = StoreLifecycle
       .minusTombstones(spark, path, docsRaw.select("id", "tks", "n"), "id")
       .join(batchIds, Seq("id"), "left_anti")
-    val histSigs = Similarity
+    val histSigs = StoreLifecycle
       .minusTombstones(spark, path, sigsRaw.select("id", "n", "sig"), "id")
       .join(batchIds, Seq("id"), "left_anti")
     val cand = bsigs
@@ -2459,13 +2446,9 @@ object Dedup {
     // (max_edit=1, sig_scheme) is content-independent, so even an empty batch 0 wipes
     // a previous run's store; otherwise batch 1 would validate against
     // stale params and silently merge two streams' corpora).
-    StoreLifecycle.claim(
-      spark,
-      path,
-      Seq("docs", "sigs", "pairs", "tombstones"),
-      batchId,
-      () => writeTokenEditParams(spark, path),
-      () => requireTokenEditParams(spark, path))
+    if (StoreLifecycle.claim(spark, path, batchId, Seq("docs", "sigs", "pairs")))
+      writeTokenEditParams(spark, path)
+    else requireTokenEditParams(spark, path)
     if (batch.isEmpty) return // nothing to probe or land
     val btoks = editTokens(batch, textCol, idCol).localCheckpoint()
     // hashed ONCE: the probe's join sides and the sigs write all read
@@ -2473,7 +2456,7 @@ object Dedup {
     // per-batch cost and must not run twice
     val bsigs = editSignatures(btoks).localCheckpoint()
     def earlier(sub: String, cols: Seq[String], empty: => DataFrame): DataFrame =
-      if (Similarity.storeExists(spark, s"$path/$sub")) {
+      if (StoreLifecycle.storeExists(spark, s"$path/$sub")) {
         val raw = spark.read.parquet(s"$path/$sub")
         val e = if (raw.columns.contains("batch_id")) raw.filter(col("batch_id") < batchId) else raw
         e.select(cols.map(col): _*)
@@ -2500,9 +2483,9 @@ object Dedup {
     * tombstones — probe results unchanged by contract.
     */
   def compactTokenEditIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    Similarity.compactIndexDir(spark, path, "docs", "id")
-    Similarity.compactIndexDir(spark, path, "sigs", "id")
-    Similarity.clearTombstones(spark, path)
+    StoreLifecycle.compactIndexDir(spark, path, "docs", "id")
+    StoreLifecycle.compactIndexDir(spark, path, "sigs", "id")
+    StoreLifecycle.clearTombstones(spark, path)
   }
 
   /** Multi-key blocking for ENTITY RESOLUTION — the classic record-linkage

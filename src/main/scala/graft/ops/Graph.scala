@@ -1111,15 +1111,12 @@ object Graph {
     pmod(hash(u, v), lit(n))
 
   /** Persist the store's bucket layout pin: hash-function version + count
-    * (a plain FS file — the [[graft.ops.Similarity.markInflight]] lesson:
+    * (a plain FS file — the [[graft.ops.StoreLifecycle.markInflight]] lesson:
     * a 1-row parquet would cost a whole Spark job per lifecycle call).
     */
   private def writeBucketing(
       spark: org.apache.spark.sql.SparkSession, path: String, n: Int): Unit =
-    Similarity.writeSmallFile(
-      hfs(spark, path),
-      new org.apache.hadoop.fs.Path(s"$path/bucketing"),
-      s"$bucketingVersion\n$n")
+    StoreLifecycle.writeSmallFile(spark, s"$path/bucketing", s"$bucketingVersion\n$n")
 
   /** The bucket count a store was laid out with — what every mutator and
     * census uses (never the compile-time default). A store without the
@@ -1130,11 +1127,8 @@ object Graph {
     */
   private[graft] def storeBuckets(
       spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val fs = hfs(spark, path)
-    val p = new org.apache.hadoop.fs.Path(s"$path/bucketing")
-    if (!fs.exists(p)) supportBuckets
-    else {
-      val lines = Similarity.readSmallFile(fs, p).trim.split("\n").map(_.trim)
+    StoreLifecycle.readSmallFile(spark, s"$path/bucketing").fold(supportBuckets) { pin =>
+      val lines = pin.trim.split("\n").map(_.trim)
       require(
         lines.length >= 2 && lines(0) == bucketingVersion,
         s"store at $path is bucketed with hash-function version '${lines.headOption.getOrElse("")}' " +
@@ -1156,10 +1150,10 @@ object Graph {
     * HASH-BUCKETED by [[supportBucket]] so churn batches rewrite only
     * the buckets holding touched edges — O(|delta|·avg-degree) write
     * cost, never O(|edges|)). Mutations commit through ONE staged tree
-    * whose rename is the atomic commit point ([[stageAndApply]]), with
-    * the [[graft.ops.Similarity.markInflight]] crash marker spanning the
+    * whose rename is the atomic commit point ([[graft.ops.StoreLifecycle.commit]]), with
+    * the [[graft.ops.StoreLifecycle.markInflight]] crash marker spanning the
     * apply window; reads refuse a mid-crash store, mutators SELF-REPAIR
-    * it ([[repairEdgeStore]] — re-running the interrupted op is the
+    * it ([[edgeRepair]] — re-running the interrupted op is the
     * documented and now-followable recovery). A full write replaces
     * everything and clears any stale marker or staged tree (the
     * [[graft.ops.Similarity.writePqIndex]] contract).
@@ -1169,27 +1163,22 @@ object Graph {
     require(buckets >= 1 && buckets <= 65536, s"buckets must be in [1, 65536], got $buckets")
     val spark = edges.sparkSession
     val und = undirectedEdges(edges).localCheckpoint()
-    Similarity.markInflight(spark, path, "writeEdgeStore")
-    Similarity.deleteDir(spark, s"$path/tombstones")
+    StoreLifecycle.markInflight(spark, path, "writeEdgeStore")
     // a full write really replaces EVERYTHING: the params pin too, so a
     // formerly stream-maintained path becomes a plain batch store whose
     // mutators work again (the writePqIndex contract) — and any staged
     // tree from a crashed mutation dies unapplied
-    Similarity.deleteDir(spark, s"$path/params")
-    Similarity.deleteDir(spark, s"$path/support_stamp")
-    Similarity.deleteDir(spark, s"$path/staged")
-    Similarity.deleteDir(spark, s"$path/staged.compacting")
-    Similarity.deleteDir(spark, s"$path/edges")
+    StoreLifecycle.wipe(spark, path, Seq("support_stamp", "edges"))
     writeBucketing(spark, path, buckets)
     und.write.mode("overwrite").parquet(s"$path/edges")
-    Similarity.rewriteDir(
+    StoreLifecycle.rewriteDir(
       spark,
       edgeSupport(und)
         .withColumn("bucket", supportBucket(col("u"), col("v"), buckets))
         .repartition(col("bucket")), // one file per bucket, not per task x bucket
       s"$path/support",
       Seq("bucket"))
-    Similarity.clearInflight(spark, path)
+    StoreLifecycle.clearInflight(spark, path)
   }
 
   /** Grow the edge store with a churn batch, maintaining support
@@ -1213,7 +1202,7 @@ object Graph {
     */
   def appendEdgeStore(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
-    repairEdgeStore(spark, path)
+    StoreLifecycle.repair(spark, path, edgeRepair)
     requireBatchBuilt(spark, path, "appendEdgeStore")
     val nb = storeBuckets(spark, path)
     val liveOld = liveEdges(spark, path).localCheckpoint()
@@ -1223,13 +1212,9 @@ object Graph {
     // delta and the flag loses no refusal)
     val deltaFlagged = {
       val d0 = undirectedEdges(batch).join(liveOld, Seq("u", "v"), "left_anti")
-      if (Similarity.storeExists(spark, s"$path/tombstones"))
-        d0.join(
-          spark.read.parquet(s"$path/tombstones")
-            .select(col("u"), col("v"), lit(1).as("__tomb")),
-          Seq("u", "v"),
-          "left")
-      else d0.withColumn("__tomb", lit(null).cast("int"))
+      StoreLifecycle.tombstones(spark, path, edgeTombstones).fold(
+        d0.withColumn("__tomb", lit(null).cast("int")))(t =>
+        d0.join(t.select(col("u"), col("v"), lit(1).as("__tomb")), Seq("u", "v"), "left"))
     }.localCheckpoint()
     // ONE decision read answers both "anything new?" and "any re-insert
     // of a tombstoned pair?" (two separate probes in round 16) — and its
@@ -1259,7 +1244,7 @@ object Graph {
         col("u"),
         col("v"),
         (coalesce(col("support"), lit(0L)) + coalesce(col("c"), lit(0L))).as("support"))
-    stageAndApply(spark, path, "appendEdgeStore", "edges", replaceTarget = false,
+    StoreLifecycle.commit(spark, path, "appendEdgeStore", "edges", replaceTarget = false,
       Some(delta), Seq(("support", withSupportBucket(supportNew, nb), touched)))
     }
   }
@@ -1293,21 +1278,17 @@ object Graph {
     val spark = batch.sparkSession
     import spark.implicits._
     val und = undirectedEdges(batch).localCheckpoint()
-    if (batchId == 0L || !Similarity.storeExists(spark, s"$path/params")) {
-      // wipe BEFORE the empty check (the StoreLifecycle rule): an empty
-      // batch 0 must still retire a previous run's store
-      Seq("edges", "support", "support_stamp", "tombstones", "staged",
-        "staged.compacting", "bucketing")
-        .foreach(d => Similarity.deleteDir(spark, s"$path/$d"))
-      Similarity.clearInflight(spark, path) // a fresh stream resolves a crashed run
-      Similarity.deleteDir(spark, s"$path/params")
+    // the claim wipes BEFORE the empty check (the StoreLifecycle rule): an
+    // empty batch 0 must still retire a previous run's store
+    if (StoreLifecycle.claim(
+        spark, path, batchId, Seq("edges", "support", "support_stamp", "bucketing"))) {
       if (und.isEmpty) return
       Seq("edges-stream").toDF("kind")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-      Similarity.markInflight(spark, path, "ingestEdgeBatch")
+      StoreLifecycle.markInflight(spark, path, "ingestEdgeBatch")
       writeBucketing(spark, path, supportBuckets)
       und.write.mode("overwrite").parquet(s"$path/edges/batch_id=$batchId")
-      Similarity.rewriteDir(
+      StoreLifecycle.rewriteDir(
         spark,
         edgeSupport(und)
           .withColumn("bucket", supportBucket(col("u"), col("v")))
@@ -1318,11 +1299,8 @@ object Graph {
       // staged apply as the support buckets (below, for every later
       // batch): reading it costs an open, never the full-support
       // max(as_of_batch) scan the round-16 layout paid per ingest
-      Similarity.writeSmallFile(
-        hfs(spark, path),
-        new org.apache.hadoop.fs.Path(s"$path/support_stamp"),
-        batchId.toString)
-      Similarity.clearInflight(spark, path)
+      StoreLifecycle.writeSmallFile(spark, s"$path/support_stamp", batchId.toString)
+      StoreLifecycle.clearInflight(spark, path)
       return
     }
     if (und.isEmpty) return // nothing to merge: store untouched
@@ -1332,7 +1310,7 @@ object Graph {
     // marker over a consistent store (clear it); the stamp read below
     // then always sees a post-apply value, so the retry's repair
     // contract holds through every window
-    repairEdgeStore(spark, path)
+    StoreLifecycle.repair(spark, path, edgeRepair)
     val nb = storeBuckets(spark, path)
     // the stamp decides whether this batch's credits already landed —
     // its swap rides the staged apply, so it is never half-true. A store
@@ -1340,13 +1318,12 @@ object Graph {
     // support table) refuses BY NAME rather than crashing on the missing
     // file: migrating it implicitly mid-mutation would mix pure and
     // stamped bucket schemas across a partial swap
-    val stampP = new org.apache.hadoop.fs.Path(s"$path/support_stamp")
-    if (!hfs(spark, path).exists(stampP))
+    val asOf = StoreLifecycle.readSmallFile(spark, s"$path/support_stamp").getOrElse(
       throw new IllegalStateException(
         s"stream edge store at $path predates the plain-file exactly-once stamp " +
           "(its stamp was an as_of_batch column) — restart the stream from batch 0 " +
-          "with a fresh checkpoint (the claim rebuilds the store under this layout)")
-    val asOf = Similarity.readSmallFile(hfs(spark, path), stampP).trim.toLong
+          "with a fresh checkpoint (the claim rebuilds the store under this layout)"))
+      .trim.toLong
     if (asOf >= batchId) return // support already post-N: nothing recounts
     val liveOld = spark.read.parquet(s"$path/edges")
       .filter(col("batch_id") =!= batchId) // a half-landed retry must not hide its own delta
@@ -1369,7 +1346,7 @@ object Graph {
         col("u"),
         col("v"),
         (coalesce(col("support"), lit(0L)) + coalesce(col("c"), lit(0L))).as("support"))
-    stageAndApply(spark, path, "ingestEdgeBatch", s"edges/batch_id=$batchId",
+    StoreLifecycle.commit(spark, path, "ingestEdgeBatch", s"edges/batch_id=$batchId",
       replaceTarget = true, Some(delta),
       Seq(("support", withSupportBucket(supportNew, nb), touched)),
       stamp = Some(batchId))
@@ -1385,7 +1362,7 @@ object Graph {
     */
   def removeFromEdgeStore(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
-    repairEdgeStore(spark, path)
+    StoreLifecycle.repair(spark, path, edgeRepair)
     requireBatchBuilt(spark, path, "removeFromEdgeStore")
     val nb = storeBuckets(spark, path)
     val liveOld = liveEdges(spark, path).localCheckpoint()
@@ -1408,7 +1385,7 @@ object Graph {
         col("u"),
         col("v"),
         (coalesce(col("support"), lit(0L)) - coalesce(col("c"), lit(0L))).as("support"))
-    stageAndApply(spark, path, "removeFromEdgeStore", "tombstones", replaceTarget = false,
+    StoreLifecycle.commit(spark, path, "removeFromEdgeStore", "tombstones", replaceTarget = false,
       Some(rem.coalesce(1)), Seq(("support", withSupportBucket(supportNew, nb), touched)))
     }
   }
@@ -1423,18 +1400,18 @@ object Graph {
     * compaction reorganizes storage, it never recounts.
     */
   def compactEdgeStore(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    repairEdgeStore(spark, path)
+    StoreLifecycle.repair(spark, path, edgeRepair)
     val raw = spark.read.parquet(s"$path/edges")
     if (raw.columns.contains("batch_id")) {
       // stream store: no tombstones by construction, so the fold is one
       // self-repairing rewriteDir swap under the marker
-      Similarity.markInflight(spark, path, "compactEdgeStore")
-      Similarity.rewriteDir(
+      StoreLifecycle.markInflight(spark, path, "compactEdgeStore")
+      StoreLifecycle.rewriteDir(
         spark,
         raw.select("u", "v").withColumn("batch_id", lit(-1L)),
         s"$path/edges",
         Seq("batch_id"))
-      Similarity.clearInflight(spark, path)
+      StoreLifecycle.clearInflight(spark, path)
     } else {
       // batch store: the tombstones clear rides the SAME staged apply as
       // the edges swap — the round-16 two-step (rewrite, then clear)
@@ -1442,7 +1419,7 @@ object Graph {
       // survived repair and refused later re-inserts of physically-gone
       // edges
       val live = liveEdges(spark, path).localCheckpoint()
-      stageAndApply(spark, path, "compactEdgeStore", "edges", replaceTarget = true,
+      StoreLifecycle.commit(spark, path, "compactEdgeStore", "edges", replaceTarget = true,
         Some(live), Nil, clearTombs = true)
     }
   }
@@ -1460,7 +1437,7 @@ object Graph {
     *
     * Crash posture: the op is NOT generically repairable (rolling the
     * relayout forward without its pin would leave layout and pin
-    * disagreeing — [[repairEdgeStore]] refuses with the re-run named);
+    * disagreeing — [[edgeRepair]] refuses with the re-run named);
     * instead the op itself recovers from every window, because the
     * relayout is content-preserving over (u, v, support) REGARDLESS of
     * the current layout: re-reading a half-old, all-old, or all-new
@@ -1475,24 +1452,19 @@ object Graph {
   def rebucketEdgeStore(
       spark: org.apache.spark.sql.SparkSession, path: String, buckets: Int): Unit = {
     require(buckets >= 1 && buckets <= 65536, s"buckets must be in [1, 65536], got $buckets")
-    val fs = hfs(spark, path)
-    Similarity.inflightOp(spark, path) match {
-      case None => ()
-      case Some(op) if op.contains("rebucketEdgeStore") => () // our own re-run IS the repair
-      case Some(_) => repairEdgeStore(spark, path)
-    }
-    Similarity.markInflight(spark, path, "rebucketEdgeStore")
+    // our own interrupted re-run is left for this run to finish
+    StoreLifecycle.repair(spark, path, edgeRepair, resuming = "rebucketEdgeStore")
+    StoreLifecycle.markInflight(spark, path, "rebucketEdgeStore")
     // a prior interrupted relayout: a COMPLETE tmp with the live dir gone
     // rolls forward (it holds the only copy of the content); anything
     // else is pre-swap garbage
-    rollForwardOrDrop(fs, s"$path/support")
-    val supDir = new org.apache.hadoop.fs.Path(s"$path/support")
+    StoreLifecycle.rollForwardOrDrop(spark, s"$path/support")
     require(
-      fs.exists(supDir),
+      StoreLifecycle.storeExists(spark, s"$path/support"),
       s"rebucketEdgeStore: $path has no support tree — rebuild with writeEdgeStore")
     val support = spark.read.parquet(s"$path/support")
     requireBucketedStore(support, path, "support", "writeEdgeStore")
-    Similarity.rewriteDir(
+    StoreLifecycle.rewriteDir(
       spark,
       support
         .select("u", "v", "support")
@@ -1501,12 +1473,8 @@ object Graph {
       s"$path/support",
       Seq("bucket"))
     writeBucketing(spark, path, buckets)
-    Similarity.clearInflight(spark, path)
+    StoreLifecycle.clearInflight(spark, path)
   }
-
-  /** The relayout ops' window cleaner — [[graft.ops.Similarity.rollForwardOrDrop]]. */
-  private def rollForwardOrDrop(fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit =
-    Similarity.rollForwardOrDrop(fs, dir)
 
   /** The store's read face: per-live-edge triangle support, refusing a
     * mid-crash store. Matches [[triangleSupport]] over the live edge set
@@ -1515,7 +1483,7 @@ object Graph {
     * so the table itself is pure (u, v, support) in every layout.
     */
   def readEdgeSupport(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    Similarity.requireNotInflight(spark, path)
+    StoreLifecycle.requireNotInflight(spark, path)
     spark.read.parquet(s"$path/support").select("u", "v", "support")
   }
 
@@ -1553,9 +1521,9 @@ object Graph {
     */
   def liveEdgesAsOf(
       spark: org.apache.spark.sql.SparkSession, path: String, batchId: Long): DataFrame = {
-    Similarity.requireNotInflight(spark, path)
+    StoreLifecycle.requireNotInflight(spark, path)
     require(
-      Similarity.storeExists(spark, s"$path/params"),
+      StoreLifecycle.storeExists(spark, s"$path/params"),
       s"liveEdgesAsOf: the edge store at $path is batch-built (no params pin) — " +
         "only stream stores carry per-batch generation lineage")
     spark.read.parquet(s"$path/edges")
@@ -1626,21 +1594,14 @@ object Graph {
     // only the stream claim has a second consumer (the gen-0 log) worth a
     // materialization; the plain batch write stays single-pass
     val labels = if (logBatch.isDefined) labels0.localCheckpoint() else labels0
-    Similarity.markInflight(spark, path, "writeCcStore")
+    StoreLifecycle.markInflight(spark, path, "writeCcStore")
     // a full write really replaces EVERYTHING, the stream pin included
     // (the writeEdgeStore contract): a later ingest batch re-claims the
     // root instead of appending to a replaced base — plus the generation
     // log and the node index, which no longer describe the replaced store
-    Similarity.deleteDir(spark, s"$path/params")
-    Similarity.deleteDir(spark, s"$path/cclog")
-    Similarity.deleteDir(spark, s"$path/cclog.compacting")
-    Similarity.deleteDir(spark, s"$path/cclog_folded")
-    Similarity.deleteDir(spark, s"$path/nodeidx")
-    Similarity.deleteDir(spark, s"$path/nodeidx.compacting")
-    Similarity.deleteDir(spark, s"$path/staged")
-    Similarity.deleteDir(spark, s"$path/staged.compacting")
+    StoreLifecycle.wipe(spark, path, Seq("cclog", "cclog_folded", "nodeidx"))
     writeBucketing(spark, path, buckets)
-    Similarity.rewriteDir(
+    StoreLifecycle.rewriteDir(
       spark,
       labels
         .withColumn("bucket", labelBucket(col("comp"), buckets))
@@ -1654,7 +1615,7 @@ object Graph {
         .select(lit("node").as("kind"), col("node").as("a"), col("comp").as("b"))
         .write.mode("overwrite").parquet(s"$path/cclog/batch_id=$n")
     }
-    Similarity.clearInflight(spark, path)
+    StoreLifecycle.clearInflight(spark, path)
   }
 
   /** OPT-IN build of the node-keyed secondary index ([[nodeBucket]]) a
@@ -1668,12 +1629,12 @@ object Graph {
     * [[writeCcStore]] retires it with the store.
     */
   def buildCcNodeIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    repairCcStore(spark, path)
+    StoreLifecycle.repair(spark, path, ccRepair)
     val nb = storeBuckets(spark, path)
     val labels = spark.read.parquet(s"$path/cclabels")
     requireBucketedStore(labels, path, "cclabels", "writeCcStore")
-    Similarity.markInflight(spark, path, "buildCcNodeIndex")
-    Similarity.rewriteDir(
+    StoreLifecycle.markInflight(spark, path, "buildCcNodeIndex")
+    StoreLifecycle.rewriteDir(
       spark,
       labels
         .select("node", "comp")
@@ -1681,13 +1642,13 @@ object Graph {
         .repartition(col("bucket")),
       s"$path/nodeidx",
       Seq("bucket"))
-    Similarity.clearInflight(spark, path)
+    StoreLifecycle.clearInflight(spark, path)
   }
 
   /** RESIZE the label store's bucket layout in place — the CC face of
     * [[rebucketEdgeStore]], with the same crash posture (content-
     * preserving, re-runnable from every window, generically unrepairable
-    * so [[repairCcStore]] refuses with the re-run named). Relays BOTH
+    * so [[ccRepair]] refuses with the re-run named). Relays BOTH
     * trees when the node index exists (labels by component hash, the
     * index by node hash — one shuffle each, zero re-solving); the remap
     * log is layout-independent and untouched, so as-of reads survive a
@@ -1697,21 +1658,17 @@ object Graph {
   def rebucketCcStore(
       spark: org.apache.spark.sql.SparkSession, path: String, buckets: Int): Unit = {
     require(buckets >= 1 && buckets <= 65536, s"buckets must be in [1, 65536], got $buckets")
-    val fs = hfs(spark, path)
-    Similarity.inflightOp(spark, path) match {
-      case None => ()
-      case Some(op) if op.contains("rebucketCcStore") => () // our own re-run IS the repair
-      case Some(_) => repairCcStore(spark, path)
-    }
-    Similarity.markInflight(spark, path, "rebucketCcStore")
-    rollForwardOrDrop(fs, s"$path/cclabels")
-    rollForwardOrDrop(fs, s"$path/nodeidx")
+    // our own interrupted re-run is left for this run to finish
+    StoreLifecycle.repair(spark, path, ccRepair, resuming = "rebucketCcStore")
+    StoreLifecycle.markInflight(spark, path, "rebucketCcStore")
+    StoreLifecycle.rollForwardOrDrop(spark, s"$path/cclabels")
+    StoreLifecycle.rollForwardOrDrop(spark, s"$path/nodeidx")
     require(
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/cclabels")),
+      StoreLifecycle.storeExists(spark, s"$path/cclabels"),
       s"rebucketCcStore: $path has no cclabels tree — rebuild with writeCcStore")
     val labels = spark.read.parquet(s"$path/cclabels")
     requireBucketedStore(labels, path, "cclabels", "writeCcStore")
-    Similarity.rewriteDir(
+    StoreLifecycle.rewriteDir(
       spark,
       labels
         .select("node", "comp")
@@ -1719,8 +1676,8 @@ object Graph {
         .repartition(col("bucket")),
       s"$path/cclabels",
       Seq("bucket"))
-    if (Similarity.storeExists(spark, s"$path/nodeidx"))
-      Similarity.rewriteDir(
+    if (StoreLifecycle.storeExists(spark, s"$path/nodeidx"))
+      StoreLifecycle.rewriteDir(
         spark,
         spark.read.parquet(s"$path/nodeidx")
           .select("node", "comp")
@@ -1729,7 +1686,7 @@ object Graph {
         s"$path/nodeidx",
         Seq("bucket"))
     writeBucketing(spark, path, buckets)
-    Similarity.clearInflight(spark, path)
+    StoreLifecycle.clearInflight(spark, path)
   }
 
   /** Fold an edge-ADDITION batch into the label store incrementally.
@@ -1762,7 +1719,7 @@ object Graph {
   private def appendCcInternal(
       batch: DataFrame, path: String, logBatch: Option[Long]): Unit = {
     val spark = batch.sparkSession
-    repairCcStore(spark, path)
+    StoreLifecycle.repair(spark, path, ccRepair)
     // NOTE: unlike the edge mutators, the cc mutators run WITH adaptive
     // execution — their hot kernel is the clusterPairs star contraction
     // over potentially corpus-sized induced subgraphs, exactly the shape
@@ -1816,8 +1773,8 @@ object Graph {
     // the evolution, so truncate it (idempotent — a crash right after
     // leaves exactly the truncated state this mutation implies)
     if (logBatch.isEmpty) {
-      Similarity.deleteDir(spark, s"$path/cclog")
-      Similarity.deleteDir(spark, s"$path/cclog_folded")
+      StoreLifecycle.deleteDir(spark, s"$path/cclog")
+      StoreLifecycle.deleteDir(spark, s"$path/cclog_folded")
     }
     val content = labels
       .filter(col("bucket").isin(touched: _*)) // prunes on the PARTITION column
@@ -1826,7 +1783,7 @@ object Graph {
       .unionAll(newNodes)
     val trees = Seq(
       ("cclabels", content.withColumn("bucket", labelBucket(col("comp"), nb)), touched)) ++
-      (if (!Similarity.storeExists(spark, s"$path/nodeidx")) Nil
+      (if (!StoreLifecycle.storeExists(spark, s"$path/nodeidx")) Nil
        else {
          // the changed rows are exactly the remapped components' rows plus
          // the new nodes — their NODE buckets are the secondary index's
@@ -1854,7 +1811,7 @@ object Graph {
         .unionAll(
           newNodes.select(lit("node").as("kind"), col("node").as("a"), col("comp").as("b")))
     }
-    stageAndApply(spark, path, "appendCcStore",
+    StoreLifecycle.commit(spark, path, "appendCcStore",
       logBatch.map(n => s"cclog/batch_id=$n").getOrElse(""), replaceTarget = true,
       logDelta, trees)
   }
@@ -1890,7 +1847,7 @@ object Graph {
     */
   def removeFromCcStore(removed: DataFrame, liveAfter: DataFrame, path: String): Unit = {
     val spark = removed.sparkSession
-    repairCcStore(spark, path)
+    StoreLifecycle.repair(spark, path, ccRepair)
     // AQE stays ON here (see appendCcInternal): the induced-subgraph
     // re-solve is corpus-shaped work
     val rem = undirectedEdges(removed).localCheckpoint()
@@ -1974,7 +1931,7 @@ object Graph {
       .unionAll(isolated.select("node", "comp"))
     val trees = Seq(
       ("cclabels", content.withColumn("bucket", labelBucket(col("comp"), nb)), touched)) ++
-      (if (!Similarity.storeExists(spark, s"$path/nodeidx")) Nil
+      (if (!StoreLifecycle.storeExists(spark, s"$path/nodeidx")) Nil
        else {
          // every changed row's node is a touched-component member, so the
          // secondary index's write set is their node buckets
@@ -1993,9 +1950,9 @@ object Graph {
     // a removal cannot be replayed from remap pairs (splits re-assign
     // labels wholesale), so it truncates the generation log: as-of reads
     // refuse afterwards instead of replaying a log that stopped being true
-    Similarity.deleteDir(spark, s"$path/cclog")
-    Similarity.deleteDir(spark, s"$path/cclog_folded")
-    stageAndApply(spark, path, "removeFromCcStore", "", replaceTarget = false,
+    StoreLifecycle.deleteDir(spark, s"$path/cclog")
+    StoreLifecycle.deleteDir(spark, s"$path/cclog_folded")
+    StoreLifecycle.commit(spark, path, "removeFromCcStore", "", replaceTarget = false,
       None, trees)
   }
 
@@ -2013,7 +1970,7 @@ object Graph {
       nodes: DataFrame,
       labels: DataFrame,
       nb: Int): DataFrame =
-    if (Similarity.storeExists(spark, s"$path/nodeidx")) {
+    if (StoreLifecycle.storeExists(spark, s"$path/nodeidx")) {
       val nodeBuckets = nodes
         .select(nodeBucket(col("node"), nb).as("b"))
         .distinct()
@@ -2038,7 +1995,7 @@ object Graph {
     * MONOTONE and IDEMPOTENT — re-delivering an already-merged batch
     * finds every edge's endpoints sharing a label (empty remap, no new
     * nodes) and leaves the store untouched byte-for-byte, and a crash
-    * mid-apply rolls forward via [[repairCcStore]]'s staged protocol
+    * mid-apply rolls forward via [[ccRepair]]'s staged protocol
     * before the retry re-merges — where a re-credited support count
     * would double. The asymmetry is the design note: streams
     * maintaining COUNTS must derive retry state (a stamp); streams
@@ -2051,14 +2008,10 @@ object Graph {
   def ingestCcBatch(batch: DataFrame, path: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    if (batchId == 0L || !Similarity.storeExists(spark, s"$path/params")) {
-      // wipe BEFORE the empty check (the StoreLifecycle rule): an empty
-      // batch 0 must still retire a previous run's store
-      Seq("cclabels", "nodeidx", "nodeidx.compacting", "cclog", "cclog.compacting",
-        "cclog_folded", "bucketing",
-        "staged", "staged.compacting", "cclabels.compacting", "params")
-        .foreach(d => Similarity.deleteDir(spark, s"$path/$d"))
-      Similarity.clearInflight(spark, path) // a fresh stream resolves a crashed run
+    // the claim wipes BEFORE the empty check (the StoreLifecycle rule): an
+    // empty batch 0 must still retire a previous run's store
+    if (StoreLifecycle.claim(
+        spark, path, batchId, Seq("cclabels", "nodeidx", "cclog", "cclog_folded", "bucketing"))) {
       if (undirectedEdges(batch).isEmpty) return
       // the pin lands AFTER the write (which deletes params by the
       // full-write contract): a crash between the two leaves a pinless
@@ -2106,17 +2059,15 @@ object Graph {
     */
   def readCcLabelsAsOf(
       spark: org.apache.spark.sql.SparkSession, path: String, batchId: Long): DataFrame = {
-    Similarity.requireNotInflight(spark, path)
+    StoreLifecycle.requireNotInflight(spark, path)
     require(
-      Similarity.storeExists(spark, s"$path/cclog"),
+      StoreLifecycle.storeExists(spark, s"$path/cclog"),
       s"readCcLabelsAsOf: the label store at $path keeps no generation log — only " +
         "ingestCcBatch-maintained stores do, and a batch append or a removal truncates " +
         "it (merges fold labels in place and splits re-assign them, so history is not " +
         "reconstructable from the live table)")
-    val fs = hfs(spark, path)
-    val foldPin = new org.apache.hadoop.fs.Path(s"$path/cclog_folded")
-    if (fs.exists(foldPin)) {
-      val folded = Similarity.readSmallFile(fs, foldPin).trim.toLong
+    StoreLifecycle.readSmallFile(spark, s"$path/cclog_folded").foreach { pin =>
+      val folded = pin.trim.toLong
       require(
         batchId >= folded,
         s"readCcLabelsAsOf: generations <= $folded of $path were folded by compactCcLog " +
@@ -2164,8 +2115,8 @@ object Graph {
     *
     * Crash posture: the fold pin lands BEFORE the tree swap, so every
     * window is conservative — pin-without-fold only over-refuses
-    * below-pin reads; the swap itself is [[graft.ops.Similarity.rewriteDir]]
-    * under the marker, and [[repairCcStore]] rolls a complete tmp
+    * below-pin reads; the swap itself is [[graft.ops.StoreLifecycle.rewriteDir]]
+    * under the marker, and [[ccRepair]] rolls a complete tmp
     * forward. Scale shape: one replay of the prefix (O(log n)
     * contraction over its remaps) + one partitioned rewrite of the log —
     * rows bounded by |nodes| + Σ later deltas, never the corpus graph.
@@ -2173,21 +2124,19 @@ object Graph {
   def compactCcLog(
       spark: org.apache.spark.sql.SparkSession, path: String, upTo: Long): Unit = {
     require(upTo >= 0, s"upTo must be >= 0, got $upTo")
-    repairCcStore(spark, path)
+    StoreLifecycle.repair(spark, path, ccRepair)
     require(
-      Similarity.storeExists(spark, s"$path/cclog"),
+      StoreLifecycle.storeExists(spark, s"$path/cclog"),
       s"compactCcLog: the label store at $path keeps no generation log")
-    val fs = hfs(spark, path)
-    val foldPin = new org.apache.hadoop.fs.Path(s"$path/cclog_folded")
-    if (fs.exists(foldPin)) {
-      val prior = Similarity.readSmallFile(fs, foldPin).trim.toLong
+    StoreLifecycle.readSmallFile(spark, s"$path/cclog_folded").foreach { pin =>
+      val prior = pin.trim.toLong
       require(
         upTo >= prior,
         s"compactCcLog: $path is already folded through generation $prior — a fold can " +
           s"only move forward (got $upTo); resolution below a fold point is gone")
     }
-    Similarity.markInflight(spark, path, "compactCcLog")
-    rollForwardOrDrop(fs, s"$path/cclog")
+    StoreLifecycle.markInflight(spark, path, "compactCcLog")
+    StoreLifecycle.rollForwardOrDrop(spark, s"$path/cclog")
     val log = spark.read.parquet(s"$path/cclog")
     val folded = replayCcLog(log.filter(col("batch_id") <= upTo))
       .select(lit("node").as("kind"), col("node").as("a"), col("comp").as("b"))
@@ -2196,9 +2145,9 @@ object Graph {
     val rest = log.filter(col("batch_id") > upTo)
       .select(col("kind"), col("a"), col("b"), col("batch_id"))
       .localCheckpoint()
-    Similarity.writeSmallFile(fs, foldPin, upTo.toString)
-    Similarity.rewriteDir(spark, folded.unionAll(rest), s"$path/cclog", Seq("batch_id"))
-    Similarity.clearInflight(spark, path)
+    StoreLifecycle.writeSmallFile(spark, s"$path/cclog_folded", upTo.toString)
+    StoreLifecycle.rewriteDir(spark, folded.unionAll(rest), s"$path/cclog", Seq("batch_id"))
+    StoreLifecycle.clearInflight(spark, path)
   }
 
   /** The label store's read face, refusing a mid-crash store. Matches
@@ -2207,7 +2156,7 @@ object Graph {
     * live set) — the invariant the spec and driver rows pin.
     */
   def readCcLabels(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    Similarity.requireNotInflight(spark, path)
+    StoreLifecycle.requireNotInflight(spark, path)
     spark.read.parquet(s"$path/cclabels").select("node", "comp")
   }
 
@@ -2225,74 +2174,31 @@ object Graph {
       .toSeq
       .sorted
 
-  /** The label store's repair, run by every mutator first — the
-    * edge-store protocol on one tree: a COMMITTED staged tree rolls
-    * forward (completing the crashed mutation), an uncommitted tmp is
-    * discarded (the mutation never happened), a full write's COMPLETE
-    * `.compacting` swap rolls forward (its `_SUCCESS` is the
-    * completeness witness — a half-written tmp must never be promoted
-    * to live), and the then-consistent store has its marker cleared so
-    * the caller's own work proceeds. Every cc mutation is idempotent
-    * (a re-merged append remaps nothing; a re-run removal re-solves to
-    * the same labels), so re-running the interrupted op is always the
-    * complete recovery. The ONE unrepairable marker is an interrupted
-    * [[writeCcStore]] — a full rebuild of an EXISTING store that never
-    * committed cannot be finished by an incremental mutator (proceeding
-    * against the old base would silently discard the rebuild), so only
-    * re-running the rebuild recovers, stated in the refusal. Readers
-    * still refuse any marker mid-apply.
+  /** The label store's [[graft.ops.StoreLifecycle.repair]], run by every
+    * mutator first. Every cc mutation is idempotent (a re-merged append
+    * remaps nothing; a re-run removal re-solves to the same labels), so
+    * re-running the interrupted op is always the complete recovery. An
+    * interrupted [[writeCcStore]] refuses — a full rebuild of an EXISTING
+    * store that never committed cannot be finished by an incremental
+    * mutator (proceeding against the old base would silently discard the
+    * rebuild) — and so does an interrupted [[rebucketCcStore]] (a generic
+    * roll-forward would promote the relayout without its pin). A lost
+    * live dir DROPS its incomplete twin, correct for all three trees
+    * (unlike the edge store's, where a lost live dir means lost data):
+    * cclabels is only full-rewritten under refusing markers, a lost
+    * nodeidx degrades to the documented unindexed fallback, and a lost
+    * cclog makes as-of reads refuse — conservative, never wrong.
     */
-  private def repairCcStore(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = hfs(spark, path)
-    Similarity.inflightOp(spark, path) match {
-      case None =>
-        Similarity.deleteDir(spark, s"$path/staged.compacting")
-      case Some(op) if op.contains("writeCcStore") =>
-        throw new IllegalStateException(
-          s"cc label store at $path has an interrupted 'writeCcStore' (inflight marker " +
-            "present) — a full rebuild is not incrementally repairable; re-run " +
-            "writeCcStore to completion")
-      case Some(op) if op.contains("rebucketCcStore") =>
-        // see repairEdgeStore: a generic roll-forward would promote the
-        // relayout without its pin — only the re-run knows the target
-        throw new IllegalStateException(
-          s"cc label store at $path has an interrupted 'rebucketCcStore' — re-run " +
-            "rebucketCcStore to completion (content-preserving, re-runnable from every " +
-            "crash window; other mutators cannot know its target layout)")
-      case Some(_) =>
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/staged")))
-          applyStaged(spark, path)
-        Similarity.deleteDir(spark, s"$path/staged.compacting")
-        // drop-on-incomplete is CORRECT for all three trees (unlike the
-        // edge store's edges/support, where a lost live dir means lost
-        // data): cclabels is only full-rewritten under refusing markers
-        // (writeCcStore/rebucketCcStore), a lost nodeidx degrades to the
-        // documented unindexed fallback, and a lost cclog makes as-of
-        // reads refuse — conservative, never wrong
-        Seq("cclabels", "nodeidx", "cclog").foreach(sub =>
-          Similarity.rollForwardOrDrop(fs, s"$path/$sub"))
-        Similarity.clearInflight(spark, path)
-    }
-  }
-
-  // ---- the edge store's staged commit protocol ----
-  //
-  // Every incremental mutation spans two trees (edges-or-tombstones AND
-  // the bucketed support), so it commits through ONE staged directory:
-  //   1. the op's full output lands under `staged.compacting`
-  //      (edges_delta/, support/bucket=K/ for every touched bucket —
-  //      emptied buckets as explicit empty dirs — and an `op` manifest);
-  //   2. `rename(staged.compacting, staged)` is the ATOMIC COMMIT POINT;
-  //   3. the apply phase folds the staged tree into the live dirs
-  //      (file-moves and per-bucket swaps, each idempotent) and deletes it.
-  // A crash before (2) leaves the store untouched (tmp is garbage); a
-  // crash after it leaves a committed staged tree any later mutator rolls
-  // forward. Hence the self-repair invariant the mutators rely on:
-  // MARKER WITHOUT A STAGED TREE ⇒ THE STORE IS CONSISTENT.
-
-  private def hfs(spark: org.apache.spark.sql.SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val ccRepair = StoreLifecycle.Repair(
+    "cc label store",
+    Seq(
+      "writeCcStore" ->
+        "a full rebuild is not incrementally repairable; re-run writeCcStore to completion",
+      "rebucketCcStore" ->
+        ("re-run rebucketCcStore to completion (content-preserving, re-runnable from every " +
+          "crash window; other mutators cannot know its target layout)")),
+    Seq("cclabels", "nodeidx", "cclog"),
+    lostFails = false)
 
   /** Run the DELTA-BOUNDED tail of an incremental edge-store mutation
     * without adaptive execution and at a shuffle width sized from the
@@ -2387,208 +2293,39 @@ object Graph {
       .select("u", "v", "support")
   }
 
-  /** Steps 1-3 of the protocol above: build, commit, apply. `edgesDelta`
-    * (when present) lands under `$path/$deltaTarget` — appended
-    * file-by-file (`replaceTarget` false: the batch store's
-    * `edges`/`tombstones` grow), or as a whole-directory swap
-    * (`replaceTarget` true: the stream store's `edges/batch_id=N`
-    * generation, where a retry must replace its own half-landed files;
-    * also the batch compaction's flat `edges` rewrite). `bucketed` is a
-    * list of `(sub, content, touched)` trees — the new content of the
-    * touched buckets of each `$path/$sub`, WITH the bucket column
-    * already attached; every touched bucket is staged even when its new
-    * content is empty, so the apply can retire emptied buckets (with ONE
-    * schema-bearing empty file seeded, so a mutation emptying every
-    * populated bucket never leaves a tree parquet schema inference
-    * cannot read). The CC label store reuses the whole protocol with
-    * subs `cclabels` + `nodeidx` and its remap log as the delta tree.
-    * `stamp` (stream stores) swaps the plain-file exactly-once stamp in
-    * the same apply; `clearTombs` (batch compaction) deletes the
-    * tombstones inside the apply, so no crash window can separate the
-    * edges rewrite from the tombstone clear.
+  /** The edge store's [[graft.ops.StoreLifecycle.repair]], run by every
+    * incremental mutator first: a committed staged tree rolls forward, a
+    * [[compactEdgeStore]] `.compacting` swap rolls forward, and the
+    * then-consistent store has its marker cleared. An interrupted
+    * [[writeEdgeStore]] refuses: a full rebuild deletes and rewrites
+    * several trees with no staging, so only re-running it recovers. An
+    * interrupted [[rebucketEdgeStore]] refuses too: a generic roll-forward
+    * would promote a completed relayout tree WITHOUT updating the
+    * bucketing pin, and only the relayout op (which carries the target
+    * count and re-runs content-preservingly from any window) can finish
+    * it. A live `edges`/`support` dir lost beside an incomplete twin is
+    * lost data, so it refuses rather than drops.
     */
-  private def stageAndApply(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      op: String,
-      deltaTarget: String,
-      replaceTarget: Boolean,
-      edgesDelta: Option[DataFrame],
-      bucketed: Seq[(String, DataFrame, Seq[Int])],
-      stamp: Option[Long] = None,
-      clearTombs: Boolean = false): Unit = {
-    val fs = hfs(spark, path)
-    val tmp = s"$path/staged.compacting"
-    Similarity.deleteDir(spark, tmp)
-    edgesDelta.foreach(_.write.mode("overwrite").parquet(s"$tmp/edges_delta"))
-    bucketed.foreach { case (sub, df, touched) =>
-      df
-        // one shuffle on the partition column so each bucket lands as ONE
-        // file — a plain partitionBy write emits a file per (task, bucket)
-        // pair, and 32 tasks x 64 buckets of tiny files taxes every later
-        // pruned read (measured 2-3x on the store rows at sf0.1)
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$tmp/$sub")
-      var schemaSeeded = false
-      touched.foreach { b =>
-        val d = new org.apache.hadoop.fs.Path(s"$tmp/$sub/bucket=$b")
-        if (!fs.exists(d)) {
-          // emptied bucket: swap an empty dir in — but seed the FIRST one
-          // with a schema-bearing empty parquet (limit 0 collapses to an
-          // empty relation, nothing evaluates), so a mutation emptying
-          // every populated bucket still leaves a readable tree
-          if (!schemaSeeded) {
-            df.drop("bucket").limit(0).write.parquet(d.toString)
-            schemaSeeded = true
-          } else fs.mkdirs(d)
-        }
-      }
-    }
-    stamp.foreach(n =>
-      Similarity.writeSmallFile(fs, new org.apache.hadoop.fs.Path(s"$tmp/stamp"), n.toString))
-    Similarity.writeSmallFile(
-      fs,
-      new org.apache.hadoop.fs.Path(s"$tmp/op"),
-      s"$op\n$deltaTarget\n${if (replaceTarget) "replace" else "append"}\n" +
-        s"${bucketed.map(_._1).mkString(",")}\n${if (clearTombs) "clear_tombstones" else "-"}")
-    Similarity.markInflight(spark, path, op) // refuse probes through the apply window
-    require(
-      fs.rename(
-        new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$path/staged")),
-      s"staged commit rename $tmp -> $path/staged failed")
-    applyStaged(spark, path)
-    Similarity.clearInflight(spark, path)
-  }
+  private val edgeRepair = StoreLifecycle.Repair(
+    "edge store",
+    Seq(
+      "writeEdgeStore" ->
+        ("a full rebuild stages nothing, so its partial state is not incrementally " +
+          "repairable; re-run writeEdgeStore to completion"),
+      "rebucketEdgeStore" ->
+        ("re-run rebucketEdgeStore to completion (the relayout is content-preserving and " +
+          "re-runnable from every crash window; other mutators cannot know its target " +
+          "layout)")),
+    Seq("edges", "support"),
+    lostFails = true)
 
-  /** Fold a COMMITTED staged tree into the live dirs; idempotent, so a
-    * crash anywhere inside re-applies cleanly on the next call. Appended
-    * delta files keep their job-unique part names (a moved file vanishes
-    * from the staged side — re-runs move only the remainder); a replace
-    * target is delete-then-rename (a re-run after the delete just
-    * renames); each support bucket is delete-then-rename likewise.
-    */
-  private def applyStaged(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = hfs(spark, path)
-    val staged = s"$path/staged"
-    val manifest = Similarity.readSmallFile(fs, new org.apache.hadoop.fs.Path(s"$staged/op"))
-    val lines = manifest.split("\n", 5)
-    val (deltaTarget, mode) = (lines(1), lines(2))
-    // line 4: comma-joined bucketed subs — absent (a legacy 3-line
-    // manifest) means the original single "support" tree; explicitly
-    // empty (the compaction path) means none
-    val bucketSubs: Seq[String] =
-      if (lines.length <= 3) Seq("support")
-      else lines(3).split(",").filter(_.nonEmpty).toSeq
-    val flags = if (lines.length > 4) lines(4) else "-"
-    val deltaDir = new org.apache.hadoop.fs.Path(s"$staged/edges_delta")
-    if (fs.exists(deltaDir)) {
-      val target = new org.apache.hadoop.fs.Path(s"$path/$deltaTarget")
-      if (mode == "replace") {
-        if (fs.exists(target)) fs.delete(target, true)
-        require(fs.rename(deltaDir, target), s"apply rename $deltaDir -> $target failed")
-      } else {
-        if (!fs.exists(target)) fs.mkdirs(target)
-        fs.listStatus(deltaDir)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .foreach { f =>
-            val dst = new org.apache.hadoop.fs.Path(target, f.getPath.getName)
-            require(fs.rename(f.getPath, dst), s"apply move ${f.getPath} -> $dst failed")
-          }
-        fs.delete(deltaDir, true)
-      }
-    }
-    bucketSubs.foreach { bucketSub =>
-      val supDir = new org.apache.hadoop.fs.Path(s"$staged/$bucketSub")
-      if (fs.exists(supDir)) {
-        if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/$bucketSub")))
-          fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/$bucketSub"))
-        fs.listStatus(supDir)
-          .filter(d => d.isDirectory && d.getPath.getName.startsWith("bucket="))
-          .foreach { d =>
-            val dst = new org.apache.hadoop.fs.Path(s"$path/$bucketSub/${d.getPath.getName}")
-            if (fs.exists(dst)) fs.delete(dst, true)
-            require(fs.rename(d.getPath, dst), s"apply swap ${d.getPath} -> $dst failed")
-          }
-        fs.delete(supDir, true)
-      }
-    }
-    // the stream store's exactly-once stamp swaps inside the same apply
-    val stampFile = new org.apache.hadoop.fs.Path(s"$staged/stamp")
-    if (fs.exists(stampFile)) {
-      val dst = new org.apache.hadoop.fs.Path(s"$path/support_stamp")
-      if (fs.exists(dst)) fs.delete(dst, true)
-      require(fs.rename(stampFile, dst), s"apply stamp swap -> $dst failed")
-    }
-    if (flags.contains("clear_tombstones")) Similarity.clearTombstones(spark, path)
-    Similarity.deleteDir(spark, staged)
-  }
-
-  /** Entry-point repair every incremental mutator runs first — the
-    * followable form of "re-run the interrupted op": a committed staged
-    * tree rolls forward (completing the crashed mutation), an
-    * uncommitted tmp is discarded (the crashed mutation never happened),
-    * a [[compactEdgeStore]] `.compacting` swap rolls forward, and the
-    * then-consistent store has its marker cleared, so the caller's own
-    * work proceeds. The ONE unrepairable marker is an interrupted
-    * [[writeEdgeStore]]: a full rebuild deletes and rewrites several
-    * trees with no staging, so only re-running the rebuild itself
-    * recovers — stated in the refusal instead of a dead-end loop.
-    */
-  private def repairEdgeStore(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = hfs(spark, path)
-    Similarity.inflightOp(spark, path) match {
-      case None =>
-        // no marker ⇒ any tmp is pre-mark garbage from a crashed build
-        Similarity.deleteDir(spark, s"$path/staged.compacting")
-      case Some(op) if op.contains("writeEdgeStore") =>
-        throw new IllegalStateException(
-          s"edge store at $path has an interrupted 'writeEdgeStore' (inflight marker " +
-            "present) — a full rebuild stages nothing, so its partial state is not " +
-            "incrementally repairable; re-run writeEdgeStore to completion")
-      case Some(op) if op.contains("rebucketEdgeStore") =>
-        // the generic roll-forward below would promote a completed
-        // relayout tree WITHOUT updating the bucketing pin — wrong layout
-        // under the old pin; only the relayout op itself (which carries
-        // the target count and re-runs content-preservingly from any
-        // window) can finish this
-        throw new IllegalStateException(
-          s"edge store at $path has an interrupted 'rebucketEdgeStore' — re-run " +
-            "rebucketEdgeStore to completion (the relayout is content-preserving and " +
-            "re-runnable from every crash window; other mutators cannot know its target " +
-            "layout)")
-      case Some(_) =>
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/staged")))
-          applyStaged(spark, path)
-        Similarity.deleteDir(spark, s"$path/staged.compacting")
-        // compactEdgeStore's rewriteDir window (and a legacy support
-        // swap): a live dir missing with a COMPLETE .compacting tree
-        // (its `_SUCCESS` is the completeness witness) rolls forward; a
-        // tmp beside a live dir, or a half-written tmp, is pre-swap
-        // garbage that must never be promoted
-        Seq("edges", "support").foreach { sub =>
-          val live = new org.apache.hadoop.fs.Path(s"$path/$sub")
-          val tmp = new org.apache.hadoop.fs.Path(s"$path/$sub.compacting")
-          if (fs.exists(tmp)) {
-            if (!fs.exists(live) &&
-              fs.exists(new org.apache.hadoop.fs.Path(s"$path/$sub.compacting/_SUCCESS")))
-              require(fs.rename(tmp, live), s"rolling forward $tmp -> $live failed")
-            else if (fs.exists(live)) fs.delete(tmp, true)
-            else throw new IllegalStateException(
-              s"edge store at $path lost $sub mid-rewrite and the .compacting tree is " +
-                "incomplete — rebuild with writeEdgeStore")
-          }
-        }
-        Similarity.clearInflight(spark, path)
-    }
-  }
+  /** The edge store tombstones removed `(u, v)` pairs. */
+  private val edgeTombstones = "u bigint, v bigint"
 
   private def liveEdges(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     val e = spark.read.parquet(s"$path/edges")
-    if (Similarity.storeExists(spark, s"$path/tombstones"))
-      e.join(spark.read.parquet(s"$path/tombstones"), Seq("u", "v"), "left_anti")
-    else e
+    StoreLifecycle.tombstones(spark, path, edgeTombstones)
+      .fold(e)(t => e.join(t, Seq("u", "v"), "left_anti"))
   }
 
   /** A params pin marks a STREAM-maintained store ([[ingestEdgeBatch]]);
@@ -2599,7 +2336,7 @@ object Graph {
   private def requireBatchBuilt(
       spark: org.apache.spark.sql.SparkSession, path: String, what: String): Unit =
     require(
-      !Similarity.storeExists(spark, s"$path/params"),
+      !StoreLifecycle.storeExists(spark, s"$path/params"),
       s"$what: the edge store at $path is stream-maintained (params pin present) — " +
         "route additions through ingestEdgeBatch; removals need a batch-built store")
 

@@ -676,7 +676,7 @@ object Multimodal {
     */
   def writeMediaIndex(media: DataFrame, path: String): Unit = {
     val spark = media.sparkSession
-    Similarity.clearTombstones(spark, path)
+    StoreLifecycle.clearTombstones(spark, path)
     mediaFingerprints(media)
       .write.mode("overwrite").parquet(s"$path/fps")
   }
@@ -724,7 +724,7 @@ object Multimodal {
       maxBucket: Int = 1000): DataFrame =
     fpMatches(
       fps,
-      Similarity.minusTombstones(spark, path, spark.read.parquet(s"$path/fps"), "doc_id"),
+      StoreLifecycle.minusTombstones(spark, path, spark.read.parquet(s"$path/fps"), "doc_id"),
       maxHamming,
       maxBucket)
 
@@ -733,15 +733,15 @@ object Multimodal {
     * in-batch keep-list when no history has been built yet).
     */
   def mediaIndexExists(spark: SparkSession, path: String): Boolean =
-    Similarity.storeExists(spark, s"$path/fps")
+    StoreLifecycle.storeExists(spark, s"$path/fps")
 
   /** Physically drop tombstoned items' fingerprints and clear the
     * tombstones — probe results unchanged by contract (tmp-and-swap, the
     * gram/LSH/IVF/PQ recipe).
     */
   def compactMediaIndex(spark: SparkSession, path: String): Unit = {
-    Similarity.compactIndexDir(spark, path, "fps", "doc_id")
-    Similarity.clearTombstones(spark, path)
+    StoreLifecycle.compactIndexDir(spark, path, "fps", "doc_id")
+    StoreLifecycle.clearTombstones(spark, path)
   }
 
   /** Streaming maintenance round for the media index — near-dup media
@@ -776,14 +776,11 @@ object Multimodal {
       maxHamming: Int = 3,
       maxBucket: Int = 1000): Unit = {
     val spark = batch.sparkSession
-    // Wipe BEFORE the empty check (the StoreLifecycle rule): an empty
+    // Claim BEFORE the empty check (the StoreLifecycle rule): an empty
     // batch 0 must still retire a previous run's fingerprints, or batch 1
-    // would dedup against the dead run's media.
-    if (batchId == 0L || !Similarity.storeExists(spark, s"$path/fps")) {
-      Similarity.deleteDir(spark, s"$path/fps")
-      Similarity.deleteDir(spark, s"$path/docs")
-      Similarity.clearTombstones(spark, path)
-    }
+    // would dedup against the dead run's media. The store pins no params:
+    // its fingerprints are the claim's pin.
+    StoreLifecycle.claim(spark, path, batchId, Seq("docs"), pin = "fps")
     if (batch.isEmpty) return // nothing to fingerprint or land
     val fp = mediaFingerprints(batch).localCheckpoint()
     // drops are keyed (doc_id, medium): a doc whose IMAGE near-matches
@@ -800,11 +797,11 @@ object Multimodal {
       .reduce(_ unionByName _)
     val winners = fp.join(inBatchDrops, Seq("doc_id", "medium"), "left_anti")
     val hist =
-      if (Similarity.storeExists(spark, s"$path/fps")) {
+      if (StoreLifecycle.storeExists(spark, s"$path/fps")) {
         val raw = spark.read.parquet(s"$path/fps")
         val earlier =
           if (raw.columns.contains("batch_id")) raw.filter(col("batch_id") < batchId) else raw
-        Similarity.minusTombstones(spark, path, earlier, "doc_id")
+        StoreLifecycle.minusTombstones(spark, path, earlier, "doc_id")
       } else fp.limit(0)
     val histDrops = fpMatches(winners, hist, maxHamming, maxBucket)
       .select("doc_id", "medium").distinct()

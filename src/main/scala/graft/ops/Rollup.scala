@@ -128,16 +128,12 @@ object Rollup {
     val spark = batch.sparkSession
     import spark.implicits._
     val spec = specOf(keyCols, valueCol)
-    StoreLifecycle.claim(
-      spark,
-      path,
-      "state",
-      batchId,
-      () => Seq(spec).toDF("spec").coalesce(1).write.mode("overwrite").parquet(s"$path/params"),
-      () => {
-        val s0 = spark.read.parquet(s"$path/params").head.getString(0)
-        require(s0 == spec, s"rollup store at $path maintains $s0, got $spec")
-      })
+    if (StoreLifecycle.claim(spark, path, batchId, Seq("state")))
+      Seq(spec).toDF("spec").coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    else {
+      val s0 = spark.read.parquet(s"$path/params").head.getString(0)
+      require(s0 == spec, s"rollup store at $path maintains $s0, got $spec")
+    }
     aggState(batch, keyCols, valueCol)
       .write
       .mode(SaveMode.Overwrite)
@@ -150,7 +146,7 @@ object Rollup {
     */
   def readState(spark: SparkSession, path: String, keyCols: Seq[String]): DataFrame = {
     require(
-      Similarity.storeExists(spark, s"$path/params"),
+      StoreLifecycle.storeExists(spark, s"$path/params"),
       s"no rollup store at $path — ingest at least one batch first")
     mergeStates(
       Seq(spark.read.parquet(s"$path/state").select(
@@ -204,17 +200,13 @@ object Rollup {
     // empty fallback can still produce a correctly-typed frame instead
     // of assuming StringType
     val grpType = batch.schema(groupCol).dataType.sql
-    StoreLifecycle.claim(
-      spark,
-      path,
-      Seq("firstseen", "observed"),
-      batchId,
-      () => Seq((spec, grpType)).toDF("spec", "grp_type")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/params"),
-      () => {
-        val s0 = spark.read.parquet(s"$path/params").head.getString(0)
-        require(s0 == spec, s"cumulative-distinct store at $path maintains $s0, got $spec")
-      })
+    if (StoreLifecycle.claim(spark, path, batchId, Seq("firstseen", "observed")))
+      Seq((spec, grpType)).toDF("spec", "grp_type")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    else {
+      val s0 = spark.read.parquet(s"$path/params").head.getString(0)
+      require(s0 == spec, s"cumulative-distinct store at $path maintains $s0, got $spec")
+    }
     // an empty batch still lands its (empty) generation dirs: they carry
     // the real column TYPES, so the read face on an idle stream returns
     // a correctly-typed empty frame instead of a placeholder schema
@@ -227,7 +219,7 @@ object Rollup {
       .localCheckpoint() // first-seen aggregate + the observed write
     val firstInBatch = base.groupBy("grp", "id").agg(min("p").as("p"))
     val seenMin =
-      if (Similarity.storeExists(spark, s"$path/firstseen")) {
+      if (StoreLifecycle.storeExists(spark, s"$path/firstseen")) {
         val raw = spark.read.parquet(s"$path/firstseen")
         // strictly-earlier generations only: a checkpoint-retried batch
         // must never probe its own half-written rows and drop itself
@@ -264,7 +256,7 @@ object Rollup {
       path: String,
       groupCol: String): DataFrame = {
     require(
-      Similarity.storeExists(spark, s"$path/params"),
+      StoreLifecycle.storeExists(spark, s"$path/params"),
       s"no cumulative-distinct store at $path — ingest at least one batch first")
     import spark.implicits._
     // an idle stream (only empty batches so far) reads as EMPTY, not as
@@ -272,7 +264,7 @@ object Rollup {
     // landed between the params write and the first generation dirs (a
     // landed batch, even empty, writes typed dirs), so the group type
     // comes from params — never an assumed StringType
-    if (!Similarity.storeExists(spark, s"$path/firstseen")) {
+    if (!StoreLifecycle.storeExists(spark, s"$path/firstseen")) {
       val pdf = spark.read.parquet(s"$path/params")
       val grpType =
         if (pdf.columns.contains("grp_type"))

@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import StoreLifecycle.{clearInflight, clearTombstones, compactIndexDir, deleteDir, markInflight,
+  minusTombstones, requireNotInflight, rewriteDir, storeExists}
+
 /** Approximate-nearest-neighbor search over embedding columns
   * (`array<float>`). Two paths:
   *
@@ -1261,30 +1264,6 @@ object Similarity {
       .parquet(s"$path/cells")
   }
 
-  /** `true` when `dir` exists on the session's filesystem (local or
-    * cluster FS — the streaming ingests key their train-vs-append branch
-    * on the persisted store, not on the batch id, so an empty first
-    * micro-batch cannot leave the index permanently untrained).
-    */
-  private[ops] def storeExists(spark: org.apache.spark.sql.SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Recursively delete `dir` if it exists (no-op otherwise) — the retrain
-    * and compaction primitive: a retraining ingest must remove the WHOLE
-    * stale data subtree (every `batch_id=N` dir from a prior stream, any
-    * `centroid_id=*` layout from a batch build), because parquet overwrite
-    * of one partition dir leaves sibling dirs — vectors assigned under the
-    * OLD quantizer — for every future probe to silently mix in.
-    */
-  private[ops] def deleteDir(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    ()
-  }
-
   /** One micro-batch of STREAMING IVF maintenance (the foreachBatch body
     * of [[graft.streaming.AnnIngest.ivfIngest]]). Training fires when
     * this is batch 0 (a FRESH stream pointed at the path retrains and
@@ -1315,22 +1294,21 @@ object Similarity {
     val spark = batch.sparkSession
     import spark.implicits._
     val (n, nulls, dmin, dmax) = vecDimProfile(batch, vecCol)
-    if (batchId == 0L || !storeExists(spark, s"$path/params")) {
-      // The WIPE runs before the empty check (the StoreLifecycle rule): an
-      // empty batch 0 must still retire a previous run's store, or batch 1
-      // would assign against the dead run's quantizer. The quantizer
-      // TRAINING needs content, so it defers to the first non-empty batch
-      // — params come down too, so that batch re-enters this branch.
-      deleteDir(spark, s"$path/cells")
-      deleteDir(spark, s"$path/tombstones")
-      clearInflight(spark, path)
-      deleteDir(spark, s"$path/centroids")
-      deleteDir(spark, s"$path/params")
-      if (n == 0) return
-      require(nulls == 0, s"IVF ingest batch $batchId carries $nulls null '$vecCol' vectors (of $n rows)")
-      require(
-        dmin == dmax,
-        s"IVF ingest batch $batchId carries mixed vector widths: ${dmin.get}..${dmax.get}")
+    // The claim's WIPE runs before the empty check: an empty batch 0 must
+    // still retire a previous run's store, or batch 1 would assign against
+    // the dead run's quantizer. The quantizer TRAINING needs content, so it
+    // defers to the first non-empty batch, which claims again (params are
+    // gone).
+    val claimed = StoreLifecycle.claim(spark, path, batchId, Seq("cells", "centroids"))
+    if (n == 0) return
+    // a crashed retrain's mixed cells/centroids must not be assigned
+    // against and LANDED — the same refusal probeIvfIndex applies
+    requireNotInflight(spark, path)
+    require(nulls == 0, s"IVF ingest batch $batchId carries $nulls null '$vecCol' vectors (of $n rows)")
+    require(
+      dmin == dmax,
+      s"IVF ingest batch $batchId carries mixed vector widths: ${dmin.get}..${dmax.get}")
+    if (claimed) {
       val cents = ivfCentroids(batch, nCentroids, iters, idCol, vecCol)
       val dim = cents.select(size(col("centroid"))).head().getInt(0)
       cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
@@ -1339,14 +1317,6 @@ object Similarity {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$path/params")
     } else {
-      if (n == 0) return // nothing to assign
-      // a crashed retrain's mixed cells/centroids must not be assigned
-      // against and LANDED — the same refusal probeIvfIndex applies
-      requireNotInflight(spark, path)
-      require(nulls == 0, s"IVF ingest batch $batchId carries $nulls null '$vecCol' vectors (of $n rows)")
-      require(
-        dmin == dmax,
-        s"IVF ingest batch $batchId carries mixed vector widths: ${dmin.get}..${dmax.get}")
       val stored = spark.read.parquet(s"$path/params").select("dim").head().getInt(0)
       require(
         dmin.contains(stored),
@@ -1378,201 +1348,6 @@ object Similarity {
       .distinct()
       .coalesce(1)
       .write.mode("append").parquet(s"$path/tombstones")
-
-  /** Subtract tombstoned ids from an index-side table (no-op when no
-    * tombstones exist): a left-anti equi-join on the id column. The
-    * tombstone side is small by construction (deletes are events, the
-    * index is the corpus), so AQE broadcasts it and the index side never
-    * shuffles for the subtraction.
-    */
-  private[ops] def minusTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      df: DataFrame,
-      idColName: String): DataFrame =
-    if (storeExists(spark, s"$path/tombstones"))
-      df.join(
-        spark.read.parquet(s"$path/tombstones")
-          .select(col("del_id").cast(df.schema(idColName).dataType).as(idColName)),
-        Seq(idColName),
-        "left_anti")
-    else df
-
-  /** Whole-file UTF-8 write of a small store pin/stamp (bucket pins,
-    * exactly-once stamps, fold points) — one place for the plain-FS-file
-    * discipline (a 1-row parquet would cost a Spark job per lifecycle
-    * call, the [[markInflight]] lesson).
-    */
-  private[ops] def writeSmallFile(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path,
-      text: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Whole-file UTF-8 read of a small pin/stamp — drains fully (the FS
-    * contract allows short reads; a truncated stamp would misdirect the
-    * exactly-once decision, the [[inflightOp]] lesson).
-    */
-  private[ops] def readSmallFile(
-      fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
-
-  /** A live dir missing with a COMPLETE `.compacting` twin (its
-    * `_SUCCESS` is the completeness witness) rolls forward; any other
-    * tmp is pre-swap garbage. The [[rewriteDir]] window cleaner shared
-    * by the store repairs.
-    */
-  private[ops] def rollForwardOrDrop(
-      fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(dir)
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir.compacting")
-    if (fs.exists(tmp)) {
-      if (!fs.exists(live) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$dir.compacting/_SUCCESS")))
-        require(fs.rename(tmp, live), s"rolling forward $tmp -> $live failed")
-      else fs.delete(tmp, true)
-    }
-  }
-
-  /** Rewrite `dir` with the (materialized) content of `df` via a
-    * tmp-dir + rename swap: the new generation lands completely in
-    * `<dir>.compacting` before the old tree is dropped, so a crashed
-    * compaction leaves the live index untouched (re-run to finish).
-    */
-  private[ops] def rewriteDir(
-      spark: org.apache.spark.sql.SparkSession,
-      df: DataFrame,
-      dir: String,
-      partitionCols: Seq[String]): Unit = {
-    val tmp = s"$dir.compacting"
-    deleteDir(spark, tmp)
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(tmp)
-    deleteDir(spark, dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(tmp)
-    require(
-      src.getFileSystem(conf).rename(src, new org.apache.hadoop.fs.Path(dir)),
-      s"compaction rename $tmp -> $dir failed")
-  }
-
-  /** Shared compaction kernel for one data subtree of a persisted index:
-    * read every generation under `$path/$sub` (base build, appends,
-    * `batch_id=N` ingest dirs), subtract tombstones, drop the `batch_id`
-    * lineage column if present, and [[rewriteDir]]-swap the consolidated
-    * result back in place.
-    */
-  private[ops] def compactIndexDir(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      sub: String,
-      idColName: String,
-      partitionCols: Seq[String] = Nil): Unit = {
-    val raw = spark.read.parquet(s"$path/$sub")
-    val live = minusTombstones(spark, path, raw, idColName)
-    if (raw.columns.contains("batch_id"))
-      // A STREAM-maintained subtree stays batch-keyed after compaction:
-      // everything folds into ONE synthetic generation, `batch_id=-1`
-      // (real micro-batch ids are >= 0, so a resumed stream never
-      // collides with it). Folding to a FLAT layout instead would make
-      // the next ingest batch's `batch_id=N` dir sit beside plain files /
-      // `centroid_id=*` dirs and break partition discovery — compaction
-      // must be safe MID-stream, not only at end-of-life.
-      rewriteDir(
-        spark,
-        live.withColumn("batch_id", lit(-1L)),
-        s"$path/$sub",
-        "batch_id" +: partitionCols)
-    else rewriteDir(spark, live, s"$path/$sub", partitionCols)
-  }
-
-  private[ops] def clearTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    deleteDir(spark, s"$path/tombstones")
-
-  /** Crash INTENT marker for multi-directory rewrites: a retrain/rebuild
-    * that tmp-and-swaps several subtrees writes `$path/inflight` before
-    * its FIRST swap and clears it after the LAST, so the degraded window
-    * (each directory readable but the set mutually inconsistent — new
-    * codes under an old codebook, new postings under an old df) is
-    * DETECTABLE: probes and drift audits [[requireNotInflight]] and
-    * refuse instead of silently mis-scoring. A crash before the first
-    * swap leaves the store untouched with a stale marker; re-running the
-    * interrupted retrain (or a full write) clears it either way.
-    *
-    * The marker is a PLAIN FILE holding the op name (one driver-side FS
-    * `create`, ~ms), NOT a Spark write: a 1-row parquet job costs a full
-    * job-schedule + commit round (~hundreds of ms per lifecycle call,
-    * measured round 15) and leaves the first swap unprotected for that
-    * long. [[requireNotInflight]] still reads the round-14 1-row-parquet
-    * directory form, so stores marked by an older binary stay detectable.
-    */
-  private[ops] def markInflight(
-      spark: org.apache.spark.sql.SparkSession, path: String, op: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/inflight")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a re-run over a crashed legacy (directory-form) marker must replace
-    // it — create(overwrite) only replaces FILES
-    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) fs.delete(p, true)
-    val out = fs.create(p, true)
-    try out.write(op.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private[ops] def clearInflight(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    deleteDir(spark, s"$path/inflight") // recursive: clears file and legacy dir forms alike
-
-  /** Refuse to read a store whose last multi-directory rewrite never
-    * finished — the [[markInflight]] contract's read side. One FS
-    * existence check per call; the marker's stored op name is read only
-    * on the failure path (plain-file form, with the legacy 1-row-parquet
-    * directory form still honored).
-    */
-  /** The stored op name of a pending [[markInflight]] marker, or None —
-    * the read half the self-repairing mutators ([[graft.ops.Graph]]'s
-    * store family) share with [[requireNotInflight]]. Honors both the
-    * plain-file form and the legacy round-14 1-row-parquet directory
-    * form.
-    */
-  private[ops] def inflightOp(
-      spark: org.apache.spark.sql.SparkSession, path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/inflight")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else if (fs.getFileStatus(p).isDirectory)
-      Some(spark.read.parquet(s"$path/inflight").head().getString(0))
-    else {
-      // drain fully: the FS contract allows short reads, and a
-      // truncated op name would misdirect the re-run instruction
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream(256)
-        val chunk = new Array[Byte](256)
-        var n = in.read(chunk)
-        while (n >= 0 && buf.size < 4096) {
-          buf.write(chunk, 0, n)
-          n = in.read(chunk)
-        }
-        Some(new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8))
-      } finally in.close()
-    }
-  }
-
-  private[ops] def requireNotInflight(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    inflightOp(spark, path).foreach { op =>
-      throw new IllegalStateException(
-        s"index at $path has an interrupted '$op' rewrite (inflight marker present) — " +
-          s"its directories may be mutually inconsistent; re-run $op to completion " +
-          "(or rebuild the store) before probing")
-    }
 
   /** Compact a persisted IVF index: fold every generation — the base
     * build, [[appendIvfIndex]] appends, and all `cells/batch_id=N` dirs a
@@ -1846,29 +1621,21 @@ object Similarity {
     val spark = batch.sparkSession
     import spark.implicits._
     val (n, nulls, dmin, dmax) = vecDimProfile(batch, vecCol)
-    def requireCleanBatch(): Unit = {
-      require(nulls == 0, s"IVF-PQ ingest batch $batchId carries $nulls null '$vecCol' vectors (of $n rows)")
-      require(
-        dmin == dmax,
-        s"IVF-PQ ingest batch $batchId carries mixed vector widths: ${dmin.get}..${dmax.get}")
-      require(
-        dmin.contains(dim),
-        s"IVF-PQ ingest batch $batchId carries ${dmin.get}-dim vectors, caller declared dim=$dim")
-    }
-    val trainedHere = batchId == 0L || !storeExists(spark, s"$path/params")
+    // Claim BEFORE the empty check (the StoreLifecycle rule); both
+    // quantizers need content to train, so they defer to the first
+    // non-empty batch, which claims again (params are gone).
+    val trainedHere =
+      StoreLifecycle.claim(spark, path, batchId, Seq("codes", "centroids", "codebook", "errbase"))
+    if (n == 0) return // nothing to train on or encode
+    requireNotInflight(spark, path) // crashed retrain: refuse, never land
+    require(nulls == 0, s"IVF-PQ ingest batch $batchId carries $nulls null '$vecCol' vectors (of $n rows)")
+    require(
+      dmin == dmax,
+      s"IVF-PQ ingest batch $batchId carries mixed vector widths: ${dmin.get}..${dmax.get}")
+    require(
+      dmin.contains(dim),
+      s"IVF-PQ ingest batch $batchId carries ${dmin.get}-dim vectors, caller declared dim=$dim")
     if (trainedHere) {
-      // Wipe BEFORE the empty check (the StoreLifecycle rule); both
-      // quantizers need content to train, so they defer to the first
-      // non-empty batch — params come down too, so that batch re-claims.
-      deleteDir(spark, s"$path/codes")
-      deleteDir(spark, s"$path/tombstones")
-      clearInflight(spark, path)
-      deleteDir(spark, s"$path/centroids")
-      deleteDir(spark, s"$path/codebook")
-      deleteDir(spark, s"$path/errbase")
-      deleteDir(spark, s"$path/params")
-      if (n == 0) return
-      requireCleanBatch()
       ivfCentroids(batch, nCentroids, iters, idCol, vecCol)
         .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
       pqCodebook(batch, m, dim / m, ksub, idCol, vecCol)
@@ -1877,12 +1644,7 @@ object Similarity {
         .toDF("kind", "n_centroids", "iters", "m", "ksub", "dim")
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$path/params")
-    } else {
-      if (n == 0) return // nothing to encode
-      requireNotInflight(spark, path) // crashed retrain: refuse, never land
-      requireCleanBatch()
-      requireIvfPqParams(spark, path, m, ksub, dim)
-    }
+    } else requireIvfPqParams(spark, path, m, ksub, dim)
     val cbStored = spark.read.parquet(s"$path/codebook")
     val encRaw = pqEncode(batch, cbStored, m, dim / m, idCol, vecCol)
     // only the training claim needs the encode twice (codes + baseline)
@@ -1969,7 +1731,7 @@ object Similarity {
     * clean [[writeIvfIndex]] over the live content. Retry contract:
     * below-threshold calls are pure reads (re-run at will); an
     * interrupted retrain leaves each directory readable but the pair
-    * mixed — and DETECTED: the [[markInflight]] marker written before
+    * mixed — and DETECTED: the [[StoreLifecycle.markInflight]] marker written before
     * the first swap makes this face (via [[indexDriftReport]]) and every
     * probe refuse the mixed store; re-run [[retrainIvfIndex]] directly
     * to completion, which clears it.
@@ -2020,7 +1782,7 @@ object Similarity {
     * re-encodes, and tmp-and-swaps BOTH the code table and the codebook
     * (codes first — each dir stays readable at every instant; a crash
     * between the two swaps leaves new codes under the old codebook,
-    * which would mis-score — the [[markInflight]] marker written before
+    * which would mis-score — the [[StoreLifecycle.markInflight]] marker written before
     * the first swap makes probes refuse until this retrain is re-run to
     * completion, which clears it). Fails fast if
     * the corpus is missing any live id — checked by ANTI-JOIN on the id
@@ -2205,7 +1967,7 @@ object Similarity {
     * vector is re-routed + re-encoded. Swap order: codes first, then
     * codebook, then centroids (each dir stays readable at every instant;
     * a crash between swaps leaves new codes under stale quantizers —
-    * the [[markInflight]] marker makes probes refuse until the retrain
+    * the [[StoreLifecycle.markInflight]] marker makes probes refuse until the retrain
     * is re-run to completion). Stream-built stores keep their
     * batch-keyed layout (`batch_id=-1` fold), so the op is valid
     * mid-stream; spent tombstones are cleared with the rewrite.
@@ -3861,17 +3623,11 @@ object Similarity {
     val spark = batch.sparkSession
     import spark.implicits._
     val subDim = dim / m
-    val trainedHere = batchId == 0L || !storeExists(spark, s"$path/params")
+    // Claim BEFORE the empty check (the StoreLifecycle rule); the codebook
+    // needs content to train, so it defers to the first non-empty batch,
+    // which claims again (params are gone).
+    val trainedHere = StoreLifecycle.claim(spark, path, batchId, Seq("codes", "codebook", "errbase"))
     if (trainedHere) {
-      // Wipe BEFORE the empty check (the StoreLifecycle rule); the
-      // codebook needs content to train, so it defers to the first
-      // non-empty batch — params come down too, so that batch re-claims.
-      deleteDir(spark, s"$path/codes")
-      deleteDir(spark, s"$path/tombstones")
-      clearInflight(spark, path)
-      deleteDir(spark, s"$path/codebook")
-      deleteDir(spark, s"$path/errbase")
-      deleteDir(spark, s"$path/params")
       if (batch.isEmpty) return
       pqCodebook(batch, m, subDim, ksub, idCol, vecCol)
         .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")

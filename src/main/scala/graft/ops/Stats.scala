@@ -658,16 +658,12 @@ object Stats {
       depth: Int = 4): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    StoreLifecycle.claim(
-      spark,
-      path,
-      "sketch",
-      batchId,
-      () => Seq(depth).toDF("depth").coalesce(1).write.mode("overwrite").parquet(s"$path/params"),
-      () => {
-        val d0 = spark.read.parquet(s"$path/params").head.getInt(0)
-        require(d0 == depth, s"CMS store at $path was built with depth=$d0, got depth=$depth")
-      })
+    if (StoreLifecycle.claim(spark, path, batchId, Seq("sketch")))
+      Seq(depth).toDF("depth").coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    else {
+      val d0 = spark.read.parquet(s"$path/params").head.getInt(0)
+      require(d0 == depth, s"CMS store at $path was built with depth=$d0, got depth=$depth")
+    }
     cmsBuild(batch, valueCol, depth)
       .write
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -686,7 +682,7 @@ object Stats {
       items: DataFrame,
       valueCol: String): DataFrame = {
     require(
-      Similarity.storeExists(spark, s"$path/params"),
+      StoreLifecycle.storeExists(spark, s"$path/params"),
       s"no CMS store at $path — ingest at least one batch first")
     val merged = spark.read
       .parquet(s"$path/sketch")
@@ -717,16 +713,12 @@ object Stats {
     val spark = batch.sparkSession
     import spark.implicits._
     // Claim BEFORE the empty-batch check — see StoreLifecycle for why.
-    StoreLifecycle.claim(
-      spark,
-      path,
-      "sketch",
-      batchId,
-      () => Seq(k).toDF("k").coalesce(1).write.mode("overwrite").parquet(s"$path/params"),
-      () => {
-        val k0 = spark.read.parquet(s"$path/params").head.getInt(0)
-        require(k0 == k, s"KMV store at $path was built with k=$k0, got k=$k")
-      })
+    if (StoreLifecycle.claim(spark, path, batchId, Seq("sketch")))
+      Seq(k).toDF("k").coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    else {
+      val k0 = spark.read.parquet(s"$path/params").head.getInt(0)
+      require(k0 == k, s"KMV store at $path was built with k=$k0, got k=$k")
+    }
     // an empty batch lands an empty (schema-complete) sketch: retries stay
     // idempotent and the rollup read never trips on a missing directory
     kmvSketch(batch, groupCol, valueCol, k)
@@ -746,7 +738,7 @@ object Stats {
       groupCol: String,
       k: Int = 64): DataFrame = {
     require(
-      Similarity.storeExists(spark, s"$path/params"),
+      StoreLifecycle.storeExists(spark, s"$path/params"),
       s"no KMV store at $path — ingest at least one batch first")
     kmvEstimate(
       kmvMerge(Seq(spark.read.parquet(s"$path/sketch").select("grp", "h")), k),
@@ -934,16 +926,12 @@ object Stats {
     val spark = batch.sparkSession
     import spark.implicits._
     // Claim BEFORE the empty-batch check — see StoreLifecycle for why.
-    StoreLifecycle.claim(
-      spark,
-      path,
-      "sketch",
-      batchId,
-      () => Seq(256).toDF("m").coalesce(1).write.mode("overwrite").parquet(s"$path/params"),
-      () => {
-        val m0 = spark.read.parquet(s"$path/params").head.getInt(0)
-        require(m0 == 256, s"HLL store at $path was built with m=$m0, this engine sketches m=256")
-      })
+    if (StoreLifecycle.claim(spark, path, batchId, Seq("sketch")))
+      Seq(256).toDF("m").coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    else {
+      val m0 = spark.read.parquet(s"$path/params").head.getInt(0)
+      require(m0 == 256, s"HLL store at $path was built with m=$m0, this engine sketches m=256")
+    }
     hllSketch(batch, groupCol, valueCol)
       .write
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -958,7 +946,7 @@ object Stats {
       path: String,
       groupCol: String): DataFrame = {
     require(
-      Similarity.storeExists(spark, s"$path/params"),
+      StoreLifecycle.storeExists(spark, s"$path/params"),
       s"no HLL store at $path — ingest at least one batch first")
     hllEstimate(
       hllMerge(Seq(spark.read.parquet(s"$path/sketch").select("grp", "bucket", "rho_max"))),
@@ -2537,16 +2525,12 @@ object Stats {
     val spark = batch.sparkSession
     import spark.implicits._
     val spec = histSpec(loMilli, hiMilli, bins)
-    StoreLifecycle.claim(
-      spark,
-      path,
-      "sketch",
-      batchId,
-      () => Seq(spec).toDF("spec").coalesce(1).write.mode("overwrite").parquet(s"$path/params"),
-      () => {
-        val s0 = spark.read.parquet(s"$path/params").head.getString(0)
-        require(s0 == spec, s"hist store at $path was built over grid $s0, got $spec")
-      })
+    if (StoreLifecycle.claim(spark, path, batchId, Seq("sketch")))
+      Seq(spec).toDF("spec").coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    else {
+      val s0 = spark.read.parquet(s"$path/params").head.getString(0)
+      require(s0 == spec, s"hist store at $path was built over grid $s0, got $spec")
+    }
     histSketch(batch, groupCol, valueCol, loMilli, hiMilli, bins)
       .write
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -2566,7 +2550,7 @@ object Stats {
       hiMilli: Long = 1024000L,
       bins: Int = 256): DataFrame = {
     require(
-      Similarity.storeExists(spark, s"$path/params"),
+      StoreLifecycle.storeExists(spark, s"$path/params"),
       s"no hist store at $path — ingest at least one batch first")
     val spec = histSpec(loMilli, hiMilli, bins)
     val s0 = spark.read.parquet(s"$path/params").head.getString(0)

@@ -406,42 +406,27 @@ object TextAnalysis {
 
   private[graft] def tokBucket(tok: Column, n: Int) = pmod(hash(tok), lit(n))
 
-  private def textFs(spark: org.apache.spark.sql.SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def writeTextFileAt(
-      fs: org.apache.hadoop.fs.FileSystem, p: String, text: String): Unit =
-    Similarity.writeSmallFile(fs, new org.apache.hadoop.fs.Path(p), text)
-
-  private def readTextFileAt(
-      fs: org.apache.hadoop.fs.FileSystem, p: String): String =
-    Similarity.readSmallFile(fs, new org.apache.hadoop.fs.Path(p))
-
   /** The bucket count the index was laid out with (pin absent = legacy
     * default); an alien bucket-function version refuses with the rebuild
     * named — the [[graft.ops.Graph.storeBuckets]] contract.
     */
   private[graft] def textIndexBuckets(
       spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val fs = textFs(spark, path)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/bucketing")))
-      // unlike Graph.storeBuckets there are NO legacy pinless text
-      // stores (every write face pins), so a missing pin only ever
-      // means a damaged tree — defaulting would make a non-64-bucket
-      // store silently return near-empty results
+    // unlike Graph.storeBuckets there are NO legacy pinless text stores
+    // (every write face pins), so a missing pin only ever means a damaged
+    // tree — defaulting would make a non-64-bucket store silently return
+    // near-empty results
+    val pin = StoreLifecycle.readSmallFile(spark, s"$path/bucketing").getOrElse(
       throw new IllegalStateException(
         s"text index at $path has no bucketing pin — the store is damaged or " +
-          "partially copied; rebuild with writeTextIndex (or restart the stream)")
-    else {
-      val lines = readTextFileAt(fs, s"$path/bucketing").trim.split("\n").map(_.trim)
-      require(
-        lines.length >= 2 && lines(0) == textBucketingVersion,
-        s"text index at $path is bucketed with hash-function version " +
-          s"'${lines.headOption.getOrElse("")}' but this binary speaks " +
-          s"'$textBucketingVersion' — rebuild with writeTextIndex before using it")
-      lines(1).toInt
-    }
+          "partially copied; rebuild with writeTextIndex (or restart the stream)"))
+    val lines = pin.trim.split("\n").map(_.trim)
+    require(
+      lines.length >= 2 && lines(0) == textBucketingVersion,
+      s"text index at $path is bucketed with hash-function version " +
+        s"'${lines.headOption.getOrElse("")}' but this binary speaks " +
+        s"'$textBucketingVersion' — rebuild with writeTextIndex before using it")
+    lines(1).toInt
   }
 
   /** The store's id contract, checked at every write face: one row per
@@ -494,25 +479,24 @@ object TextAnalysis {
     val spark = docs.sparkSession
     import spark.implicits._
     requireUniqueDocIds(docs, idCol, "writeTextIndex")
-    Similarity.markInflight(spark, path, "writeTextIndex")
-    Seq("tombstones", "staged", "staged.compacting", "fold_pin", "params")
-      .foreach(d => Similarity.deleteDir(spark, s"$path/$d"))
-    writeTextFileAt(textFs(spark, path), s"$path/bucketing", s"$textBucketingVersion\n$buckets")
-    Similarity.rewriteDir(
+    StoreLifecycle.markInflight(spark, path, "writeTextIndex")
+    StoreLifecycle.wipe(spark, path, Seq("fold_pin"))
+    StoreLifecycle.writeSmallFile(spark, s"$path/bucketing", s"$textBucketingVersion\n$buckets")
+    StoreLifecycle.rewriteDir(
       spark,
       postingsOf(docs, textCol, idCol)
         .withColumn("bucket", tokBucket(col("tok"), buckets))
         .repartition(col("bucket")), // one file per bucket, not per task x bucket
       s"$path/postings",
       Seq("bucket"))
-    Similarity.rewriteDir(
+    StoreLifecycle.rewriteDir(
       spark,
       docs.select(col(idCol).cast("long").as("doc_id")).distinct(),
       s"$path/docids",
       Nil)
     Seq(("text", buckets)).toDF("kind", "buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-    Similarity.clearInflight(spark, path)
+    StoreLifecycle.clearInflight(spark, path)
   }
 
   /** Grow the index with a new document batch: ONE staged commit carries
@@ -530,11 +514,10 @@ object TextAnalysis {
       textCol: String = "text",
       idCol: String = "doc_id"): Unit = {
     val spark = batch.sparkSession
-    repairTextIndex(spark, path)
+    StoreLifecycle.repair(spark, path, textRepair)
     requireTextBatchBuilt(spark, path, "appendTextIndex")
     requireUniqueDocIds(batch, idCol, "appendTextIndex")
     val nb = textIndexBuckets(spark, path)
-    val fs = textFs(spark, path)
     // dedupe against the LIVE id set (docids minus tombstones): a
     // tombstoned doc must land in the delta so the refusal below fires —
     // an all-docids anti-join would silently swallow the re-insert as
@@ -542,73 +525,45 @@ object TextAnalysis {
     val delta = batch
       .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
       .join(
-        Similarity.minusTombstones(
+        StoreLifecycle.minusTombstones(
           spark, path, spark.read.parquet(s"$path/docids"), "doc_id"),
         Seq("doc_id"),
         "left_anti")
       .localCheckpoint()
     if (delta.isEmpty) return
-    if (Similarity.storeExists(spark, s"$path/tombstones")) {
-      val nTomb = spark.read.parquet(s"$path/tombstones")
-        .join(delta.select(col("doc_id").as("del_id")), Seq("del_id"), "left_semi")
-        .count()
-      require(
-        nTomb == 0,
-        s"appendTextIndex: $nTomb batch docs are tombstoned in $path — compact the " +
-          "index before re-inserting a deleted document")
+    requireNoneTombstoned(spark, path, delta)(n =>
+      s"appendTextIndex: $n batch docs are tombstoned in $path — compact the index before " +
+        "re-inserting a deleted document")
+    // a manifest-less staged tree: each tree's part files append into
+    // its live twin, postings bucket by bucket
+    StoreLifecycle.commitTree(spark, path, "appendTextIndex") { tmp =>
+      postingsOf(delta, "text", "doc_id")
+        .withColumn("bucket", tokBucket(col("tok"), nb))
+        .repartition(col("bucket"))
+        .write.partitionBy("bucket").parquet(s"$tmp/postings")
+      delta.select("doc_id").coalesce(1).write.parquet(s"$tmp/docids")
     }
-    val tmp = s"$path/staged.compacting"
-    Similarity.deleteDir(spark, tmp)
-    postingsOf(delta, "text", "doc_id")
-      .withColumn("bucket", tokBucket(col("tok"), nb))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").parquet(s"$tmp/postings")
-    delta.select("doc_id").coalesce(1).write.parquet(s"$tmp/docids")
-    Similarity.markInflight(spark, path, "appendTextIndex")
-    require(
-      fs.rename(
-        new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$path/staged")),
-      s"staged commit rename failed for $path") // the atomic commit point
-    applyTextStaged(spark, path)
-    Similarity.clearInflight(spark, path)
   }
 
-  /** Fold the staged append into the live trees: every staged part file
-    * moves under its own (unique) name, so a re-applied half-moved tree
-    * just moves the remainder — idempotent by construction.
+  /** Refuse a delta re-inserting tombstoned docs (`msg` states the
+    * count): the tombstone would silently eat the re-insert on read —
+    * compaction must come first (the edge-store rule).
     */
-  private def applyTextStaged(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = textFs(spark, path)
-    val staged = s"$path/staged"
-    def moveFiles(fromDir: String, toDir: String): Unit = {
-      val from = new org.apache.hadoop.fs.Path(fromDir)
-      if (fs.exists(from)) {
-        val to = new org.apache.hadoop.fs.Path(toDir)
-        if (!fs.exists(to)) fs.mkdirs(to)
-        fs.listStatus(from).foreach { f =>
-          if (f.isDirectory && f.getPath.getName.startsWith("bucket="))
-            moveFiles(f.getPath.toString, s"$toDir/${f.getPath.getName}")
-          else if (f.isFile && f.getPath.getName.startsWith("part-")) {
-            val dst = new org.apache.hadoop.fs.Path(s"$toDir/${f.getPath.getName}")
-            if (fs.exists(dst)) fs.delete(dst, true) // same attempt re-applied
-            require(fs.rename(f.getPath, dst), s"apply move ${f.getPath} -> $dst failed")
-          }
-        }
-      }
+  private def requireNoneTombstoned(
+      spark: org.apache.spark.sql.SparkSession, path: String, delta: DataFrame)(
+      msg: Long => String): Unit =
+    StoreLifecycle.tombstones(spark, path).foreach { t =>
+      val nTomb = t.join(delta.select(col("doc_id").as("del_id")), Seq("del_id"), "left_semi")
+        .count()
+      require(nTomb == 0, msg(nTomb))
     }
-    moveFiles(s"$staged/postings", s"$path/postings")
-    moveFiles(s"$staged/docids", s"$path/docids")
-    Similarity.deleteDir(spark, staged)
-  }
 
   /** Retract documents: ids land in `tombstones`
     * ([[graft.ops.Similarity.deleteFromIndex]]) and every read subtracts
     * them; [[compactTextIndex]] reclaims.
     */
   def deleteFromTextIndex(ids: DataFrame, path: String, idCol: String = "doc_id"): Unit = {
-    repairTextIndex(ids.sparkSession, path)
+    StoreLifecycle.repair(ids.sparkSession, path, textRepair)
     Similarity.deleteFromIndex(ids, path, idCol)
   }
 
@@ -619,9 +574,9 @@ object TextAnalysis {
     * already-subtracted doc is a no-op — no staged flag needed).
     */
   def compactTextIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    repairTextIndex(spark, path)
-    Similarity.markInflight(spark, path, "compactTextIndex")
-    val postings = Similarity.minusTombstones(
+    StoreLifecycle.repair(spark, path, textRepair)
+    StoreLifecycle.markInflight(spark, path, "compactTextIndex")
+    val postings = StoreLifecycle.minusTombstones(
       spark, path, spark.read.parquet(s"$path/postings"), "doc_id")
     // a STREAM store stays batch-keyed after the fold: everything lands
     // under the synthetic batch_id=-1 generation (real ids are >= 0), so
@@ -631,11 +586,11 @@ object TextAnalysis {
     // would otherwise swap in a dir with no parquet files — the next
     // read fails schema inference instead of serving empty results; one
     // limit-0 seed file under a synthetic partition keeps it readable
-    // (the Graph.stageAndApply precedent)
+    // (the StoreLifecycle.commit precedent)
     def seedIfEmpty(dir: String, leafPath: String, schemaDf: DataFrame): Unit = {
-      val fs0 = textFs(spark, path)
-      val hasParts = fs0.exists(new org.apache.hadoop.fs.Path(dir)) &&
-        fs0.listStatus(new org.apache.hadoop.fs.Path(dir)).exists(_.isDirectory)
+      val fs = StoreLifecycle.fsOf(spark, dir)
+      val hasParts = fs.exists(new org.apache.hadoop.fs.Path(dir)) &&
+        fs.listStatus(new org.apache.hadoop.fs.Path(dir)).exists(_.isDirectory)
       if (!hasParts)
         schemaDf.limit(0).write.mode("overwrite").parquet(s"$dir/$leafPath")
     }
@@ -649,23 +604,20 @@ object TextAnalysis {
       // forward-only: a re-fold of an ALREADY-folded store sees
       // maxGen = -1 and must keep the prior pin — overwriting it with -1
       // would silently re-admit below-fold as-of reads over folded data
-      val fs0 = textFs(spark, path)
-      val prior =
-        if (fs0.exists(new org.apache.hadoop.fs.Path(s"$path/fold_pin")))
-          readTextFileAt(fs0, s"$path/fold_pin").trim.toLong
-        else Long.MinValue
+      val prior = StoreLifecycle.readSmallFile(spark, s"$path/fold_pin")
+        .fold(Long.MinValue)(_.trim.toLong)
       val pin = math.max(maxGen, prior)
-      if (pin >= 0L) writeTextFileAt(fs0, s"$path/fold_pin", pin.toString)
-      Similarity.rewriteDir(
+      if (pin >= 0L) StoreLifecycle.writeSmallFile(spark, s"$path/fold_pin", pin.toString)
+      StoreLifecycle.rewriteDir(
         spark,
         postings.select("doc_id", "tok", "tf", "bucket").withColumn("batch_id", lit(-1L)),
         s"$path/postings",
         Seq("batch_id", "bucket"))
       seedIfEmpty(s"$path/postings", "batch_id=-1/bucket=0",
         postings.select("doc_id", "tok", "tf"))
-      Similarity.rewriteDir(
+      StoreLifecycle.rewriteDir(
         spark,
-        Similarity.minusTombstones(
+        StoreLifecycle.minusTombstones(
           spark, path, spark.read.parquet(s"$path/docids"), "doc_id")
           .select("doc_id").withColumn("batch_id", lit(-1L)),
         s"$path/docids",
@@ -673,18 +625,18 @@ object TextAnalysis {
       seedIfEmpty(s"$path/docids", "batch_id=-1",
         postings.select("doc_id"))
     } else {
-      Similarity.rewriteDir(spark, postings, s"$path/postings", Seq("bucket"))
+      StoreLifecycle.rewriteDir(spark, postings, s"$path/postings", Seq("bucket"))
       seedIfEmpty(s"$path/postings", "bucket=0",
         postings.select("doc_id", "tok", "tf"))
-      Similarity.rewriteDir(
+      StoreLifecycle.rewriteDir(
         spark,
-        Similarity.minusTombstones(
+        StoreLifecycle.minusTombstones(
           spark, path, spark.read.parquet(s"$path/docids"), "doc_id"),
         s"$path/docids",
         Nil)
     }
-    Similarity.clearTombstones(spark, path)
-    Similarity.clearInflight(spark, path)
+    StoreLifecycle.clearTombstones(spark, path)
+    StoreLifecycle.clearInflight(spark, path)
   }
 
   /** A params pin of kind `text-stream` marks an [[ingestTextBatch]]-
@@ -694,7 +646,7 @@ object TextAnalysis {
     */
   private def requireTextBatchBuilt(
       spark: org.apache.spark.sql.SparkSession, path: String, op: String): Unit =
-    if (Similarity.storeExists(spark, s"$path/params")) {
+    if (StoreLifecycle.storeExists(spark, s"$path/params")) {
       val kind = spark.read.parquet(s"$path/params").select("kind").head().getString(0)
       require(
         kind == "text",
@@ -702,42 +654,27 @@ object TextAnalysis {
           "stream stores grow through their stream, not batch appends")
     }
 
-  /** The index's repair, run by every mutator first: a COMMITTED staged
-    * append rolls forward, an uncommitted tmp is discarded, a crashed
+  /** The index's [[graft.ops.StoreLifecycle.repair]], run by every
+    * mutator first: a COMMITTED staged append rolls forward, a crashed
     * compact's complete `.compacting` swaps roll forward (re-running
     * compact finishes the rest — all its steps are idempotent), and the
-    * marker clears. Only an interrupted full [[writeTextIndex]] refuses
-    * (a half-replaced store is not incrementally repairable — the
-    * graph-store rule).
+    * marker clears. An interrupted full [[writeTextIndex]] refuses (a
+    * half-replaced store is not incrementally repairable — the
+    * graph-store rule), and so does an interrupted [[ingestTextBatch]]: a
+    * half-landed stream generation (postings without docids) is repaired
+    * ONLY by its own retry, which overwrites the whole generation;
+    * folding or appending around it would bake the inconsistency in.
     */
-  private def repairTextIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = textFs(spark, path)
-    Similarity.inflightOp(spark, path) match {
-      case None =>
-        Similarity.deleteDir(spark, s"$path/staged.compacting")
-      case Some(op) if op.contains("writeTextIndex") =>
-        throw new IllegalStateException(
-          s"text index at $path has an interrupted 'writeTextIndex' — a full rebuild " +
-            "is not incrementally repairable; re-run writeTextIndex to completion")
-      case Some(op) if op.contains("ingestTextBatch") =>
-        // a half-landed stream generation (postings without docids) is
-        // repaired ONLY by its own retry, which overwrites the whole
-        // generation; folding or appending around it would bake the
-        // inconsistency in
-        throw new IllegalStateException(
-          s"text index at $path has an interrupted 'ingestTextBatch' — re-run the " +
-            "stream (the retried batch overwrites its own generation); other mutators " +
-            "cannot repair a half-landed generation")
-      case Some(_) =>
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/staged")))
-          applyTextStaged(spark, path)
-        Similarity.deleteDir(spark, s"$path/staged.compacting")
-        Similarity.rollForwardOrDrop(fs, s"$path/postings")
-        Similarity.rollForwardOrDrop(fs, s"$path/docids")
-        Similarity.clearInflight(spark, path)
-    }
-  }
+  private val textRepair = StoreLifecycle.Repair(
+    "text index",
+    Seq(
+      "writeTextIndex" ->
+        "a full rebuild is not incrementally repairable; re-run writeTextIndex to completion",
+      "ingestTextBatch" ->
+        ("re-run the stream (the retried batch overwrites its own generation); other " +
+          "mutators cannot repair a half-landed generation")),
+    Seq("postings", "docids"),
+    lostFails = false)
 
   /** One micro-batch of STREAMING index maintenance (the foreachBatch
     * body of [[graft.streaming.TextIngest.textIngest]]): batch 0 — or a
@@ -754,7 +691,7 @@ object TextAnalysis {
     * never hides its own delta) and re-overwrites gen N — nothing
     * double-counts. The crash marker spans the postings↔docids window
     * for PROBE safety; the retried batch itself resolves it (re-running
-    * the interrupted op is the documented repair — [[repairTextIndex]]
+    * the interrupted op is the documented repair — [[textRepair]]
     * refuses every OTHER mutator meanwhile). A pure-duplicate batch
     * deletes any half-landed garbage of its own generation and lands
     * nothing. Bucket pruning survives the generation split: `bucket` is
@@ -769,19 +706,15 @@ object TextAnalysis {
       idCol: String = "doc_id"): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    if (batchId == 0L || !Similarity.storeExists(spark, s"$path/params")) {
-      // wipe BEFORE the empty check (the StoreLifecycle rule)
-      Seq("postings", "docids", "tombstones", "staged", "staged.compacting",
-        "bucketing", "fold_pin", "params")
-        .foreach(d => Similarity.deleteDir(spark, s"$path/$d"))
-      Similarity.clearInflight(spark, path) // a fresh stream resolves a crashed run
+    // the claim wipes BEFORE the empty check (the StoreLifecycle rule)
+    if (StoreLifecycle.claim(
+        spark, path, batchId, Seq("postings", "docids", "bucketing", "fold_pin"))) {
       val b = batch.select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
       if (b.isEmpty) return
       requireUniqueDocIds(b, "doc_id", "ingestTextBatch")
-      Similarity.markInflight(spark, path, "ingestTextBatch")
-      writeTextFileAt(
-        textFs(spark, path), s"$path/bucketing",
-        s"$textBucketingVersion\n$defaultTextBuckets")
+      StoreLifecycle.markInflight(spark, path, "ingestTextBatch")
+      StoreLifecycle.writeSmallFile(
+        spark, s"$path/bucketing", s"$textBucketingVersion\n$defaultTextBuckets")
       postingsOf(b, "text", "doc_id")
         .withColumn("bucket", tokBucket(col("tok"), defaultTextBuckets))
         .repartition(col("bucket"))
@@ -791,15 +724,12 @@ object TextAnalysis {
         .write.mode("overwrite").parquet(s"$path/docids/batch_id=$batchId")
       Seq(("text-stream", defaultTextBuckets)).toDF("kind", "buckets")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-      Similarity.clearInflight(spark, path)
+      StoreLifecycle.clearInflight(spark, path)
       return
     }
     // a marker from our own crashed attempt is resolved by THIS retry
     // (we overwrite the whole generation); any other op's marker refuses
-    Similarity.inflightOp(spark, path) match {
-      case Some(op) if op.contains("ingestTextBatch") => ()
-      case _ => repairTextIndex(spark, path)
-    }
+    StoreLifecycle.repair(spark, path, textRepair, resuming = "ingestTextBatch")
     // the reverse of requireTextBatchBuilt: a resumed stream (checkpoint
     // past batch 0) pointed at a batch-built store must refuse by name,
     // not fall over on the missing batch_id column
@@ -817,7 +747,7 @@ object TextAnalysis {
     // the delta so the refusal below fires — the appendTextIndex rule;
     // swallowing the re-insert as "already known" would leave the doc
     // deleted while the producer believes it re-indexed
-    val known = Similarity.minusTombstones(
+    val known = StoreLifecycle.minusTombstones(
       spark,
       path,
       spark.read.parquet(s"$path/docids")
@@ -828,26 +758,20 @@ object TextAnalysis {
       .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
       .join(known, Seq("doc_id"), "left_anti")
       .localCheckpoint()
-    if (Similarity.storeExists(spark, s"$path/tombstones")) {
-      val nTomb = spark.read.parquet(s"$path/tombstones")
-        .join(delta.select(col("doc_id").as("del_id")), Seq("del_id"), "left_semi")
-        .count()
-      require(
-        nTomb == 0,
-        s"ingestTextBatch: $nTomb stream docs are tombstoned in $path — compact the " +
-          "index before re-inserting a deleted document (the stream fails fast rather " +
-          "than silently keeping the doc deleted)")
-    }
+    requireNoneTombstoned(spark, path, delta)(n =>
+      s"ingestTextBatch: $n stream docs are tombstoned in $path — compact the index " +
+        "before re-inserting a deleted document (the stream fails fast rather than " +
+        "silently keeping the doc deleted)")
     if (delta.isEmpty) {
       // pure duplicate: no new generation — but a CRASHED earlier attempt
       // of this very batch may have half-landed it; deleting gen N is the
       // idempotent way to retire that garbage
-      Similarity.deleteDir(spark, s"$path/postings/batch_id=$batchId")
-      Similarity.deleteDir(spark, s"$path/docids/batch_id=$batchId")
-      Similarity.clearInflight(spark, path)
+      StoreLifecycle.deleteDir(spark, s"$path/postings/batch_id=$batchId")
+      StoreLifecycle.deleteDir(spark, s"$path/docids/batch_id=$batchId")
+      StoreLifecycle.clearInflight(spark, path)
       return
     }
-    Similarity.markInflight(spark, path, "ingestTextBatch")
+    StoreLifecycle.markInflight(spark, path, "ingestTextBatch")
     postingsOf(delta, "text", "doc_id")
       .withColumn("bucket", tokBucket(col("tok"), nb))
       .repartition(col("bucket"))
@@ -855,7 +779,7 @@ object TextAnalysis {
       .parquet(s"$path/postings/batch_id=$batchId")
     delta.select("doc_id").coalesce(1)
       .write.mode("overwrite").parquet(s"$path/docids/batch_id=$batchId")
-    Similarity.clearInflight(spark, path)
+    StoreLifecycle.clearInflight(spark, path)
   }
 
   /** Serve [[searchTopK]] from the persisted index: the postings read
@@ -877,7 +801,7 @@ object TextAnalysis {
       k: Int = 20): DataFrame = {
     require(terms.nonEmpty, "query term set must not be empty")
     import spark.implicits._
-    Similarity.requireNotInflight(spark, path)
+    StoreLifecycle.requireNotInflight(spark, path)
     serveTextIndex(spark, path, terms, k, None)
   }
 
@@ -901,7 +825,7 @@ object TextAnalysis {
       .collect().map(_.getInt(0)).toSeq.sorted // bounded: <= |terms| rows
     def gen(df: DataFrame): DataFrame =
       asOf.map(n => df.filter(col("batch_id") <= n)).getOrElse(df)
-    val postings = Similarity.minusTombstones(
+    val postings = StoreLifecycle.minusTombstones(
       spark,
       path,
       gen(spark.read.parquet(s"$path/postings"))
@@ -909,7 +833,7 @@ object TextAnalysis {
         .filter(col("tok").isin(terms: _*))
         .select("doc_id", "tok", "tf"),
       "doc_id")
-    val n = Similarity.minusTombstones(
+    val n = StoreLifecycle.minusTombstones(
       spark, path, gen(spark.read.parquet(s"$path/docids")), "doc_id").count()
     scoredTopK(postings, n, k)
   }
@@ -939,21 +863,20 @@ object TextAnalysis {
       k: Int = 20): DataFrame = {
     require(terms.nonEmpty, "query term set must not be empty")
     import spark.implicits._
-    Similarity.requireNotInflight(spark, path)
+    StoreLifecycle.requireNotInflight(spark, path)
     val kind = spark.read.parquet(s"$path/params").select("kind").head().getString(0)
     require(
       kind == "text-stream",
       s"searchTextIndexAsOf: the index at $path is batch-built (kind '$kind') — only " +
         "ingestTextBatch-maintained stores keep batch_id generations to travel over")
     require(
-      !Similarity.storeExists(spark, s"$path/tombstones"),
+      !StoreLifecycle.storeExists(spark, s"$path/tombstones"),
       s"searchTextIndexAsOf: $path carries tombstones, which are not generation-" +
         "stamped — an as-of read cannot know whether a delete precedes generation " +
         s"$batchId; compact the store (reclaim + clear) and as-of reads resume above " +
         "the fold")
-    val fs = textFs(spark, path)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/fold_pin"))) {
-      val folded = readTextFileAt(fs, s"$path/fold_pin").trim.toLong
+    StoreLifecycle.readSmallFile(spark, s"$path/fold_pin").foreach { pin =>
+      val folded = pin.trim.toLong
       require(
         batchId >= folded,
         s"searchTextIndexAsOf: generations <= $folded of $path were folded by " +
@@ -1515,7 +1438,7 @@ object TextAnalysis {
       idCol: String = "doc_id"): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    Similarity.clearTombstones(spark, path)
+    StoreLifecycle.clearTombstones(spark, path)
     gramPostings(corpus, n, textCol, idCol)
       .select(col("gh"), col("doc_id"))
       .distinct()
@@ -1573,7 +1496,7 @@ object TextAnalysis {
     // no full-row distinct on the store: duplicates (retried appends) are
     // absorbed by the g-only distinct below, and the tombstone anti-join
     // is duplicate-insensitive — one column-pruned pass, not two shuffles
-    val hist = Similarity
+    val hist = StoreLifecycle
       .minusTombstones(spark, path, spark.read.parquet(s"$path/postings"), "doc_id")
       // a re-inserted doc must not be marked by its OWN stale postings
       // (union-rebuild parity: the rebuild sees the doc once) — keyed on
@@ -1593,11 +1516,11 @@ object TextAnalysis {
     * chunk/LSH/IVF/PQ compactions.
     */
   def compactGramIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    Similarity.compactIndexDir(spark, path, "postings", "doc_id")
+    StoreLifecycle.compactIndexDir(spark, path, "postings", "doc_id")
     // as in every sibling compaction: tombstones are spent once their rows
     // are physically gone — a stale one would silently suppress a future
     // re-insert of the same doc id
-    Similarity.clearTombstones(spark, path)
+    StoreLifecycle.clearTombstones(spark, path)
   }
 
   /** Streaming maintenance round for the gram index — the span-dedup
@@ -1639,17 +1562,13 @@ object TextAnalysis {
     // params, so even an empty batch 0 wipes a previous run's store;
     // otherwise batch 1 would excise spans against the dead run's
     // postings).
-    StoreLifecycle.claim(
-      spark,
-      path,
-      Seq("postings", "docs", "tombstones"),
-      batchId,
-      () => Seq(n).toDF("n").coalesce(1).write.mode("overwrite").parquet(s"$path/params"),
-      () => requireGramParams(spark, path, n))
+    if (StoreLifecycle.claim(spark, path, batchId, Seq("postings", "docs")))
+      Seq(n).toDF("n").coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    else requireGramParams(spark, path, n)
     if (batch.isEmpty) return // nothing to excise or land
     val pg = gramPostings(batch, n, textCol, idCol).localCheckpoint()
     val hist =
-      if (Similarity.storeExists(spark, s"$path/postings")) {
+      if (StoreLifecycle.storeExists(spark, s"$path/postings")) {
         val raw = spark.read.parquet(s"$path/postings")
         // a batch-built ([[writeGramIndex]]) store is flat (no batch_id
         // dirs): all of it is strictly-earlier history. A stream store
@@ -1657,7 +1576,7 @@ object TextAnalysis {
         // generation, always < any real batch id).
         val earlier =
           if (raw.columns.contains("batch_id")) raw.filter(col("batch_id") < batchId) else raw
-        Similarity
+        StoreLifecycle
           .minusTombstones(spark, path, earlier, "doc_id")
           // the probeDupSpans rule verbatim: a later-batch re-crawl of a
           // doc_id must not be excised against its OWN earlier postings —
@@ -2002,7 +1921,7 @@ object TextAnalysis {
     requireGramParams(spark, path, n)
     require(minTokens >= n, s"minTokens ($minTokens) must be >= n ($n): shorter spans cannot exist")
     val pg = gramPostings(batch, n, textCol, idCol)
-    val bg = Similarity
+    val bg = StoreLifecycle
       .minusTombstones(spark, path, spark.read.parquet(s"$path/postings"), "doc_id")
       .select("gh")
       .distinct()
@@ -2659,7 +2578,7 @@ object TextAnalysis {
     val spark = corpus.sparkSession
     import spark.implicits._
     // full rebuild replaces the index: stale tombstones must not subtract
-    Similarity.clearTombstones(spark, path)
+    StoreLifecycle.clearTombstones(spark, path)
     chunkTokens(corpus, window, stride, textCol, idCol)
       .select(col("chunk_md5"), col("doc_id"))
       .distinct()
@@ -2722,7 +2641,7 @@ object TextAnalysis {
     // Dedup.probeLshIndex): a retracted container must neither surface
     // as a match nor inflate a chunk's posting count toward the cap
     val store = Skew.capHotKeys(
-      Similarity.minusTombstones(
+      StoreLifecycle.minusTombstones(
         spark, path, spark.read.parquet(s"$path/postings").distinct(), "doc_id"),
       Seq("chunk_md5"),
       maxPostings)
@@ -2761,8 +2680,8 @@ object TextAnalysis {
     * index kind that lacked it.
     */
   def compactChunkIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    Similarity.compactIndexDir(spark, path, "postings", "doc_id")
-    Similarity.clearTombstones(spark, path)
+    StoreLifecycle.compactIndexDir(spark, path, "postings", "doc_id")
+    StoreLifecycle.clearTombstones(spark, path)
   }
 
   /** Validate caller parameters against the index's persisted `params`

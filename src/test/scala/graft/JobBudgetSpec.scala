@@ -42,6 +42,21 @@ class JobBudgetSpec extends SparkSpec {
     assert(measured.compiles == 0L, s"a warm pass recompiled ${measured.compiles} classes: $measured")
   }
 
+  // Tombstones are always written as `del_id bigint`, so the store kernel
+  // reads them with that schema: building the subtracted frame must not
+  // pay a parquet footer job to infer it.
+  test("tombstones: building a tombstone-subtracted frame runs no job") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tombjobs").toString
+    graft.ops.Similarity.deleteFromIndex(Seq(3L, 5L).toDF("vec_id"), dir)
+    val df = (1L to 8L).toDF("vec_id")
+    val (live, c) =
+      Census.measure(spark)(graft.ops.StoreLifecycle.minusTombstones(spark, dir, df, "vec_id"))
+    assert(c.jobs == 0L, s"building the frame ran ${c.jobs} jobs: $c")
+    assert(live.as[Long].collect().toSet === Set(1L, 2L, 4L, 6L, 7L, 8L))
+  }
+
   for ((name, ceiling) <- ceilings)
     test(s"job budget: $name runs at most $ceiling jobs") {
       val query = SparkEntry.queries(name)

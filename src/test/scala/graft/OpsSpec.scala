@@ -892,6 +892,105 @@ class OpsSpec extends SparkSpec {
     val kept = spark.read.parquet(s"$lshDir/docs").select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(kept === Set(11L), s"the exact re-crawl must SURVIVE against a wiped store: $kept")
+
+    // Every other claimant: an old run lands state at batches 0 and 5 and
+    // leaves the debris a crash or a delete leaves (each state dir's
+    // .compacting twin, tombstones, staged trees, an inflight marker);
+    // the new stream's EMPTY batch 0 must wipe all of it, and its batch 1
+    // must hold only the new run.
+    val fs = new org.apache.hadoop.fs.Path(lshDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def plantDebris(dir: String, subs: Seq[String]): Unit = {
+      (subs.map(d => s"$d.compacting") ++ Seq("tombstones", "staged", "staged.compacting"))
+        .foreach(d => fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/$d")))
+      fs.create(new org.apache.hadoop.fs.Path(s"$dir/inflight"), true).close()
+    }
+    def assertWiped(dir: String, subs: Seq[String]): Unit =
+      (subs ++ subs.map(d => s"$d.compacting") ++
+        Seq("tombstones", "staged", "staged.compacting", "inflight"))
+        .foreach(d => assert(!new java.io.File(s"$dir/$d").exists, s"$dir/$d survived the claim"))
+    def ids(dir: String, col0: String): Set[Long] =
+      spark.read.parquet(dir).select(col(col0).cast("long")).collect().map(_.getLong(0)).toSet
+    def edges(pairs: (Long, Long)*) = pairs.toDF("src", "dst")
+
+    // IVF-PQ: the trained quantizers die with the codes
+    val ivfPqDir = java.nio.file.Files.createTempDirectory("ivfpqwipe").toString
+    Similarity.ingestIvfPqBatch(e.filter(col("vec_id") < 32), ivfPqDir, 0L, nCentroids = 4)
+    Similarity.ingestIvfPqBatch(e.filter(col("vec_id") < 8), ivfPqDir, 5L, nCentroids = 4)
+    plantDebris(ivfPqDir, Seq("codes", "centroids", "codebook", "errbase"))
+    Similarity.ingestIvfPqBatch(empty, ivfPqDir, 0L, nCentroids = 4)
+    assertWiped(ivfPqDir, Seq("codes", "centroids", "codebook", "errbase", "params"))
+    Similarity.ingestIvfPqBatch(
+      e.filter(col("vec_id") >= 32).select((col("vec_id") + 1000L).as("vec_id"), col("embedding")),
+      ivfPqDir, 1L, nCentroids = 4)
+    assert(ids(s"$ivfPqDir/codes", "vec_id").forall(_ >= 1000L), "old run's codes leaked")
+
+    // text: a tombstone left by the old run must not refuse the new run's
+    // doc 1 (re-inserting a tombstoned id refuses)
+    val textDir = java.nio.file.Files.createTempDirectory("textwipe").toString
+    TextAnalysis.ingestTextBatch(Seq((1L, "alpha beta"), (2L, "beta")).toDF("doc_id", "text"), textDir, 0L)
+    TextAnalysis.ingestTextBatch(Seq((3L, "gamma")).toDF("doc_id", "text"), textDir, 5L)
+    TextAnalysis.deleteFromTextIndex(Seq(1L).toDF("doc_id"), textDir)
+    plantDebris(textDir, Seq("postings", "docids"))
+    TextAnalysis.ingestTextBatch(Seq.empty[(Long, String)].toDF("doc_id", "text"), textDir, 0L)
+    assertWiped(textDir, Seq("postings", "docids", "bucketing", "params"))
+    TextAnalysis.ingestTextBatch(Seq((1L, "delta"), (7L, "delta")).toDF("doc_id", "text"), textDir, 1L)
+    assert(ids(s"$textDir/docids", "doc_id") === Set(1L, 7L))
+    assert(TextAnalysis.searchTextIndex(spark, textDir, Seq("beta", "gamma")).count() === 0L)
+
+    // edge store: support and the exactly-once stamp restart with the run
+    val edgeDir = java.nio.file.Files.createTempDirectory("edgewipe").toString
+    graft.ops.Graph.ingestEdgeBatch(edges((1L, 2L), (2L, 3L), (1L, 3L)), edgeDir, 0L)
+    graft.ops.Graph.ingestEdgeBatch(edges((3L, 4L)), edgeDir, 5L)
+    plantDebris(edgeDir, Seq("edges", "support"))
+    graft.ops.Graph.ingestEdgeBatch(edges(), edgeDir, 0L)
+    assertWiped(edgeDir, Seq("edges", "support", "support_stamp", "bucketing", "params"))
+    graft.ops.Graph.ingestEdgeBatch(edges((10L, 11L), (11L, 12L)), edgeDir, 1L)
+    assert(ids(s"$edgeDir/edges", "u") === Set(10L, 11L))
+    assert(graft.ops.Graph.readEdgeSupport(spark, edgeDir).count() === 2L)
+
+    // CC label store: the remap log and node index die with the labels
+    val ccDir = java.nio.file.Files.createTempDirectory("ccwipe").toString
+    graft.ops.Graph.ingestCcBatch(edges((1L, 2L)), ccDir, 0L)
+    graft.ops.Graph.ingestCcBatch(edges((2L, 3L)), ccDir, 5L)
+    graft.ops.Graph.buildCcNodeIndex(spark, ccDir)
+    plantDebris(ccDir, Seq("cclabels", "nodeidx", "cclog"))
+    graft.ops.Graph.ingestCcBatch(edges(), ccDir, 0L)
+    assertWiped(ccDir, Seq("cclabels", "nodeidx", "cclog", "bucketing", "params"))
+    graft.ops.Graph.ingestCcBatch(edges((20L, 21L), (21L, 22L)), ccDir, 1L)
+    assert(ids(s"$ccDir/cclabels", "node") === Set(20L, 21L, 22L))
+
+    // media: its fingerprints are its pin; batch 1 must not dedup against
+    // the dead run's media (an exact re-upload of old content lands)
+    val mediaDir = java.nio.file.Files.createTempDirectory("mediawipe").toString
+    def media(rows: (Long, Long)*) = rows
+      .map { case (id, content) =>
+        val b = graft.etl.MediaSynth.docBmp(content)
+        (id, "image/bmp", b.length.toLong, b)
+      }
+      .toDF("doc_id", "kind", "n_bytes", "media")
+    Multimodal.ingestMediaBatch(media((1L, 1L)), mediaDir, 0L)
+    Multimodal.ingestMediaBatch(media((2L, 4L)), mediaDir, 5L)
+    plantDebris(mediaDir, Seq("fps", "docs"))
+    Multimodal.ingestMediaBatch(media(), mediaDir, 0L)
+    assertWiped(mediaDir, Seq("fps", "docs"))
+    Multimodal.ingestMediaBatch(media((31L, 1L)), mediaDir, 1L)
+    assert(ids(s"$mediaDir/docs", "doc_id") === Set(31L))
+
+    // a sketch store (KMV): the old run's later batch sketches die
+    val kmvDir = java.nio.file.Files.createTempDirectory("kmvwipe").toString
+    def vals(rows: (String, Long)*) = rows.toDF("g", "v")
+    graft.ops.Stats.ingestKmvBatch(vals(("old", 1L)), kmvDir, 0L, "g", "v")
+    graft.ops.Stats.ingestKmvBatch(vals(("old", 2L)), kmvDir, 5L, "g", "v")
+    plantDebris(kmvDir, Seq("sketch"))
+    graft.ops.Stats.ingestKmvBatch(vals(), kmvDir, 0L, "g", "v")
+    assertWiped(kmvDir, Nil)
+    // the empty batch 0 lands its own empty sketch; the twin and batch 5 die
+    assert(!new java.io.File(s"$kmvDir/sketch.compacting").exists)
+    assert(!new java.io.File(s"$kmvDir/sketch/batch_id=5").exists)
+    graft.ops.Stats.ingestKmvBatch(vals(("new", 3L)), kmvDir, 1L, "g", "v")
+    val groups = spark.read.parquet(s"$kmvDir/sketch").select("grp").collect().map(_.getString(0)).toSet
+    assert(groups === Set("new"), s"old run's sketches leaked: $groups")
   }
 
   test("IVF tombstones + compaction: deleted ids never rank; compaction preserves the probe") {
