@@ -58,11 +58,37 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], elementsNullable)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(
+      ctx,
+      ev,
+      (a, b) => {
+        val c = ctx.freshName("c")
+        s"""
+           |java.lang.Double $c =
+           |  graft.functions.CosineSimilarity.compute($a, $b, $elementsNullable);
+           |if ($c == null) { ${ev.isNull} = true; } else { ${ev.value} = $c.doubleValue(); }
+         """.stripMargin
+      })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression,
+      newRight: Expression): CosineSimilarity = copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+
+  /** The one cosine loop, shared by [[CosineSimilarity]] (eval and
+    * generated code) and the centroid ranking of [[TopCentroids]], so the
+    * two cannot drift. `null` where the contract above says null;
+    * `checkNulls` may be false only when neither input admits null
+    * elements.
+    */
+  def compute(x: ArrayData, y: ArrayData, checkNulls: Boolean): java.lang.Double = {
     val n = math.min(x.numElements(), y.numElements())
-    val checkNulls = elementsNullable
     var dot = 0.0
     var na = 0.0
     var nb = 0.0
@@ -77,46 +103,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
       i += 1
     }
     val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) null else dot / denom
+    if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (a, b) => {
-        val n = ctx.freshName("n")
-        val i = ctx.freshName("i")
-        val dot = ctx.freshName("dot")
-        val na = ctx.freshName("na")
-        val nb = ctx.freshName("nb")
-        val xi = ctx.freshName("xi")
-        val yi = ctx.freshName("yi")
-        val denom = ctx.freshName("denom")
-        val nullCheck =
-          if (elementsNullable)
-            s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
-          else ""
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $nullCheck
-           |  double $xi = (double) $a.getFloat($i);
-           |  double $yi = (double) $b.getFloat($i);
-           |  $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-           |}
-           |double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-           |if (!${ev.isNull}) {
-           |  if ($denom == 0.0) { ${ev.isNull} = true; }
-           |  else { ${ev.value} = $dot / $denom; }
-           |}
-         """.stripMargin
-      })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression,
-      newRight: Expression): CosineSimilarity = copy(left = newLeft, right = newRight)
 }
 
 object functions {
@@ -126,6 +114,10 @@ object functions {
   /** Column wrapper for [[CosineSimilarity]]. */
   def cosine_similarity(a: Column, b: Column): Column =
     shim.column(CosineSimilarity(shim.expression(a), shim.expression(b)))
+
+  /** Column wrapper for [[TopCentroids]]. */
+  def top_centroids(v: Column, centroids: CentroidTable, p: Int): Column =
+    shim.column(TopCentroids(shim.expression(v), centroids, p))
 
   /** Column wrapper for [[SquaredDistanceLong]]. */
   def l2sq_long(a: Column, b: Column): Column =

@@ -1088,16 +1088,10 @@ object Graph {
     * never a code edit, and a binary can never swap against the wrong
     * layout (the partial-rewrite mutators assume every generation used
     * the same bucket function, so the pin also carries the hash-function
-    * version and [[storeBuckets]] refuses a version this binary does not
-    * speak).
+    * version and [[graft.ops.StoreLifecycle.readBucketing]] refuses a
+    * version this binary does not speak).
     */
   private[graft] val supportBuckets = 64
-
-  /** Version pin of the bucket FUNCTION (`pmod(hash(cols), n)`): a store
-    * laid out by a different hash must be refused, not silently read —
-    * the bucket count alone cannot witness that.
-    */
-  private val bucketingVersion = "v1"
 
   /** The support table's bucket of an edge: a deterministic hash of BOTH
     * endpoints, so a hub node's edges still spread across buckets (a
@@ -1110,34 +1104,14 @@ object Graph {
       n: Int = supportBuckets) =
     pmod(hash(u, v), lit(n))
 
-  /** Persist the store's bucket layout pin: hash-function version + count
-    * (a plain FS file — the [[graft.ops.StoreLifecycle.markInflight]] lesson:
-    * a 1-row parquet would cost a whole Spark job per lifecycle call).
-    */
-  private def writeBucketing(
-      spark: org.apache.spark.sql.SparkSession, path: String, n: Int): Unit =
-    StoreLifecycle.writeSmallFile(spark, s"$path/bucketing", s"$bucketingVersion\n$n")
-
-  /** The bucket count a store was laid out with — what every mutator and
-    * census uses (never the compile-time default). A store without the
-    * pin predates it and is by construction the original fixed 64-bucket
-    * layout; a pin with a hash-function version this binary does not
-    * speak is refused with the rebuild named (reading it would silently
-    * swap the wrong buckets).
+  /** The bucket count a store was laid out with
+    * ([[graft.ops.StoreLifecycle.readBucketing]]). A store without the pin
+    * predates it and is by construction the original fixed 64-bucket
+    * layout.
     */
   private[graft] def storeBuckets(
-      spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    StoreLifecycle.readSmallFile(spark, s"$path/bucketing").fold(supportBuckets) { pin =>
-      val lines = pin.trim.split("\n").map(_.trim)
-      require(
-        lines.length >= 2 && lines(0) == bucketingVersion,
-        s"store at $path is bucketed with hash-function version '${lines.headOption.getOrElse("")}' " +
-          s"but this binary speaks '$bucketingVersion' — rebuild the store before mutating it")
-      val n = lines(1).toInt
-      require(n >= 1, s"store at $path pins a non-positive bucket count $n — rebuild it")
-      n
-    }
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Int =
+    StoreLifecycle.readBucketing(spark, path, ifAbsent = supportBuckets)
 
   /** Persist an EDGE STORE with incrementally-maintained per-edge
     * triangle support — the graph family's entry into the repo's
@@ -1169,7 +1143,7 @@ object Graph {
     // mutators work again (the writePqIndex contract) — and any staged
     // tree from a crashed mutation dies unapplied
     StoreLifecycle.wipe(spark, path, Seq("support_stamp", "edges"))
-    writeBucketing(spark, path, buckets)
+    StoreLifecycle.writeBucketing(spark, path, buckets)
     und.write.mode("overwrite").parquet(s"$path/edges")
     StoreLifecycle.rewriteDir(
       spark,
@@ -1286,7 +1260,7 @@ object Graph {
       Seq("edges-stream").toDF("kind")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
       StoreLifecycle.markInflight(spark, path, "ingestEdgeBatch")
-      writeBucketing(spark, path, supportBuckets)
+      StoreLifecycle.writeBucketing(spark, path, supportBuckets)
       und.write.mode("overwrite").parquet(s"$path/edges/batch_id=$batchId")
       StoreLifecycle.rewriteDir(
         spark,
@@ -1472,7 +1446,7 @@ object Graph {
         .repartition(col("bucket")), // one file per bucket (the write discipline)
       s"$path/support",
       Seq("bucket"))
-    writeBucketing(spark, path, buckets)
+    StoreLifecycle.writeBucketing(spark, path, buckets)
     StoreLifecycle.clearInflight(spark, path)
   }
 
@@ -1600,7 +1574,7 @@ object Graph {
     // root instead of appending to a replaced base — plus the generation
     // log and the node index, which no longer describe the replaced store
     StoreLifecycle.wipe(spark, path, Seq("cclog", "cclog_folded", "nodeidx"))
-    writeBucketing(spark, path, buckets)
+    StoreLifecycle.writeBucketing(spark, path, buckets)
     StoreLifecycle.rewriteDir(
       spark,
       labels
@@ -1685,7 +1659,7 @@ object Graph {
           .repartition(col("bucket")),
         s"$path/nodeidx",
         Seq("bucket"))
-    writeBucketing(spark, path, buckets)
+    StoreLifecycle.writeBucketing(spark, path, buckets)
     StoreLifecycle.clearInflight(spark, path)
   }
 

@@ -2,9 +2,13 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
+
+import graft.functions.{CellSums, CentroidTable}
+import graft.functions.functions.top_centroids
 
 import StoreLifecycle.{clearInflight, clearTombstones, compactIndexDir, deleteDir, markInflight,
-  minusTombstones, requireNotInflight, rewriteDir, storeExists}
+  minusTombstones, readAsWritten, requireNotInflight, rewriteDir, storeExists}
 
 /** Approximate-nearest-neighbor search over embedding columns
   * (`array<float>`). Two paths:
@@ -17,8 +21,11 @@ import StoreLifecycle.{clearInflight, clearTombstones, compactIndexDir, deleteDi
   *    arithmetic exactly. Candidates = same-bucket rows → the cross join
   *    shrinks to sum(bucket²); the scale path for full-corpus kNN.
   *
-  * All dot products promote float elements to double and fold sequentially
-  * (zip_with + aggregate), matching the oracle bit-for-bit.
+  * Cosine runs in one compiled loop ([[graft.functions.CosineSimilarity]]):
+  * float elements widen to double and accumulate sequentially in index
+  * order, matching the oracle bit-for-bit. IVF cell assignment, probing
+  * and centroid training rank centroids with one compiled kernel over the
+  * same loop ([[graft.functions.TopCentroids]]).
   */
 object Similarity {
 
@@ -328,7 +335,8 @@ object Similarity {
     * the `nCentroids` LOWEST-id corpus vectors — identical to `id <
     * nCentroids` on the dense-from-0 id spaces the oracles assume, but
     * also correct for sharded/offset/thinned id spaces; same seed rule as
-    * the flat quantizer; fixed Lloyd iterations). Returns (centroid_id,
+    * the flat quantizer; fixed Lloyd iterations, each one job folding
+    * the corpus into [[graft.functions.CellSums]]). Returns (centroid_id,
     * centroid) with centroids as array<float>.
     *
     * Every stage is integer- or rounding-stabilized so the WHOLE k-means
@@ -349,55 +357,46 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    var cents: Seq[(Long, Seq[Float])] = corpus
+    val vecs = corpus.select(col(vecCol))
+    // the Lloyd pass reads the rows raw: no analyzer checks the type
+    val vecType = vecs.schema.head.dataType
+    require(
+      vecType match { case ArrayType(FloatType, _) => true; case _ => false },
+      s"ivfCentroids needs an array<float> '$vecCol', got ${vecType.catalogString}")
+    var cents = CentroidTable(corpus
       .select(col(idCol).cast("long"), col(vecCol))
       .orderBy(col(idCol))
       .limit(nCentroids)
       .collect()
       .toSeq
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-    require(cents.nonEmpty, "ivfCentroids: corpus has no vectors to seed centroids from")
-    // Each Lloyd iteration materializes its centroids back to a driver-side
-    // literal (<= nCentroids rows). Without this, iteration N's plan embeds
-    // iterations 1..N-1 and every downstream reference re-evaluates the whole
-    // k-means lineage — the classic iterative-algorithm anti-pattern.
+      .map(r => (r.getLong(0), r.getSeq[Float](1))))
+    require(cents.size > 0, "ivfCentroids: corpus has no vectors to seed centroids from")
+    // Each Lloyd iteration is one job over the corpus (the MLlib k-means
+    // shape): every partition assigns its rows with the TopCentroids
+    // kernel and folds them into per-cell integer milli sums; the driver
+    // takes the means. The centroids live on the driver between
+    // iterations, so no iteration's plan embeds the ones before it.
+    val vectors = vecs.queryExecution.toRdd
     (1 to iters).foreach { _ =>
-      val assigned = assign(corpus, cents.toDF("centroid_id", "centroid"), idCol, vecCol)
-      // element-wise milli-mean per cell: posexplode → integer mean per
-      // dimension → re-pack sorted by position
-      cents = assigned
-        .select(col("centroid_id"), posexplode(col(vecCol)))
-        .groupBy("centroid_id", "pos")
-        .agg(
-          floor(
-            sum(round(col("col").cast("double") * 1000, 0).cast("long")).cast("double") /
-              count(lit(1))).cast("long").as("m"))
-        .groupBy("centroid_id")
-        .agg(
-          transform(
-            array_sort(collect_list(struct(col("pos"), col("m")))),
-            s => (s.getField("m").cast("double") / lit(1000.0)).cast("float")).as("centroid"))
-        .collect()
-        .toSeq
-        .map(r => (r.getLong(0), r.getSeq[Float](1)))
+      val t = requireCentroids(requireNoNullElements(cents))
+      cents = vectors.treeAggregate(new CellSums(t.size))(CellSums.fold(t), _ merge _).centroids(t)
     }
-    cents.toDF("centroid_id", "centroid")
+    CentroidTable.rows(requireNoNullElements(cents)).toDF("centroid_id", "centroid")
   }
 
-  /** Nearest-centroid assignment (centroids broadcast). Rounds the cosine
-    * to 6 places before ranking — ties break on centroid id, so the
-    * assignment is engine-portable under FP noise (same contract as
-    * [[ivfFlatTopK]]'s cells).
+  /** A centroid is an `array<float>` without null elements: a seed vector
+    * with a null element, or a cell whose members are all null at one
+    * position, has no centroid to write.
     */
-  private def assign(
-      corpus: DataFrame,
-      cents: DataFrame,
-      idCol: String,
-      vecCol: String): DataFrame =
-    corpus.select(
-      col(idCol),
-      col(vecCol),
-      element_at(topCentroids(col(vecCol), centArrayLit(cents), 1), 1).as("centroid_id"))
+  private def requireNoNullElements(t: CentroidTable): CentroidTable = {
+    CentroidTable.rows(t).find { case (_, v) => v != null && v.contains(null) }.foreach {
+      case (id, v) =>
+        throw new IllegalArgumentException(
+          s"ivfCentroids: centroid $id has a null element at position ${v.indexOf(null)} " +
+            "(a seed vector with a null element, or a cell whose members are all null there)")
+    }
+    t
+  }
 
   /** IVF top-k with a FLAT deterministic coarse quantizer: the seed
     * centroids are the corpus vectors with `id < nCentroids`, no Lloyd
@@ -435,16 +434,12 @@ object Similarity {
       .orderBy(col("centroid_id"))
       .limit(nCentroids)
 
-  /** The centroid table as ONE in-plan array literal, ordered by
-    * centroid_id — a bounded decision read (≤ nCentroids rows, the
-    * [[ivfCentroids]] collect discipline). Feeding assignment/probing an
-    * array literal turns the old `crossJoin(broadcast) + row_number`
-    * window — which multiplied every input row × nCentroids and then
-    * SHUFFLED that product to sort per key — into a per-row array scan:
+  /** The centroid table collected to the driver, ordered by centroid_id
+    * — a bounded decision read (≤ nCentroids rows, the [[ivfCentroids]]
+    * collect discipline). Assignment and probing rank each row against it
+    * inside one compiled expression ([[graft.functions.TopCentroids]]):
     * zero exchanges at any corpus size (guide §2.4, remove shuffles
-    * outright), with the window's exact ordering contract
-    * (csim desc NULLS LAST, centroid_id asc) moved into one explicit
-    * comparator ([[centOrder]]).
+    * outright), ordered by (csim desc NULLS LAST, centroid_id asc).
     *
     * CONTRACT (round-17 advisory, deliberate): an EMPTY centroid table
     * fails fast here — it can only arise from building/probing over an
@@ -456,60 +451,21 @@ object Similarity {
     * plan-construction time — eagerly, by design: the bad call dies at
     * its own stack frame, not inside a later action.
     */
-  private def centArrayLit(cents: DataFrame): Column = centArray(cents)._1
-
-  /** [[centArrayLit]] plus the centroid count its collect already read —
-    * the tuners need both and must not pay a second job for the count.
-    */
-  private def centArray(cents: DataFrame): (Column, Int) = {
-    val rows = cents
+  private def centTable(cents: DataFrame): CentroidTable =
+    requireCentroids(CentroidTable(cents
       .select(col("centroid_id").cast("long"), col("centroid"))
       .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-      .sortBy(_._1)
+      .toSeq
+      .map(r => (r.getLong(0), r.getSeq[Float](1)))))
+
+  private def requireCentroids(t: CentroidTable): CentroidTable = {
     require(
-      rows.nonEmpty,
+      t.size > 0,
       "centroid table is empty — IVF builds/probes over an empty corpus or train set " +
         "are refused (an empty index would silently answer every query with zero rows); " +
         "build the index over a non-empty corpus first")
-    (array(rows.map { case (id, v) =>
-      struct(lit(id).as("centroid_id"), typedLit(v).as("centroid"))
-    }: _*), rows.length)
+    t
   }
-
-  /** (csim desc NULLS LAST, centroid_id asc) over scored centroid structs —
-    * bit-for-bit the ordering of the replaced `row_number` window
-    * (`orderBy(csim.desc, centroid_id)`): [[cosine]] yields null (never
-    * NaN) on degenerate vectors, and desc ordering puts nulls last.
-    */
-  private def centOrder(l: Column, r: Column): Column = {
-    val (ls, rs) = (l.getField("csim"), r.getField("csim"))
-    val (li, ri) = (l.getField("centroid_id"), r.getField("centroid_id"))
-    when(ls.isNull && rs.isNotNull, 1)
-      .when(ls.isNotNull && rs.isNull, -1)
-      .when(ls > rs, -1)
-      .when(ls < rs, 1)
-      .when(li < ri, -1)
-      .when(li > ri, 1)
-      .otherwise(0)
-  }
-
-  /** Top-`p` centroid ids of one vector against the centroid array
-    * literal, in probe order — the shuffle-free core of assignment
-    * (p = 1) and probing (p = nProbe).
-    */
-  private def topCentroids(v: Column, centsArr: Column, p: Int): Column =
-    slice(
-      transform(
-        array_sort(
-          transform(centsArr, c =>
-            struct(
-              round(cosine(v, c.getField("centroid")), 6).as("csim"),
-              c.getField("centroid_id").as("centroid_id"))),
-          (l, r) => centOrder(l, r)),
-        s => s.getField("centroid_id")),
-      1,
-      p)
 
   /** Corpus assigned to nearest-centroid cells (rounded cosine, lower
     * centroid id breaks ties) — one narrow projection, no shuffle.
@@ -522,7 +478,7 @@ object Similarity {
       carry: Seq[(String, String)] = Nil) =
     corpus.select(
       col(idCol).as("neighbor_id") +: col(vecCol).as("cv") +:
-        element_at(topCentroids(col(vecCol), centArrayLit(cents), 1), 1).as("centroid_id") +:
+        element_at(top_centroids(col(vecCol), centTable(cents), 1), 1).as("centroid_id") +:
         carry.map { case (c, a) => col(c).as(a) }: _*)
 
   /** Each query paired with its `nProbe` nearest cells. */
@@ -533,15 +489,15 @@ object Similarity {
       idCol: String,
       vecCol: String,
       carry: Seq[(String, String)] = Nil): DataFrame =
-    flatProbesArr(queries, centArrayLit(cents), nProbe, idCol, vecCol, carry)
+    flatProbesOf(queries, centTable(cents), nProbe, idCol, vecCol, carry)
 
-  /** [[flatProbes]] over a PRE-BUILT centroid array literal — the tuners
+  /** [[flatProbes]] over a PRE-COLLECTED centroid table — the tuners
     * probe the same store several times and must not pay the bounded
     * centroid collect per probe.
     */
-  private def flatProbesArr(
+  private def flatProbesOf(
       queries: DataFrame,
-      centsArr: Column,
+      cents: CentroidTable,
       nProbe: Int,
       idCol: String,
       vecCol: String,
@@ -550,7 +506,7 @@ object Similarity {
       .select(
         col(idCol).as("query_id") +: col(vecCol).as("qv") +:
           carry.map { case (c, a) => col(c).as(a) }: _*)
-      .withColumn("__cells", topCentroids(col("qv"), centsArr, nProbe))
+      .withColumn("__cells", top_centroids(col("qv"), cents, nProbe))
       // explode_outer + null guard, never plain explode over a computed
       // array: InferFiltersFromGenerate would re-evaluate the scoring
       // chain per row (the round-10 DSIR lesson)
@@ -1201,6 +1157,11 @@ object Similarity {
     clearInflight(spark, path)
   }
 
+  /** The IVF `params` pin as [[writeIvfWith]] and [[ingestIvfBatch]]
+    * write it: reads pass it, so none pays a footer job to infer it.
+    */
+  private val ivfParamsSchema = "kind string, n_centroids int, iters int, dim int"
+
   /** (rows, nulls, minDim, maxDim) of a vector column in ONE aggregation
     * job — the pre-flight shared by the dim checks. A `limit(1)` probe
     * would NPE on a null leading vector (size(null) is null) and would
@@ -1231,7 +1192,7 @@ object Similarity {
     * no-op.
     */
   private def requireIvfDim(df: DataFrame, path: String, vecCol: String): Unit = {
-    val stored = df.sparkSession.read.parquet(s"$path/params")
+    val stored = df.sparkSession.read.schema(ivfParamsSchema).parquet(s"$path/params")
       .select("dim").head().getInt(0)
     val (n, nulls, dmin, dmax) = vecDimProfile(df, vecCol)
     if (n == 0) return
@@ -1256,7 +1217,7 @@ object Similarity {
       vecCol: String = "embedding"): Unit = {
     requireNotInflight(batch.sparkSession, path) // crashed retrain: refuse, never land
     requireIvfDim(batch, path, vecCol)
-    val cents = batch.sparkSession.read.parquet(s"$path/centroids")
+    val cents = readAsWritten(batch.sparkSession, s"$path/centroids")
     flatCells(batch, cents, idCol, vecCol)
       .write
       .mode("append")
@@ -1317,12 +1278,13 @@ object Similarity {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$path/params")
     } else {
-      val stored = spark.read.parquet(s"$path/params").select("dim").head().getInt(0)
+      val stored = spark.read.schema(ivfParamsSchema).parquet(s"$path/params")
+        .select("dim").head().getInt(0)
       require(
         dmin.contains(stored),
         s"IVF index at $path was built over $stored-dim vectors, batch carries ${dmin.get}-dim")
     }
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = readAsWritten(spark, s"$path/centroids")
     flatCells(batch, cents, idCol, vecCol)
       .write
       .mode("overwrite")
@@ -1542,7 +1504,7 @@ object Similarity {
     requireIvfPqDim(batch, path, vecCol)
     encodeToCells(
       batch,
-      spark.read.parquet(s"$path/centroids"),
+      readAsWritten(spark, s"$path/centroids"),
       spark.read.parquet(s"$path/codebook"),
       m, dim / m, idCol, vecCol)
       .write.mode("append").partitionBy("centroid_id").parquet(s"$path/codes")
@@ -1571,7 +1533,7 @@ object Similarity {
     requireNotInflight(spark, path)
     requireIvfPqParams(spark, path, m, ksub, dim)
     requireIvfPqDim(queries, path, vecCol)
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = readAsWritten(spark, s"$path/centroids")
     val cb = spark.read.parquet(s"$path/codebook")
     val probes = flatProbes(queries, cents, nProbe, idCol, vecCol)
       .select("query_id", "centroid_id")
@@ -1651,7 +1613,7 @@ object Similarity {
     val enc = if (trainedHere) encRaw.localCheckpoint() else encRaw
     enc
       .join(
-        flatCells(batch, spark.read.parquet(s"$path/centroids"), idCol, vecCol)
+        flatCells(batch, readAsWritten(spark, s"$path/centroids"), idCol, vecCol)
           .select(col("neighbor_id").as("vec_id"), col("centroid_id")),
         Seq("vec_id"))
       .select("vec_id", "subspace", "code", "centroid_id")
@@ -1687,10 +1649,10 @@ object Similarity {
     * converges to the same index.
     */
   def retrainIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val p = spark.read.parquet(s"$path/params")
+    val p = spark.read.schema(ivfParamsSchema).parquet(s"$path/params")
       .select("kind", "n_centroids", "iters").head()
     val (kind, nCentroids, iters) = (p.getString(0), p.getInt(1), p.getInt(2))
-    val cellsRaw = spark.read.parquet(s"$path/cells")
+    val cellsRaw = readAsWritten(spark, s"$path/cells")
     val hasBatchDirs = cellsRaw.columns.contains("batch_id")
     val live = minusTombstones(spark, path, cellsRaw, "neighbor_id")
       .select(col("neighbor_id").as("vec_id"), col("cv").as("embedding"))
@@ -2052,8 +2014,8 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     require(!batch.isEmpty, "annIndexAudit: empty batch has no drift signal")
     requireIvfDim(batch, path, vecCol)
-    val cents = spark.read.parquet(s"$path/centroids")
-    val cellsRaw = spark.read.parquet(s"$path/cells")
+    val cents = readAsWritten(spark, s"$path/centroids")
+    val cellsRaw = readAsWritten(spark, s"$path/cells")
     val hasBatchDirs = cellsRaw.columns.contains("batch_id")
     val idx = minusTombstones(spark, path, cellsRaw, "neighbor_id")
       .groupBy("centroid_id")
@@ -2384,7 +2346,7 @@ object Similarity {
       nProbe: Int = 4,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val live = minusTombstones(spark, path, spark.read.parquet(s"$path/cells"), "neighbor_id")
+    val live = minusTombstones(spark, path, readAsWritten(spark, s"$path/cells"), "neighbor_id")
       .select(col("neighbor_id").as(idCol), col("cv").as(vecCol))
     annRecallAudit(
       probeIvfIndex(spark, path, queries, k, nProbe, idCol, vecCol),
@@ -2488,12 +2450,12 @@ object Similarity {
     require(
       targetRecallMilli >= 1 && targetRecallMilli <= 1000,
       s"targetRecallMilli must be in [1, 1000], got $targetRecallMilli")
-    val (q, cells, centsArr, nCent, exact) =
+    val (q, cells, cents, exact) =
       flatTuneInputs(spark, path, queries, k, exactTopK, idCol, vecCol)
-    val (nQueries, curve) = flatRecallCurve(q, exact, cells, centsArr, nCent, k, idCol, vecCol)
+    val (nQueries, curve) = flatRecallCurve(q, exact, cells, cents, k, idCol, vecCol)
     nProbeSearch(
-      spark, nCent, targetRecallMilli, nQueries, curve,
-      ivfCandidateCount(q, centsArr, cells, idCol, vecCol),
+      spark, cents.size, targetRecallMilli, nQueries, curve,
+      ivfCandidateCount(q, cents, cells, idCol, vecCol),
       nProbeHint)
   }
 
@@ -2510,16 +2472,16 @@ object Similarity {
       k: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): IndexedSeq[Long] = {
-    val (q, cells, centsArr, nCent, exact) =
+    val (q, cells, cents, exact) =
       flatTuneInputs(spark, path, queries, k, None, idCol, vecCol)
-    flatRecallCurve(q, exact, cells, centsArr, nCent, k, idCol, vecCol)._2
+    flatRecallCurve(q, exact, cells, cents, k, idCol, vecCol)._2
   }
 
   /** Validation and the store reads a flat tune needs, each paid once:
     * the checkpointed query sample (read by the ground truth, the curve
-    * and the candidate count), the live cells, the centroid literal with
-    * its count, and the exact top-k (the caller's shared one, or derived
-    * over the live set).
+    * and the candidate count), the live cells, the collected centroid
+    * table, and the exact top-k (the caller's shared one, or derived over
+    * the live set).
     */
   private def flatTuneInputs(
       spark: org.apache.spark.sql.SparkSession,
@@ -2528,21 +2490,21 @@ object Similarity {
       k: Int,
       exactTopK: Option[DataFrame],
       idCol: String,
-      vecCol: String): (DataFrame, DataFrame, Column, Int, DataFrame) = {
+      vecCol: String): (DataFrame, DataFrame, CentroidTable, DataFrame) = {
     requireNotInflight(spark, path)
     requireIvfDim(queries, path, vecCol)
-    val cells = minusTombstones(spark, path, spark.read.parquet(s"$path/cells"), "neighbor_id")
+    val cells = minusTombstones(spark, path, readAsWritten(spark, s"$path/cells"), "neighbor_id")
     val q = queries.localCheckpoint()
-    val (centsArr, nCent) = centArray(spark.read.parquet(s"$path/centroids"))
+    val cents = centTable(readAsWritten(spark, s"$path/centroids"))
     // read once by the curve aggregation: no checkpoint
     val exact = exactTopK.getOrElse(bruteForceTopK(
       q, cells.select(col("neighbor_id").as(idCol), col("cv").as(vecCol)), k, idCol, vecCol))
-    (q, cells, centsArr, nCent, exact)
+    (q, cells, cents, exact)
   }
 
   /** Micro recall@k of the flat IVF probe at EVERY nProbe from ONE
     * aggregation: `(n_queries, curve)` with `curve(p)` for p in
-    * 0..nCent. Closed form: the probe reranks its candidates by exact
+    * 0..nCentroids. Closed form: the probe reranks its candidates by exact
     * rounded cosine under [[bruteForceTopK]]'s total order (`cos_r`
     * desc, `neighbor_id` asc), so every candidate that outranks a true
     * top-k neighbour t is itself a true top-k neighbour — fewer than k
@@ -2561,14 +2523,14 @@ object Similarity {
       q: DataFrame,
       exact: DataFrame,
       cells: DataFrame,
-      centsArr: Column,
-      nCent: Int,
+      cents: CentroidTable,
       k: Int,
       idCol: String,
       vecCol: String): (Long, IndexedSeq[Long]) = {
+    val nCent = cents.size
     val cellRank = q.select(
       col(idCol).as("query_id"),
-      posexplode_outer(topCentroids(col(vecCol), centsArr, nCent)).as(Seq("cell_pos", "centroid_id")))
+      posexplode_outer(top_centroids(col(vecCol), cents, nCent)).as(Seq("cell_pos", "centroid_id")))
     val byRank = exact
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "rank")
@@ -2623,8 +2585,7 @@ object Similarity {
       s"targetRecallMilli must be in [1, 1000], got $targetRecallMilli")
     requireNotInflight(spark, path)
     requireIvfPqParams(spark, path, m, ksub, dim)
-    val cents = spark.read.parquet(s"$path/centroids")
-    val nCent = cents.count().toInt
+    val cents = readAsWritten(spark, s"$path/centroids")
     requireIvfPqDim(queries, path, vecCol)
     val codes = minusTombstones(spark, path, spark.read.parquet(s"$path/codes"), "vec_id")
     val liveIds = codes.select("vec_id").distinct()
@@ -2635,22 +2596,22 @@ object Similarity {
     // store reads, query validation, and the query-side ADC distance
     // table are rung-invariant: build them once, probe many (the flat
     // tuner's discipline) — only the probed-cell set varies with p
-    val centsArr = centArrayLit(cents)
+    val centTab = centTable(cents)
     val dtab = pqDistTable(q, spark.read.parquet(s"$path/codebook"), m, dim / m, idCol, vecCol)
       .localCheckpoint()
     auditedNProbeSearch(
-      spark, q, live, k, targetRecallMilli, nCent, idCol, vecCol,
+      spark, q, live, k, targetRecallMilli, centTab.size, idCol, vecCol,
       p =>
         adcTail(
           codes
             .join(
-              broadcast(flatProbesArr(q, centsArr, p, idCol, vecCol)
+              broadcast(flatProbesOf(q, centTab, p, idCol, vecCol)
                 .select("query_id", "centroid_id")),
               Seq("centroid_id"))
             .filter(col("query_id") =!= col("vec_id"))
             .join(broadcast(dtab), Seq("query_id", "subspace", "code")),
           k),
-      ivfPqCandidateCount(q, cents, codes, idCol, vecCol),
+      ivfPqCandidateCount(q, centTab, codes, idCol, vecCol),
       nProbeHint)
   }
 
@@ -2720,14 +2681,14 @@ object Similarity {
     val rungs = ladder.map { nc =>
       val p = s"$workDir/nc_$nc"
       writeIvfIndexTrained(corpusN, train, p, nc, iters, idCol, vecCol)
-      val cells = spark.read.parquet(s"$p/cells") // fresh build: no tombstones
-      val centsArr = centArrayLit(spark.read.parquet(s"$p/centroids"))
-      val (nQueries, curve) = flatRecallCurve(q, exact, cells, centsArr, nc, k, idCol, vecCol)
+      val cells = readAsWritten(spark, s"$p/cells") // fresh build: no tombstones
+      val cents = centTable(readAsWritten(spark, s"$p/centroids"))
+      val (nQueries, curve) = flatRecallCurve(q, exact, cells, cents, k, idCol, vecCol)
       // the tuner's output is a 1-row local relation (the search already
       // ran), so this read is a bounded decision read
       val row = nProbeSearch(
         spark, nc, targetRecallMilli, nQueries, curve,
-        ivfCandidateCount(q, centsArr, cells, idCol, vecCol),
+        ivfCandidateCount(q, cents, cells, idCol, vecCol),
         hint).head()
       hint = row.getAs[Long]("n_probe").toInt // seed the next rung's search
       (nc.toLong, row.getAs[Long]("n_probe"), row.getAs[Long]("recall_milli"),
@@ -2802,11 +2763,11 @@ object Similarity {
     val rungs = ladder.map { nc =>
       val p = s"$workDir/nc_$nc"
       writeIvfPqIndexTrained(corpusN, train, p, nc, iters, m, ksub, dim, idCol, vecCol)
-      val cents = spark.read.parquet(s"$p/centroids")
+      val cents = readAsWritten(spark, s"$p/centroids")
       val codes = spark.read.parquet(s"$p/codes") // fresh build: no tombstones
       // rung-invariant pieces built once per rung store (the flat
-      // ladder's discipline): centroid literal + query ADC table
-      val centsArr = centArrayLit(cents)
+      // ladder's discipline): centroid table + query ADC table
+      val centTab = centTable(cents)
       val dtab = pqDistTable(q, spark.read.parquet(s"$p/codebook"), m, dim / m, idCol, vecCol)
         .localCheckpoint()
       val row = auditedNProbeSearch(
@@ -2815,13 +2776,13 @@ object Similarity {
           adcTail(
             codes
               .join(
-                broadcast(flatProbesArr(q, centsArr, pp, idCol, vecCol)
+                broadcast(flatProbesOf(q, centTab, pp, idCol, vecCol)
                   .select("query_id", "centroid_id")),
                 Seq("centroid_id"))
               .filter(col("query_id") =!= col("vec_id"))
               .join(broadcast(dtab), Seq("query_id", "subspace", "code")),
             k),
-        ivfPqCandidateCount(q, cents, codes, idCol, vecCol),
+        ivfPqCandidateCount(q, centTab, codes, idCol, vecCol),
         hint,
         Some(exact)).head()
       hint = row.getAs[Long]("n_probe").toInt
@@ -2842,12 +2803,12 @@ object Similarity {
   /** (query, candidate) pairs a flat-IVF probe at `p` exact-scores —
     * the `candidates_scored` cost echo, one definition for every tuner
     * face (the oracle pins it through `ann_autotune_nprobe`). Takes the
-    * tuner's centroid literal, so the count collects no centroids.
+    * tuner's centroid table, so the count collects no centroids.
     */
   private def ivfCandidateCount(
-      q: DataFrame, centsArr: Column, cells: DataFrame,
+      q: DataFrame, cents: CentroidTable, cells: DataFrame,
       idCol: String, vecCol: String)(p: Int): Long =
-    flatProbesArr(q, centsArr, p, idCol, vecCol)
+    flatProbesOf(q, cents, p, idCol, vecCol)
       .join(cells.select("neighbor_id", "centroid_id"), Seq("centroid_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .count()
@@ -2857,9 +2818,9 @@ object Similarity {
     * non-obvious invariant lives in ONE place.
     */
   private def ivfPqCandidateCount(
-      q: DataFrame, cents: DataFrame, codes: DataFrame,
+      q: DataFrame, cents: CentroidTable, codes: DataFrame,
       idCol: String, vecCol: String)(p: Int): Long =
-    flatProbes(q, cents, p, idCol, vecCol)
+    flatProbesOf(q, cents, p, idCol, vecCol)
       .select("query_id", "centroid_id")
       .join(codes.filter(col("subspace") === 0).select("vec_id", "centroid_id"),
         Seq("centroid_id"))
@@ -2996,7 +2957,7 @@ object Similarity {
     require(!batch.isEmpty, "indexDriftReport: empty batch has no drift signal")
     requireNotInflight(spark, path)
     requireIvfDim(batch, path, vecCol)
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = readAsWritten(spark, s"$path/centroids")
     def ppm(counts: DataFrame, nCol: String, pCol: String) = {
       val t = counts.agg(sum(nCol).cast("long").as("__tot"))
       counts
@@ -3007,7 +2968,7 @@ object Similarity {
           expr(s"$nCol * 1000000 div __tot").cast("long").as(pCol))
     }
     val idx = ppm(
-      minusTombstones(spark, path, spark.read.parquet(s"$path/cells"), "neighbor_id")
+      minusTombstones(spark, path, readAsWritten(spark, s"$path/cells"), "neighbor_id")
         .groupBy("centroid_id")
         .agg(count(lit(1)).cast("long").as("n_index")),
       "n_index", "index_ppm")
@@ -3050,8 +3011,8 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     requireNotInflight(spark, path)
     requireIvfDim(queries, path, vecCol)
-    val cents = spark.read.parquet(s"$path/centroids")
-    val cells = minusTombstones(spark, path, spark.read.parquet(s"$path/cells"), "neighbor_id")
+    val cents = readAsWritten(spark, s"$path/centroids")
+    val cells = minusTombstones(spark, path, readAsWritten(spark, s"$path/cells"), "neighbor_id")
     rerank(flatProbes(queries, cents, nProbe, idCol, vecCol), cells, k)
   }
 
@@ -3088,17 +3049,9 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val cents = ivfCentroids(corpus, nCentroids, iters = 3, idCol, vecCol)
-    val cells = assign(corpus, cents, idCol, vecCol)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"), col("centroid_id"))
-    val probes = flatProbes(queries, cents, nProbe, idCol, vecCol)
-    rank(
-      probes
-        .join(cells, Seq("centroid_id"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(
-          col("query_id"),
-          col("neighbor_id"),
-          round(cosine(col("qv"), col("cv")), 6).as("cos_r")),
+    rerank(
+      flatProbes(queries, cents, nProbe, idCol, vecCol),
+      flatCells(corpus, cents, idCol, vecCol),
       k)
   }
 

@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** The one store kernel. Every persisted store — IVF, PQ, IVF-PQ, LSH,
   * set-join, token-edit, gram, text, edge, CC, media, the sketches and
@@ -96,6 +99,38 @@ private[graft] object StoreLifecycle {
     }
   }
 
+  /** Read the parquet tree at `dir` with the schema its writer stored in
+    * its files. A schemaless `spark.read.parquet` infers that same schema
+    * from one file's footer, but in a Spark job of its own; this reads
+    * the footer on the driver. Partition columns are still discovered
+    * from the directory names. A tree without a Spark-written file falls
+    * back to inference (and fails as it would).
+    */
+  def readAsWritten(spark: SparkSession, dir: String): DataFrame = {
+    val root = new Path(dir)
+    val fs = fsOf(spark, dir)
+    // the part files Spark's listing reads: no hidden or `_`-prefixed
+    // (non-partition) path component below `dir`
+    def visible(f: Path): Boolean =
+      Iterator.iterate(f)(_.getParent).takeWhile(p => p != null && p.depth() > root.depth())
+        .forall(p => !p.getName.startsWith(".") && (!p.getName.startsWith("_") || p.getName.contains("=")))
+    val files = if (fs.exists(root)) fs.listFiles(root, true) else null
+    var schema: Option[StructType] = None
+    while (schema.isEmpty && files != null && files.hasNext) {
+      val f = fs.makeQualified(files.next().getPath)
+      if (f.getName.endsWith(".parquet") && visible(f)) {
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, spark.sparkContext.hadoopConfiguration))
+        try schema = Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(sparkSchemaKey))
+          .map(DataType.fromJson(_).asInstanceOf[StructType])
+        finally r.close()
+      }
+    }
+    schema.fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
+  }
+
+  /** The footer key Spark's parquet writer stores the row schema under. */
+  private val sparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
   /** Rewrite `dir` with the (materialized) content of `df` via a
     * tmp-dir + rename swap: the new generation lands completely in
     * `<dir>.compacting` before the old tree is dropped, so a crashed
@@ -137,6 +172,42 @@ private[graft] object StoreLifecycle {
       else fs.delete(tmp, true)
     }
   }
+
+  // ---- bucketing pin ----
+
+  /** Version of the bucket FUNCTION (`pmod(hash(cols), n)`) a bucketed
+    * store (edge, CC, text) was laid out with: a store laid out by a
+    * different hash must be refused, not silently read — the bucket count
+    * alone cannot witness that.
+    */
+  private val bucketingVersion = "v1"
+
+  /** Persist a bucketed store's layout pin `bucketing`: the hash-function
+    * version and the bucket count, as `v1\n<count>`.
+    */
+  def writeBucketing(spark: SparkSession, path: String, n: Int): Unit =
+    writeSmallFile(spark, s"$path/bucketing", s"$bucketingVersion\n$n")
+
+  /** The bucket count a store was laid out with — what every mutator,
+    * reader and census uses, never a compile-time default. A pin with a
+    * hash-function version this binary does not speak, or a count below
+    * 1, is refused with the rebuild named (reading it would silently
+    * swap or probe the wrong buckets). A store WITHOUT a pin gets
+    * `ifAbsent`, the caller's missing-pin policy: a legacy layout where
+    * pinless stores exist, a refusal where a missing pin only means a
+    * damaged tree.
+    */
+  def readBucketing(spark: SparkSession, path: String, ifAbsent: => Int): Int =
+    readSmallFile(spark, s"$path/bucketing").fold(ifAbsent) { pin =>
+      val lines = pin.trim.split("\n").map(_.trim)
+      require(
+        lines.length >= 2 && lines(0) == bucketingVersion,
+        s"store at $path is bucketed with hash-function version '${lines.headOption.getOrElse("")}' " +
+          s"but this binary speaks '$bucketingVersion' — rebuild the store before using it")
+      val n = lines(1).toInt
+      require(n >= 1, s"store at $path pins a non-positive bucket count $n — rebuild it")
+      n
+    }
 
   // ---- tombstones ----
 

@@ -395,9 +395,6 @@ object TextAnalysis {
   // append either never happened or rolls forward, and the re-run's
   // delta anti-joins `docids` so an applied batch is never re-posted.
 
-  /** Version pin of the token bucket function (`pmod(hash(tok), n)`). */
-  private val textBucketingVersion = "v1"
-
   /** Default bucket count for new text indexes (batch builds take a
     * `buckets` argument; stream claims use this — the count is PINNED in
     * the store either way, so the default only matters at claim time).
@@ -406,28 +403,20 @@ object TextAnalysis {
 
   private[graft] def tokBucket(tok: Column, n: Int) = pmod(hash(tok), lit(n))
 
-  /** The bucket count the index was laid out with (pin absent = legacy
-    * default); an alien bucket-function version refuses with the rebuild
-    * named — the [[graft.ops.Graph.storeBuckets]] contract.
+  /** The bucket count the index was laid out with
+    * ([[graft.ops.StoreLifecycle.readBucketing]]). Unlike the graph
+    * stores there are NO legacy pinless text stores (every write face
+    * pins), so a missing pin only ever means a damaged tree and is
+    * refused: defaulting would make a non-64-bucket store silently return
+    * near-empty results.
     */
   private[graft] def textIndexBuckets(
-      spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    // unlike Graph.storeBuckets there are NO legacy pinless text stores
-    // (every write face pins), so a missing pin only ever means a damaged
-    // tree — defaulting would make a non-64-bucket store silently return
-    // near-empty results
-    val pin = StoreLifecycle.readSmallFile(spark, s"$path/bucketing").getOrElse(
-      throw new IllegalStateException(
+      spark: org.apache.spark.sql.SparkSession, path: String): Int =
+    StoreLifecycle.readBucketing(
+      spark, path,
+      ifAbsent = throw new IllegalStateException(
         s"text index at $path has no bucketing pin — the store is damaged or " +
           "partially copied; rebuild with writeTextIndex (or restart the stream)"))
-    val lines = pin.trim.split("\n").map(_.trim)
-    require(
-      lines.length >= 2 && lines(0) == textBucketingVersion,
-      s"text index at $path is bucketed with hash-function version " +
-        s"'${lines.headOption.getOrElse("")}' but this binary speaks " +
-        s"'$textBucketingVersion' — rebuild with writeTextIndex before using it")
-    lines(1).toInt
-  }
 
   /** The store's id contract, checked at every write face: one row per
     * doc_id. A duplicated id would double every tf it carries and
@@ -481,7 +470,7 @@ object TextAnalysis {
     requireUniqueDocIds(docs, idCol, "writeTextIndex")
     StoreLifecycle.markInflight(spark, path, "writeTextIndex")
     StoreLifecycle.wipe(spark, path, Seq("fold_pin"))
-    StoreLifecycle.writeSmallFile(spark, s"$path/bucketing", s"$textBucketingVersion\n$buckets")
+    StoreLifecycle.writeBucketing(spark, path, buckets)
     StoreLifecycle.rewriteDir(
       spark,
       postingsOf(docs, textCol, idCol)
@@ -713,8 +702,7 @@ object TextAnalysis {
       if (b.isEmpty) return
       requireUniqueDocIds(b, "doc_id", "ingestTextBatch")
       StoreLifecycle.markInflight(spark, path, "ingestTextBatch")
-      StoreLifecycle.writeSmallFile(
-        spark, s"$path/bucketing", s"$textBucketingVersion\n$defaultTextBuckets")
+      StoreLifecycle.writeBucketing(spark, path, defaultTextBuckets)
       postingsOf(b, "text", "doc_id")
         .withColumn("bucket", tokBucket(col("tok"), defaultTextBuckets))
         .repartition(col("bucket"))

@@ -15,7 +15,8 @@ class JobBudgetSpec extends SparkSpec {
     "folder_stats" -> 5L,
     "folder_results" -> 8L,
     // the benchmark's ops rows
-    "ann_autotune_nprobe" -> 62L,
+    "ann_autotune_nprobe" -> 44L,
+    "ann_autotune_build" -> 54L,
     "graph_bfs_distances" -> 10L,
     "dedup_setjoin_rebuild" -> 51L,
     "gen_spearman" -> 18L,
@@ -55,6 +56,42 @@ class JobBudgetSpec extends SparkSpec {
       Census.measure(spark)(graft.ops.StoreLifecycle.minusTombstones(spark, dir, df, "vec_id"))
     assert(c.jobs == 0L, s"building the frame ran ${c.jobs} jobs: $c")
     assert(live.as[Long].collect().toSet === Set(1L, 2L, 4L, 6L, 7L, 8L))
+  }
+
+  // IVF stores read their cells and centroids with the schema the writer
+  // stored in the parquet footers, read on the driver: same frame as a
+  // schemaless read, without its footer job.
+  test("store reads: IVF cells and centroids read as written, with no job") {
+    val s = spark
+    import s.implicits._
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val (kmeans, flatInt, stream) = (tmp("ivfkm"), tmp("ivfint"), tmp("ivfstream"))
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+    graft.ops.Similarity.writeIvfIndex(e, kmeans, nCentroids = 4, iters = 1)
+    graft.ops.Similarity.writeIvfFlatIndex(
+      Seq((1, Seq(1f, 0f)), (2, Seq(0f, 1f)), (3, Seq(1f, 1f))).toDF("vec_id", "embedding"),
+      flatInt, nCentroids = 2)
+    graft.ops.Similarity.ingestIvfBatch(e.filter($"vec_id" < 100), stream, 0L, nCentroids = 4, iters = 1)
+    graft.ops.Similarity.ingestIvfBatch(e.filter($"vec_id" >= 100), stream, 1L)
+    for (store <- Seq(kmeans, flatInt, stream); tree <- Seq("cells", "centroids")) {
+      val dir = s"$store/$tree"
+      val (typed, c) = Census.measure(spark)(graft.ops.StoreLifecycle.readAsWritten(spark, dir))
+      assert(c.jobs == 0L, s"$dir: the read ran ${c.jobs} jobs")
+      val inferred = spark.read.parquet(dir)
+      assert(typed.schema == inferred.schema, s"$dir: ${typed.schema} vs ${inferred.schema}")
+      assert(typed.exceptAll(inferred).isEmpty && inferred.exceptAll(typed).isEmpty, dir)
+    }
+  }
+
+  // Each Lloyd iteration folds the corpus into per-cell milli sums in one
+  // pass: one job per iteration on top of the seed collect.
+  test("Lloyd: ivfCentroids runs one job per iteration") {
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+    def jobs(iters: Int): Long =
+      Census.measure(spark)(graft.ops.Similarity.ivfCentroids(e, 16, iters))._2.jobs
+    val (seed, one, four) = (jobs(0), jobs(1), jobs(4))
+    info(s"ivfCentroids jobs: iters 0 → $seed, 1 → $one, 4 → $four")
+    assert(one - seed == 1L && four - seed == 4L, s"iters 0/1/4 ran $seed/$one/$four jobs")
   }
 
   for ((name, ceiling) <- ceilings)
